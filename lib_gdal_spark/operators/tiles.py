@@ -13,12 +13,17 @@ Reference semantics:
   (gdal2tiles.py:1497-1500) — here: an anti-join against the committed
   output (snapshot-based resume, see resume_filter()).
 
-Scale design: ONE wide shuffle at the base zoom (groupBy over ~4^z cells of
-already-cell-keyed points, map-side partial aggregation does most of the
-work), then 14 tiny rollup shuffles, each 4x smaller than the last — total
-rollup volume is ~1/3 of the base tile count. Exploding every point into its
-15 ancestors (the one-shuffle alternative) would shuffle 15x the point count
-instead; at 10^12 rows that is the wrong trade.
+Scale design: two shuffles. The first is the wide one: groupBy over the
+already-cell-keyed points at the base zoom (map-side partial aggregation
+does most of the work). The second explodes each base tile into its
+ancestor at every zoom in [min_zoom, max_zoom] and sums the counts in one
+groupBy(z, x, y), so every level comes from the finest cells in one
+aggregation (as in GeoBlocks, EDBT 2021) with no cached level and no
+union. Its cost: the explode produces (max_zoom - min_zoom + 1) x
+base-tile rows (13x for z0-12), which the map-side partial aggregation
+combines before the second shuffle; the points themselves are never
+exploded. This design was measured only at benchmark scale (80k pages,
+44k base tiles at z12).
 """
 
 from __future__ import annotations
@@ -26,115 +31,63 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def base_tiles(points: DataFrame, zoom: int,
-               extra_aggs: list | None = None) -> DataFrame:
+def base_tiles(points: DataFrame, zoom: int) -> DataFrame:
     """Aggregate cell-keyed points (tile_x/tile_y columns from
     sjoin.with_tile) into base tiles at `zoom`.
 
-    Returns (z, x, y, n_pages [, extra aggs...]).
+    Returns (z, x, y, n_pages).
     """
-    aggs = [F.count(F.lit(1)).alias("n_pages")]
-    if extra_aggs:
-        aggs += list(extra_aggs)
-    g = points.groupBy("tile_x", "tile_y").agg(*aggs)
-    measures = [c for c in g.columns if c not in ("tile_x", "tile_y")]
-    return g.select(
+    return points.groupBy("tile_x", "tile_y").agg(
+        F.count(F.lit(1)).alias("n_pages")
+    ).select(
         F.lit(zoom).cast("int").alias("z"),
         F.col("tile_x").cast("long").alias("x"),
         F.col("tile_y").cast("long").alias("y"),
-        *measures,
+        "n_pages",
     )
 
 
-def rollup_pyramid(base: DataFrame, max_zoom: int, min_zoom: int = 0,
-                   sum_cols: list | None = None, step: int = 4,
-                   persist: bool = True) -> DataFrame:
-    """Build zoom levels [min_zoom, max_zoom] from base tiles at max_zoom.
+def tile_pyramid(points: DataFrame, max_zoom: int = 14,
+                 min_zoom: int = 0) -> DataFrame:
+    """points (with tile_x/tile_y at max_zoom) -> (z, x, y, n_pages) for
+    every zoom in [min_zoom, max_zoom].
 
     Parent tile (z-1, x>>1, y>>1) aggregates its <=4 children
-    (gdal2tiles.py:1484-1486 child-shift semantics). All numeric measure
-    columns are summed (counts); pass sum_cols to restrict.
-
-    Shuffle shape: a naive per-level chain is max_zoom sequential shuffles
-    whose union re-evaluates upstream levels per branch (O(L^2) stages). We
-    instead roll up in chunks of `step` zooms: each chunk is ONE
-    explode(x step)+groupBy from the (persisted) chunk base, so the whole
-    0..14 pyramid costs ceil(L/step) shuffles and the exploded volume is
-    bounded by step x (already-aggregated tile count) — NOT by input rows.
+    (gdal2tiles.py:1484-1486 child-shift semantics); a base tile's
+    ancestor at zoom z is therefore (x >> s, y >> s) with
+    s = max_zoom - z, and s = 0 keeps the base level itself.
     """
-    measures = sum_cols or [c for c in base.columns if c not in ("z", "x", "y")]
-    # persist base: it feeds BOTH the output union and the first rollup
-    # chunk — unpersisted, each union branch re-evaluates base's full
-    # upstream (source scan + extraction + the wide groupBy), doubling the
-    # job's dominant cost (measured 2x at 32M input rows). Base is already
-    # aggregated (<= 4^max_zoom rows), so the cache is small.
-    # persist=False opts out for small repeated invocations (streaming
-    # micro-batches) where cache entries would otherwise accumulate in the
-    # session and recompute is cheap.
-    if persist:
-        base = base.persist()
-    levels = [base]
-    cur, cur_z = base, max_zoom
-    while cur_z > min_zoom:
-        nz = max(cur_z - step, min_zoom)
-        zs = F.array(*[F.lit(z) for z in range(cur_z - 1, nz - 1, -1)])
-        # parent coords at level z: floor(x / 2^(cur_z - z)) — exact double
-        # math for any zoom <= 29
-        scale = F.pow(F.lit(2.0), (F.lit(cur_z) - F.col("z")).cast("double"))
-        expl = cur.select(
-            F.explode(zs).alias("z"), "x", "y",
-            *[F.col(c) for c in measures],
-        ).select(
-            F.col("z").cast("int").alias("z"),
-            F.floor(F.col("x") / scale).cast("long").alias("x"),
-            F.floor(F.col("y") / scale).cast("long").alias("y"),
-            *measures,
+    if not 0 <= min_zoom <= max_zoom:
+        raise ValueError(
+            f"tile_pyramid: need 0 <= min_zoom <= max_zoom, "
+            f"got {min_zoom}, {max_zoom}")
+    shifts = F.explode(F.sequence(F.lit(0), F.lit(max_zoom - min_zoom)))
+    return (
+        base_tiles(points, max_zoom)
+        .select(shifts.alias("s"), "x", "y", "n_pages")
+        .select(
+            (F.lit(max_zoom) - F.col("s")).cast("int").alias("z"),
+            F.expr("shiftright(x, s)").alias("x"),
+            F.expr("shiftright(y, s)").alias("y"),
+            "n_pages",
         )
-        out = expl.groupBy("z", "x", "y").agg(
-            *[F.sum(c).alias(c) for c in measures]
-        )
-        if persist:
-            out.persist()
-        levels.append(out)
-        cur = out.filter(F.col("z") == nz)
-        cur_z = nz
-    result = levels[0]
-    for lv in levels[1:]:
-        result = result.unionByName(lv)
-    return result
+        .groupBy("z", "x", "y")
+        .agg(F.sum("n_pages").alias("n_pages"))
+    )
 
 
-def tile_pyramid(points: DataFrame, max_zoom: int = 14, min_zoom: int = 0,
-                 extra_aggs: list | None = None,
-                 persist: bool = True) -> DataFrame:
-    """points (with tile_x/tile_y at max_zoom) -> full pyramid DataFrame."""
-    return rollup_pyramid(base_tiles(points, max_zoom, extra_aggs),
-                          max_zoom, min_zoom, persist=persist)
-
-
-def write_pyramid(pyramid: DataFrame, path: str, mode: str = "overwrite",
-                  clustered: bool = False) -> None:
+def write_pyramid(pyramid: DataFrame, path: str,
+                  mode: str = "overwrite") -> None:
     """Materialize partitioned by z (the Iceberg-partition layout stand-in:
     partition column z, file-level min/max stats on x/y give pruning).
 
-    Default path: keep the rollup's existing hash partitioning (no extra
-    shuffle) and sort (z, x, y) within each task so every output file's
-    row groups carry tight x/y min/max stats. partitionBy("z") splits the
-    files per zoom directory regardless of task partitioning, so write
-    parallelism stays at the task count, not the zoom count.
-
-    clustered=True additionally range-repartitions by (z, x, y) — globally
-    Hilbert-ish clustered files (the analog of the reference's packed tile
-    order, flatgeobuf/packedrtree.h:120) at the cost of a sampling pass
-    that evaluates the plan twice. Worth it for a long-lived serving table
-    on a real cluster; wrong for benchmarks and one-shot outputs."""
-    out = pyramid
-    if clustered:
-        spark = pyramid.sparkSession
-        n = spark.sparkContext.defaultParallelism * 2
-        out = out.repartitionByRange(n, "z", "x", "y")
+    Keeps the pyramid's existing hash partitioning (no extra shuffle) and
+    sorts (z, x, y) within each task so every output file's row groups
+    carry tight x/y min/max stats. partitionBy("z") splits the files per
+    zoom directory regardless of task partitioning, so write parallelism
+    stays at the task count, not the zoom count."""
     (
-        out.sortWithinPartitions("z", "x", "y")
+        pyramid.sortWithinPartitions("z", "x", "y")
         .write.mode(mode)
         .partitionBy("z")
         .parquet(path)
@@ -298,8 +251,8 @@ def write_png_tiles(base: DataFrame, out_dir: str, zooms,
     ship_package(base.sparkSession)
     # each zoom's render branch scans the shared base: persist it for
     # the union or every branch re-evaluates the whole upstream
-    # (CLAUDE.md rollup_pyramid rule); the manifest's localCheckpoint
-    # below is eager, so the unpersist after it is safe
+    # (CLAUDE.md union rule); the manifest's localCheckpoint below is
+    # eager, so the unpersist after it is safe
     release = False
     if len(zooms) > 1 and base.storageLevel.useMemory is False:
         base = base.persist()

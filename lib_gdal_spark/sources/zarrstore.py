@@ -205,13 +205,14 @@ class ZarrArray:
         self.dims = (m.get("dimension_names") if self.version == 3
                      else self.attrs.get("_ARRAY_DIMENSIONS"))
 
+    def chunk_key(self, idx) -> str:
+        """Chunk key relative to the array directory: "0.1" (v2), "c/0/1"
+        or "c.0.1" (v3 by separator); "/" in it is a subdirectory."""
+        head = [self.prefix] if self.prefix else []
+        return self.sep.join(head + [str(i) for i in idx])
+
     def chunk_path(self, idx) -> str:
-        key = self.sep.join(str(i) for i in idx)
-        if self.prefix:
-            return os.path.join(self.path, self.prefix,
-                                *key.split("/")) if self.sep == "/" \
-                else os.path.join(self.path, self.prefix, key)
-        return os.path.join(self.path, key)
+        return os.path.join(self.path, *self.chunk_key(idx).split("/"))
 
     def decode_chunk(self, blob: bytes) -> np.ndarray:
         raw = _decompress(blob, self.compressor)
@@ -341,26 +342,23 @@ def read_zarr_cells(spark, path: str, array: str | None = None):
             "attrs": a.attrs, "version": a.version}
     h, w = a.shape
     ch, cw = a.chunks
-    glob = os.path.join(apath, "c", "*", "*") if a.version == 3 \
-        else os.path.join(apath, "*")
-    files = (spark.read.format("binaryFile").load(glob)
+    pattern = a.chunk_key(("*", "*"))
+    depth = pattern.count("/") + 1
+    files = (spark.read.format("binaryFile")
+             .load(os.path.join(apath, *pattern.split("/")))
              .select("path", "content"))
-    sep = a.sep
+    sep, prefix = a.sep, a.prefix
 
     def decode(batches):
         for pdf in batches:
             frames = []
             for pth, blob in zip(pdf["path"], pdf["content"]):
-                base = pth.split("/")[-1]
-                if a.version == 3:
-                    iy, ix = int(pth.split("/")[-2]), int(base)
-                else:
-                    if base.startswith("."):
-                        continue
-                    parts = base.split(sep)
-                    if len(parts) != 2:
-                        continue
-                    iy, ix = int(parts[0]), int(parts[1])
+                parts = "/".join(pth.split("/")[-depth:]).split(sep)
+                if prefix:
+                    parts = parts[1:]
+                if len(parts) != 2 or not all(q.isdigit() for q in parts):
+                    continue  # a metadata file the glob also matched
+                iy, ix = int(parts[0]), int(parts[1])
                 chunk = a.decode_chunk(bytes(blob)).astype(np.float64)
                 th = min(ch, h - iy * ch)
                 tw = min(cw, w - ix * cw)

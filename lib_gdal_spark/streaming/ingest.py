@@ -34,11 +34,8 @@ def _epoch_delta(batch_df: DataFrame, max_zoom: int, min_zoom: int) -> DataFrame
     pts = sjoin.with_tile(
         sjoin.geocode(batch_df.select("text"), fast=True), zoom=max_zoom
     )
-    # persist=False: micro-batches are small (recompute is cheap) and a
-    # long-running stream must not accumulate session cache entries
     return tiles.tile_pyramid(pts.select("tile_x", "tile_y"),
-                              max_zoom=max_zoom, min_zoom=min_zoom,
-                              persist=False)
+                              max_zoom=max_zoom, min_zoom=min_zoom)
 
 
 def start_incremental_pyramid(spark: SparkSession, src_dir: str, out_dir: str,

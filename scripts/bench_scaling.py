@@ -99,7 +99,7 @@ Job (timed, per pass): [stage 1] pages parquet (url,text pruned scan) ->
 geotag extraction (JVM byte-scan) -> z12 cell index -> broadcast-cover
 exact-ray-cast-PIP spatial join -> parquet join-output sink + per-partition
 lineage metrics; [stage 2] text-only pruned scan -> z12 cell groupBy
-(map-side combine) -> chunked rollup to z0 -> parquet pyramid sink
+(map-side combine) -> explode + groupBy to z0 -> parquet pyramid sink
 partitioned by z + per-partition lineage metrics to the _metrics table.
 
 | parallelism | wall sec | pages | join rows | tiles | rows/sec |
@@ -132,7 +132,7 @@ per-core memory bandwidth and CPU stay constant — the in-sandbox region
 that reproduces that invariant is 1 -> 4 exclusive cores, which is what
 the headline pair uses. The engine-side scaling properties are the same
 at any N: broadcast join (zero shuffle of the big side), map-side partial
-aggregation, rollup shuffle volume bounded by tile count (~1/3 of base),
+aggregation, pyramid shuffle volume bounded by tile count (not points),
 partition-independent input, no driver-side data paths.
 """
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)

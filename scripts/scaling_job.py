@@ -108,14 +108,13 @@ def main():
         metrics.record(joined_back, "spatial_join", mpath)
         t = tick("metrics1", t)
         # Stage 2: tile pyramid — text-only pruned scan -> cell index ->
-        # one wide map-side-combined groupBy at z12 -> chunked rollup to
-        # z0 -> parquet sink partitioned by z.
+        # one wide map-side-combined groupBy at z12 -> one explode +
+        # groupBy to z0..z12 -> parquet sink partitioned by z.
         geo = sjoin.with_tile(sjoin.geocode(src.select("text"), fast=True),
                               zoom=12)
         pyr = tiles.tile_pyramid(geo.select("tile_x", "tile_y"),
                                  max_zoom=12, min_zoom=0)
         tiles.write_pyramid(pyr, os.path.join(out_dir, "pyramid"))
-        pyr.unpersist()  # rollup_pyramid persists base + chunk levels
         t = tick("pyramid_write", t)
         # Stage-1 per-partition row counts: count-star pass over the
         # source (parquet metadata-only, no column decode) by partition id.
@@ -145,9 +144,6 @@ def main():
     best = None
     for i in range(reps):
         r = run_pipeline(os.path.join(out_dir, f"rep{i}"), pages)
-        # rollup_pyramid persists base+chunk levels per pass; drop them so
-        # reps don't accumulate cache entries
-        spark.catalog.clearCache()
         if best is None or r["wall"] < best["wall"]:
             best = r
 

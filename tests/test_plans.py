@@ -123,6 +123,12 @@ class TestPyramidPlan:
         # every groupBy shows partial-then-final HashAggregate pairs
         assert plan.count("HashAggregate") >= 4
         assert "partial_" in plan
+        # base groupBy + one explode/groupBy over all zooms: two shuffles,
+        # no cached level, no per-level union
+        executed = pyr._jdf.queryExecution().executedPlan().toString()
+        assert executed.count("Exchange hashpartitioning") == 2, executed
+        assert "InMemory" not in executed, executed
+        assert "Union" not in executed, executed
 
 
 class TestStencilPlans:

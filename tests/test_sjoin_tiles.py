@@ -152,13 +152,38 @@ class TestPyramid:
         got = pdf.set_index(["x", "y"]).n_pages.sort_index()
         assert (got == exp.sort_index()).all()
 
-    def test_parent_child_consistency(self, points):
-        pyr = tiles.tile_pyramid(points, max_zoom=8, min_zoom=7).toPandas()
-        z8 = pyr[pyr.z == 8].copy()
-        z8["px"], z8["py"] = z8.x // 2, z8.y // 2
-        rolled = z8.groupby(["px", "py"]).n_pages.sum().sort_index()
-        z7 = pyr[pyr.z == 7].set_index(["x", "y"]).n_pages.sort_index()
-        assert (rolled.to_numpy() == z7.to_numpy()).all()
+    @pytest.mark.parametrize("max_zoom,min_zoom", [(8, 7), (8, 0), (6, 6)])
+    def test_parent_child_consistency(self, points, max_zoom, min_zoom):
+        pyr = tiles.tile_pyramid(points, max_zoom=max_zoom,
+                                 min_zoom=min_zoom).toPandas()
+        assert sorted(pyr.z.unique()) == list(range(min_zoom, max_zoom + 1))
+        base = tiles.base_tiles(points, max_zoom).toPandas()
+        top = pyr[pyr.z == max_zoom]
+        assert (top.set_index(["x", "y"]).n_pages.to_dict()
+                == base.set_index(["x", "y"]).n_pages.to_dict())
+        for z in range(max_zoom, min_zoom, -1):
+            child = pyr[pyr.z == z]
+            rolled = child.groupby([child.x // 2, child.y // 2]).n_pages.sum()
+            parent = pyr[pyr.z == z - 1].set_index(["x", "y"]).n_pages
+            assert rolled.to_dict() == parent.to_dict()
+
+    @pytest.mark.parametrize("max_zoom,min_zoom", [(6, 7), (6, -1)])
+    def test_bad_zoom_range_refused(self, points, max_zoom, min_zoom):
+        with pytest.raises(ValueError, match="min_zoom"):
+            tiles.tile_pyramid(points, max_zoom=max_zoom, min_zoom=min_zoom)
+
+    def test_no_cache_growth(self, spark):
+        # a long-lived session (streaming micro-batches, serve) calls the
+        # pyramid over ever-new inputs: no call may leave a cached frame
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        rng = np.random.default_rng(5)
+        for _ in range(3):
+            pdf = pd.DataFrame({"lon": rng.uniform(-180, 180, 500),
+                                "lat": rng.uniform(-85, 85, 500)})
+            pts = sjoin.with_tile(spark.createDataFrame(pdf), 8)
+            tiles.tile_pyramid(pts, max_zoom=8, min_zoom=0).count()
+        assert jsc.getPersistentRDDs().size() == before
 
     def test_resume_filter(self, points, spark, tmp_path):
         pyr = tiles.tile_pyramid(points, max_zoom=6, min_zoom=4)

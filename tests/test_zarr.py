@@ -140,3 +140,51 @@ def test_spark_cells_chunked(spark, tmp_path):
     got = {(r.bx, r.by): r.value for r in rows}
     assert got[(0, 29)] == float(arr[0, 0])  # by increases upward
     assert (5, 26) not in got  # the fill cell
+
+
+def _v2_to_v3(path, sep):
+    """Rewrite a v2 store from write_zarr_array (uint8, gzip) as a v3
+    array with the default chunk key encoding and separator `sep`."""
+    import json
+    import os
+
+    meta = json.load(open(os.path.join(path, ".zarray")))
+    os.remove(os.path.join(path, ".zarray"))
+    for name in os.listdir(path):
+        iy, ix = name.split(".")
+        dst = os.path.join(path, *f"c{sep}{iy}{sep}{ix}".split("/"))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(os.path.join(path, name), dst)
+    json.dump({
+        "zarr_format": 3, "node_type": "array", "shape": meta["shape"],
+        "data_type": "uint8", "fill_value": meta["fill_value"],
+        "chunk_grid": {"name": "regular", "configuration": {
+            "chunk_shape": meta["chunks"]}},
+        "chunk_key_encoding": {"name": "default",
+                               "configuration": {"separator": sep}},
+        "codecs": [{"name": "bytes", "configuration": {"endian": "little"}},
+                   {"name": "gzip", "configuration": {"level": 1}}],
+    }, open(os.path.join(path, "zarr.json"), "w"))
+
+
+@pytest.mark.parametrize("sep", ["/", "."])
+def test_spark_cells_v3_separator(spark, tmp_path, sep):
+    # a v3 store keys its chunks c/0/1 or, with the "." separator, c.0.1:
+    # both layouts must read back every chunk, never an empty frame
+    rng = np.random.RandomState(7)
+    arr = rng.randint(1, 255, (20, 30)).astype(np.uint8)
+    arr[4, 9] = 0
+    p = str(tmp_path / "v3.zarr")
+    Z.write_zarr_array(p, arr, chunks=(8, 16),
+                       compressor={"id": "gzip", "level": 1},
+                       fill_value=0)
+    _v2_to_v3(p, sep)
+    back, meta = Z.read_zarr_array(p)
+    assert meta["version"] == 3
+    assert np.array_equal(back, arr)
+    df, _ = Z.read_zarr_cells(spark, p)
+    got = {(r.bx, r.by): r.value for r in df.collect()}
+    h = arr.shape[0]
+    want = {(int(x), h - 1 - int(y)): float(arr[y, x])
+            for y, x in zip(*np.nonzero(arr))}
+    assert got == want
