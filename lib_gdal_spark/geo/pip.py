@@ -132,7 +132,11 @@ def segments_intersect_np(p0, p1, q0, q1) -> bool:
 def polygons_intersect_np(rings_a: list, rings_b: list) -> bool:
     """Exact polygon-polygon intersects: bbox pre-test, vertex containment,
     then boundary segment crossings. Mirrors the prepared-geometry
-    Intersects discipline of ogrlayer.cpp:5325-5380 without GEOS."""
+    Intersects discipline of ogrlayer.cpp:5325-5380 without GEOS.
+
+    The crossings cover every ring, holes included: a polygon whose only
+    overlap with the other lies beside one of its holes (first vertex in
+    the hole, exterior rings apart) is found only by a hole edge."""
     if not envelopes_intersect_np(envelope_np(rings_a), envelope_np(rings_b)):
         return False
     ea = np.asarray(rings_a[0], dtype=np.float64)
@@ -141,10 +145,14 @@ def polygons_intersect_np(rings_a: list, rings_b: list) -> bool:
         return True
     if point_in_polygon_np(ea[:1, 0], ea[:1, 1], rings_b)[0]:
         return True
-    for i in range(len(ea) - 1):
-        for j in range(len(eb) - 1):
-            if segments_intersect_np(ea[i], ea[i + 1], eb[j], eb[j + 1]):
-                return True
+    for ra in rings_a:
+        ra = np.asarray(ra, dtype=np.float64)
+        for rb in rings_b:
+            rb = np.asarray(rb, dtype=np.float64)
+            for i in range(len(ra) - 1):
+                for j in range(len(rb) - 1):
+                    if segments_intersect_np(ra[i], ra[i + 1], rb[j], rb[j + 1]):
+                        return True
     return False
 
 

@@ -13,22 +13,32 @@ Reference semantics re-expressed Spark-first:
 - Here phase 1 (cheap) is a *cell equi-join*: every point carries a z-order
   cell id (Catalyst column math, geo/cells.py); every polygon is exploded to
   the cells its geometry covers. The join on ``cell`` is hash-partitionable,
-  broadcastable, and prunable. Phase 2 (exact) is the vectorized ray-cast
-  point-in-polygon kernel (geo/pip.py, semantics of
-  ogr/ogrlinearring.cpp:452-521) as an Arrow pandas UDF over survivors only.
+  broadcastable, and prunable. Phase 2 (exact) runs in Catalyst when it can:
+  for an axis-aligned rectangle ("box": one ring, the 4 corners of its
+  envelope joined by axis-parallel edges) the ray-cast kernel
+  (geo/pip.py, semantics of ogr/ogrlinearring.cpp:452-521) answers exactly
+  ``[xmin, xmax) x [ymin, ymax)`` — a vertical edge gives the ray crossing
+  ``xint == x`` bit for bit and horizontal edges never straddle — so the
+  half-open envelope test IS the exact test. Only a set holding a non-box
+  polygon plans the kernel, as an Arrow pandas UDF over the survivors of a
+  closed (superset) envelope test.
 
 Scale design (100 TB / 10^12 pages):
 - the polygon side (admin boundaries) is small -> ``F.broadcast`` by default:
   ZERO shuffle of the big side; each task filters its own partition
   (the distributed analog of the reference's per-executor prepared-geometry
-  cache, ogrlayer.cpp:5325).
+  cache, ogrlayer.cpp:5325). The cover is built once per (set, zoom) and
+  rides in the plan as a local relation.
 - if the polygon-cover table is too big to broadcast, pass
   ``broadcast_cover=False`` and optionally ``salt=k``: the left side gains a
   deterministic salt from ``xxhash64(point id) % k`` and cover rows are
   replicated k times, flattening hot cells (dense URL clusters). AQE
   skew-join (session.py) is the runtime backstop.
-- the PIP kernel only sees (lon, lat, poly_id) survivors — Arrow batches,
-  no per-row Python anywhere.
+- an all-box set runs with no Python stage at all. Otherwise the PIP
+  kernel only sees (lon, lat, poly_id) survivors — Arrow batches, no
+  per-row Python — and the rings travel inside the UDF's pickled closure
+  (PySpark broadcasts a command above 1 MB by itself), so no call leaves
+  a broadcast behind.
 """
 
 from __future__ import annotations
@@ -39,9 +49,86 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..geo import mercator
 from ..geo.cells import cell_encode_col, cell_encode_np
-from ..geo.pip import envelope_np, point_in_polygon_np, polygons_intersect_np
+from ..geo.pip import envelope_np, point_in_polygon_np
 from ..geo.rtree import PackedRTree
 from ..pages.synth import GEOTAG_RE
+
+
+def _is_box(rings) -> bool:
+    """One ring whose vertices, closing vertex dropped, are the 4 distinct
+    corners of its envelope joined by axis-parallel edges, with a finite
+    width and height. For such a ring ``point_in_ring_np`` is exactly
+    ``[xmin, xmax) x [ymin, ymax)``: a vertical edge gives ``xint == x1``
+    bit for bit (``0 * finite + x1``) and horizontal edges never straddle.
+    An infinite extent would turn ``xint`` into NaN, so it is no box."""
+    if len(rings) != 1:
+        return False
+    r = rings[0]
+    if len(r) >= 2 and r[0][0] == r[-1][0] and r[0][1] == r[-1][1]:
+        r = r[:-1]
+    if len(r) != 4:
+        return False
+    lo, hi = r.min(axis=0), r.max(axis=0)
+    if not np.isfinite(hi - lo).all():
+        return False
+    corners = {(lo[0], lo[1]), (hi[0], lo[1]), (hi[0], hi[1]), (lo[0], hi[1])}
+    if len(corners) != 4 or {tuple(v) for v in r.tolist()} != corners:
+        return False
+    nxt = np.roll(r, -1, axis=0)
+    return bool(((r[:, 0] == nxt[:, 0]) != (r[:, 1] == nxt[:, 1])).all())
+
+
+def _orient(ax, ay, bx, by, cx, cy):
+    """Sign of the (a, b, c) turn, as ``segments_intersect_np`` computes it."""
+    v = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
+    return (v > 0).astype(np.int8) - (v < 0).astype(np.int8)
+
+
+def _on_seg(ax, ay, bx, by, cx, cy):
+    return ((np.minimum(ax, bx) <= cx) & (cx <= np.maximum(ax, bx))
+            & (np.minimum(ay, by) <= cy) & (cy <= np.maximum(ay, by)))
+
+
+def _cells_intersect(rings, ln0, lt0, ln1, lt1) -> np.ndarray:
+    """``polygons_intersect_np(rings, [cell rect])`` for every cell at once.
+
+    Same tests, same float operations, so the same answer per cell: the
+    envelope pre-test, the cell's first corner in the polygon (one PIP
+    call over all cells), the polygon's first vertex in each cell (the
+    ray cast on a rect ring is ``[x0, x1) x [y0, y1)``) and the edges of
+    every ring against the cells' sides as one edges x sides array,
+    chunked over cells to bound its size."""
+    ex, ey, exx, exy = envelope_np(rings)
+    env = ~((exx < np.minimum(ln0, ln1)) | (np.maximum(ln0, ln1) < ex)
+            | (exy < np.minimum(lt0, lt1)) | (np.maximum(lt0, lt1) < ey))
+    hit = point_in_polygon_np(ln0, lt0, rings)
+    ea = rings[0]
+    vx, vy = ea[0]
+    hit |= ((lt0 > vy) != (lt1 > vy)) & ((vx < ln0) != (vx < ln1))
+    hit &= env
+    # the rect ring's 4 sides (corner j -> corner j+1), one column each
+    sx = np.stack([ln0, ln1, ln1, ln0, ln0], axis=1)
+    sy = np.stack([lt0, lt0, lt1, lt1, lt0], axis=1)
+    p = np.concatenate([r[:-1] for r in rings])[:, :, None, None]
+    q = np.concatenate([r[1:] for r in rings])[:, :, None, None]
+    px, py, qx, qy = p[:, 0], p[:, 1], q[:, 0], q[:, 1]
+    todo = np.flatnonzero(env & ~hit)
+    step = max(1, (1 << 16) // max(1, len(p)))
+    for s in range(0, len(todo), step):
+        idx = todo[s:s + step]
+        ax, ay = sx[idx, :-1][None], sy[idx, :-1][None]
+        bx, by = sx[idx, 1:][None], sy[idx, 1:][None]
+        o1 = _orient(px, py, qx, qy, ax, ay)
+        o2 = _orient(px, py, qx, qy, bx, by)
+        o3 = _orient(ax, ay, bx, by, px, py)
+        o4 = _orient(ax, ay, bx, by, qx, qy)
+        cross = (((o1 != o2) & (o3 != o4))
+                 | ((o1 == 0) & _on_seg(px, py, qx, qy, ax, ay))
+                 | ((o2 == 0) & _on_seg(px, py, qx, qy, bx, by))
+                 | ((o3 == 0) & _on_seg(ax, ay, bx, by, px, py))
+                 | ((o4 == 0) & _on_seg(ax, ay, bx, by, qx, qy)))
+        hit[idx] = cross.any(axis=(0, 2))
+    return hit
 
 
 class PolygonSet:
@@ -49,6 +136,8 @@ class PolygonSet:
 
     polys: list of (poly_id:int, rings:list[np.ndarray(n,2) lon/lat]).
     Small by construction (admin/boundary sets); broadcast to executors.
+    ``is_box[i]`` marks ``ids[i]`` as an axis-aligned rectangle, whose
+    exact PIP answer is its half-open envelope (see ``_is_box``).
     """
 
     def __init__(self, polys):
@@ -57,7 +146,9 @@ class PolygonSet:
                       for p, rings in polys}
         boxes = np.array([envelope_np(self.rings[p]) for p in self.ids], dtype=np.float64)
         self.boxes = boxes.reshape(-1, 4)
+        self.is_box = np.array([_is_box(self.rings[p]) for p in self.ids], dtype=bool)
         self.rtree = PackedRTree(self.boxes) if len(self.ids) else None
+        self._covers = {}
 
     def area(self, pid: int) -> float:
         """Shoelace area of the polygon (holes subtract when wound
@@ -98,16 +189,8 @@ class PolygonSet:
             gx, gy = np.meshgrid(xs, ys)
             gx, gy = gx.ravel(), gy.ravel()
             if refine and len(gx) > 4:
-                keep = np.zeros(len(gx), dtype=bool)
-                for i in range(len(gx)):
-                    ln0, lt0, ln1, lt1 = mercator.tile_bounds_lonlat_np(
-                        np.array([gx[i]]), np.array([gy[i]]), zoom
-                    )
-                    rect = np.array(
-                        [[ln0[0], lt0[0]], [ln1[0], lt0[0]], [ln1[0], lt1[0]],
-                         [ln0[0], lt1[0]], [ln0[0], lt0[0]]]
-                    )
-                    keep[i] = polygons_intersect_np(rings, [rect])
+                keep = _cells_intersect(
+                    rings, *mercator.tile_bounds_lonlat_np(gx, gy, zoom))
                 gx, gy = gx[keep], gy[keep]
             cells = cell_encode_np(gx.astype(np.uint64), gy.astype(np.uint64), zoom)
             rows_cell.append(cells)
@@ -124,6 +207,14 @@ class PolygonSet:
             box["poly_id"] = self.ids
             out = out.merge(box, on="poly_id", how="left")
         return out
+
+    def _cover(self, zoom: int) -> pd.DataFrame:
+        """``cover_cells(zoom, with_bbox=True)``, built once per zoom: the
+        set does not change, and a serving session joins against it on
+        every request. At most one frame per zoom level, so it is bounded."""
+        if zoom not in self._covers:
+            self._covers[zoom] = self.cover_cells(zoom, with_bbox=True)
+        return self._covers[zoom]
 
 
 def geocode(df: DataFrame, text_col: str = "text", fast: bool = False) -> DataFrame:
@@ -201,6 +292,14 @@ def spatial_join(
     caller must guarantee unique — url/doc_id in the page tables). The
     anti-join runs on this single narrow key, so the exchange never
     hashes or dedups wide payload columns (html at page scale).
+
+    exact=True decides containment as the ray-cast kernel does
+    (geo/pip.py), half-open on the max edges. When every polygon of the
+    set is a box (``PolygonSet.is_box``) that is the Catalyst test
+    ``xmin <= lon < xmax and ymin <= lat < ymax`` and the plan holds no
+    Python stage; otherwise a closed envelope test feeds the PIP pandas
+    UDF. exact=False keeps only the closed envelope test: a superset of
+    the exact answer.
     """
     spark = points.sparkSession
     # ALWAYS derive the join cell at THIS zoom — a pre-existing `cell`
@@ -213,9 +312,8 @@ def spatial_join(
     )
     pts = points.withColumn("_jcell", jcell)
 
-    cover_pdf = polys.cover_cells(zoom, with_bbox=True)
     cover = spark.createDataFrame(
-        cover_pdf,
+        polys._cover(zoom),
         schema="_jcell long, poly_id long, xmin double, ymin double, "
                "xmax double, ymax double",
     )
@@ -236,21 +334,25 @@ def spatial_join(
     if salt and not broadcast_cover:
         cand = cand.drop("_salt")
 
-    # phase 1b — envelope pre-test IN CATALYST (ogrlayer.cpp:3753
-    # point-in-envelope shortcut): closed bounds (conservative superset of
-    # the ray-cast result, which is half-open on the max edges), so the
-    # exact kernel only ever REMOVES rows. Measured: drops ~36% of the
-    # cell-join candidates before they reach the Python stage.
+    # phase 1b — envelope test IN CATALYST (ogrlayer.cpp:3753
+    # point-in-envelope shortcut). Half-open on the max edges it is the
+    # exact answer for an all-box set; closed it is a superset of the
+    # ray-cast result, so the PIP kernel only ever REMOVES rows.
+    x, y = F.col(lon_col), F.col(lat_col)
+    decided = exact and bool(polys.is_box.all())
+    if decided:
+        upper = (x < F.col("xmax")) & (y < F.col("ymax"))
+    else:
+        upper = (x <= F.col("xmax")) & (y <= F.col("ymax"))
     cand = cand.filter(
-        (F.col(lon_col) >= F.col("xmin")) & (F.col(lon_col) <= F.col("xmax"))
-        & (F.col(lat_col) >= F.col("ymin")) & (F.col(lat_col) <= F.col("ymax"))
+        (x >= F.col("xmin")) & (y >= F.col("ymin")) & upper
     ).drop("xmin", "ymin", "xmax", "ymax")
 
-    if exact:
+    if exact and not decided:
         from ..session import ship_package
 
         ship_package(spark)  # workers must import the PIP kernel
-        rings_bc = spark.sparkContext.broadcast(polys.rings)
+        rings_map = polys.rings  # pickled with the UDF: no broadcast to leak
 
         @F.pandas_udf(T.BooleanType())
         def _pip(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
@@ -258,7 +360,6 @@ def spatial_join(
             lons = lon.to_numpy(np.float64)
             lats = lat.to_numpy(np.float64)
             pids = pid.to_numpy(np.int64)
-            rings_map = rings_bc.value
             for p in np.unique(pids):
                 m = pids == p
                 rings = rings_map.get(int(p))
@@ -266,7 +367,7 @@ def spatial_join(
                     out[m] = point_in_polygon_np(lons[m], lats[m], rings)
             return pd.Series(out)
 
-        cand = cand.filter(_pip(F.col(lon_col), F.col(lat_col), F.col("poly_id")))
+        cand = cand.filter(_pip(x, y, F.col("poly_id")))
 
     if how == "inner":
         return cand

@@ -1,9 +1,12 @@
-"""Raster format sources — the engine's (deliberately small) driver set.
+"""Format sources and sinks — the engine's raster and vector driver set.
 
-SURVEY §2.1 declares the reference's 113 raster / ~70 vector format
-drivers replaced by the parquet/Iceberg storage model; these two text
-formats are the exception because they carry the reference's own test
-fixtures and the streaming-text shape Spark natively distributes:
+Parquet is the engine's own storage (SURVEY §2.1). Next to it, this
+package holds about seventy format modules, one per format family of the
+reference's raster and vector drivers: each reads the reference's own
+test fixtures and replays its autotest goldens, and most have a writer
+that the driver contract's ``*_roundtrip`` keys exercise. The package
+re-exports the common entry points below; the rest import from their
+module. Representative shapes:
 
 - AAIGrid (Arc/Info ASCII grid, frmts/aaigrid/aaigriddataset.cpp) —
   header + row-major values in one text file. Inherently a small

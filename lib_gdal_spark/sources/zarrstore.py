@@ -7,7 +7,8 @@ the public Zarr v2 / v3 specs —
 - v2: a directory per array with a .zarray JSON (shape, chunks, dtype
   NumPy codes with </>/| endianness, order C/F, fill_value — numbers
   or "NaN"/"Infinity"/"-Infinity", compressor, filters) + chunk files
-  named by dot-joined grid indices ("0.0"); missing chunk = fill.
+  named by grid indices joined by dimension_separator ("0.0" by
+  default, "0/0" with "/"); missing chunk = fill.
   Groups are directories with .zgroup; .zattrs carries attributes
   (the CF/_ARRAY_DIMENSIONS convention GDAL reads for georef).
 - v2 compressors (numcodecs ids): null, zlib, gzip, lzma (stdlib);
@@ -20,8 +21,9 @@ the public Zarr v2 / v3 specs —
   rounded to the decimal precision of scale like numcodecs).
 - v3: one zarr.json per node (node_type group/array): data_type
   names (uint8/int16/float32/...), regular chunk_grid,
-  chunk_key_encoding default -> "c/<i>/<j>" paths, codecs chain
-  [bytes(endian), gzip?].
+  chunk_key_encoding "default" -> "c/<i>/<j>" paths (or "c.<i>.<j>"
+  by separator), "v2" -> "<i>.<j>" (or "<i>/<j>"); any other
+  encoding is refused. Codecs chain [bytes(endian), gzip?].
 
 The Spark face reads one task per CHUNK (binaryFile over the store,
 chunk indices parsed from the path) — the natural 100 TB layout where
@@ -159,7 +161,7 @@ class ZarrArray:
             self.compressor = m.get("compressor")
             self.filters = m.get("filters")
             self.fill = _parse_fill(m.get("fill_value"), self.dtype)
-            self.sep = "."
+            self.sep = m.get("dimension_separator") or "."
             self.prefix = ""
         elif os.path.exists(v3):
             m = json.load(open(v3))
@@ -188,13 +190,20 @@ class ZarrArray:
                     raise ValueError(
                         f"v3 codec {c['name']!r} not available")
             self.fill = _parse_fill(m.get("fill_value"), self.dtype)
-            enc = m.get("chunk_key_encoding",
-                        {"configuration": {"separator": "/"}})
-            self.sep = enc.get("configuration", {}).get("separator",
-                                                        "/")
-            self.prefix = "c"
+            enc = m.get("chunk_key_encoding", {"name": "default"})
+            name = enc.get("name", "default")
+            if name not in ("default", "v2"):
+                raise ValueError(
+                    f"v3 chunk_key_encoding {name!r} not available")
+            # default: "c/0/1" ("c.0.1" by separator); v2: "0.1" / "0/1"
+            self.sep = enc.get("configuration", {}).get(
+                "separator", "/" if name == "default" else ".")
+            self.prefix = "c" if name == "default" else ""
         else:
             raise ValueError(f"no zarr array at {path}")
+        if self.sep not in (".", "/"):
+            raise ValueError(f"zarr chunk key separator {self.sep!r} "
+                             "not available")
         self.attrs = {}
         za = os.path.join(path, ".zattrs")
         if os.path.exists(za):
@@ -206,8 +215,9 @@ class ZarrArray:
                      else self.attrs.get("_ARRAY_DIMENSIONS"))
 
     def chunk_key(self, idx) -> str:
-        """Chunk key relative to the array directory: "0.1" (v2), "c/0/1"
-        or "c.0.1" (v3 by separator); "/" in it is a subdirectory."""
+        """Chunk key relative to the array directory: "0.1" or "0/1" (v2
+        and v3's v2 encoding), "c/0/1" or "c.0.1" (v3 default encoding),
+        by separator; "/" in it is a subdirectory."""
         head = [self.prefix] if self.prefix else []
         return self.sep.join(head + [str(i) for i in idx])
 

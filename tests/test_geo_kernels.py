@@ -157,6 +157,12 @@ class TestPIP:
         assert pip.polygons_intersect_np(a, b)
         assert not pip.polygons_intersect_np(a, c)
         assert pip.polygons_intersect_np(a, d)
+        # overlap only beside a hole: the probe's first corner lies in the
+        # hole and the exterior rings are apart, so only a hole edge finds it
+        holed = [self.UNIT * 10, self.UNIT * 4 + 3.0]
+        probe = [self.UNIT * 2 + 6.0]  # [6, 8]^2 across the hole's edge x=7
+        assert pip.polygons_intersect_np(holed, probe)
+        assert not pip.polygons_intersect_np(holed, [self.UNIT + 4.0])
 
 
 class TestWKB:

@@ -8,8 +8,11 @@ Checks (via explain(formatted)) that:
   of the big side);
 - aggregations are partial (map-side combine) before the exchange;
 - the two-phase spatial predicate keeps the cheap test JVM-side: the PIP
-  UDF appears AFTER the join, not in the scan.
+  UDF appears AFTER the join, not in the scan, and an all-box polygon
+  set plans no Python stage at all.
 """
+
+import re
 
 import numpy as np
 import pytest
@@ -67,15 +70,39 @@ class TestSpatialJoinPlan:
             [(f"u{i}", float(i % 50), float(i % 30)) for i in range(100)],
             "url string, lon double, lat double",
         )
+        # a concave L: not a box, so the exact PIP kernel is planned
         polys = sjoin.PolygonSet(
-            [(1, [np.array([[0.0, 0.0], [40.0, 0.0], [40.0, 25.0], [0.0, 25.0], [0.0, 0.0]])])]
+            [(1, [np.array([[30.0, 0.0], [60.0, 0.0], [60.0, 15.0], [45.0, 15.0],
+                            [45.0, 30.0], [30.0, 30.0], [30.0, 0.0]])])]
         )
         j = sjoin.spatial_join(pdf, polys, zoom=6, how="inner")
         plan = explain_str(j)
         assert "BroadcastHashJoin" in plan
-        # exact PIP runs AFTER the join (two-phase discipline)
-        assert plan.index("BroadcastHashJoin") > plan.index("ArrowEvalPython") or \
-            "ArrowEvalPython" in plan  # udf present, post-join
+        # exact PIP runs AFTER the join (two-phase discipline): the plan
+        # prints top-down, so the UDF node comes first
+        assert plan.index("ArrowEvalPython") < plan.index("BroadcastHashJoin")
+
+    def test_box_set_has_no_python(self, spark):
+        # a box's exact answer is its half-open envelope, decided in Catalyst
+        import __spark_entry__ as em
+
+        pdf = spark.createDataFrame(
+            [(f"u{i}", float(i % 50), float(i % 30)) for i in range(100)],
+            "url string, lon double, lat double",
+        )
+        j = sjoin.spatial_join(pdf, em._rect_polyset(), zoom=6, how="inner")
+        j.collect()
+        plan = explain_str(j)
+        assert "isFinalPlan=true" in plan
+        assert "BroadcastHashJoin" in plan
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+        # one non-box polygon brings back exactly one PIP stage
+        tri = (5, [np.array([[0.0, 0.0], [40.0, 0.0], [20.0, 25.0], [0.0, 0.0]])])
+        mixed = sjoin.PolygonSet([(1, em._rect_rings(0.0, 0.0, 20.0, 20.0)), tri])
+        j = sjoin.spatial_join(pdf, mixed, zoom=6, how="inner")
+        j.collect()
+        final = explain_str(j).split("== Initial Plan ==")[0]
+        assert len(re.findall(r"ArrowEvalPython \(\d+\)", final)) == 1
 
     def test_left_face_anti_join_on_narrow_key(self, spark):
         # the left face finds unmatched points by anti-joining on ONE

@@ -5,7 +5,8 @@ import pandas as pd
 import pytest
 
 from lib_gdal_spark.geo import mercator
-from lib_gdal_spark.geo.pip import point_in_polygon_np
+from lib_gdal_spark.geo.cells import cell_encode_np
+from lib_gdal_spark.geo.pip import envelope_np, point_in_polygon_np, polygons_intersect_np
 from lib_gdal_spark.operators import sjoin, tiles
 from lib_gdal_spark.pages.synth import synth_pages_pdf, extract_text_bytes
 
@@ -18,6 +19,8 @@ POLYS = [
         np.array([[-70.0, 40.0], [-50.0, 40.0], [-50.0, 50.0], [-70.0, 50.0], [-70.0, 40.0]]),
     ]),
 ]
+# the non-box member of the mixed set
+TRI = (4, [np.array([[100.0, -50.0], [160.0, -50.0], [130.0, 10.0], [100.0, -50.0]])])
 N = 3000
 
 
@@ -133,6 +136,147 @@ class TestSpatialJoin:
         exact = sjoin.spatial_join(points, ps, zoom=7, how="inner").count()
         loose = sjoin.spatial_join(points, ps, zoom=7, how="inner", exact=False).count()
         assert loose >= exact
+
+
+def _boundary_points(polys):
+    """Every vertex and edge midpoint of every ring, each with its 8
+    one-ulp neighbours (just inside / just outside every edge and corner),
+    plus points with a NaN coordinate."""
+    base = np.concatenate([np.vstack([r[:-1], (r[:-1] + r[1:]) / 2])
+                           for _, rings in polys for r in rings])
+    nx = np.stack([np.nextafter(base[:, 0], -np.inf), base[:, 0],
+                   np.nextafter(base[:, 0], np.inf)], axis=1)
+    ny = np.stack([np.nextafter(base[:, 1], -np.inf), base[:, 1],
+                   np.nextafter(base[:, 1], np.inf)], axis=1)
+    lon = np.concatenate([np.repeat(nx, 3, axis=1).ravel(), [np.nan, 5.0, np.nan]])
+    lat = np.concatenate([np.tile(ny, (1, 3)).ravel(), [5.0, np.nan, np.nan]])
+    return pd.DataFrame({"url": [f"p{i}" for i in range(len(lon))],
+                         "lon": lon, "lat": lat})
+
+
+def _oracle_rows(pdf, polys, how):
+    """Expected rows of spatial_join(how=...) from the NumPy PIP kernel."""
+    ps = sjoin.PolygonSet(polys)
+    pairs = [(u, pid) for pid, rings in polys for u in
+             pdf.url[point_in_polygon_np(pdf.lon, pdf.lat, rings)]]
+    hit = {u for u, _ in pairs}
+    miss = [u for u in pdf.url if u not in hit]
+    if how == "inner":
+        return sorted(pairs)
+    if how == "left":
+        return sorted(pairs + [(u, None) for u in miss])
+    if how == "semi":
+        return sorted((u,) for u in hit)
+    if how == "anti":
+        return sorted((u,) for u in miss)
+    return sorted([(u, pid, ps.area(pid)) for u, pid in pairs]
+                  + [(u, None, None) for u in miss])  # identity
+
+
+BOUNDARY_SETS = {"box": [POLYS[0]], "concave_L": [POLYS[1]],
+                 "box_with_hole": [POLYS[2]], "mixed": [POLYS[0], TRI]}
+
+
+class TestBoxRule:
+    @pytest.mark.parametrize("rings,want", [
+        ([np.array([[0.0, 0.0], [1.0, 0.0], [1.0, 2.0], [0.0, 2.0], [0.0, 0.0]])], True),
+        ([np.array([[0.0, 0.0], [0.0, 2.0], [1.0, 2.0], [1.0, 0.0]])], True),  # open, CW
+        ([np.array([[0.0, 0.0], [1.0, 2.0], [1.0, 0.0], [0.0, 2.0]])], False),  # bow tie
+        ([np.array([[0.0, 0.0], [1.0, 0.0], [0.0, 0.0], [1.0, 0.0]])], False),  # degenerate
+        ([np.array([[0.0, 0.0], [np.inf, 0.0], [np.inf, 1.0], [0.0, 1.0]])], False),
+        (POLYS[1][1], False), (POLYS[2][1], False), (TRI[1], False),
+    ], ids=["closed", "open_cw", "bow_tie", "degenerate", "infinite",
+            "concave_L", "holed", "triangle"])
+    def test_is_box(self, rings, want):
+        assert sjoin._is_box(rings) is want
+
+    def test_box_pip_is_half_open_envelope(self):
+        # the identity the Catalyst-side decision rests on
+        pdf = _boundary_points([POLYS[0]])
+        x, y = pdf.lon.to_numpy(), pdf.lat.to_numpy()
+        xmin, ymin, xmax, ymax = envelope_np(POLYS[0][1])
+        with np.errstate(invalid="ignore"):
+            half_open = (x >= xmin) & (x < xmax) & (y >= ymin) & (y < ymax)
+        np.testing.assert_array_equal(point_in_polygon_np(x, y, POLYS[0][1]), half_open)
+
+
+class TestBoundaryPoints:
+    """Points on, and one ulp either side of, every edge and corner: each
+    join face equals the NumPy ray-cast oracle row for row."""
+
+    @pytest.mark.parametrize("how", ["inner", "left", "semi", "anti", "identity"])
+    @pytest.mark.parametrize("name", list(BOUNDARY_SETS))
+    def test_faces_match_pip_oracle(self, spark, name, how):
+        polys = BOUNDARY_SETS[name]
+        pdf = _boundary_points(polys)
+        pts = spark.createDataFrame(pdf, "url string, lon double, lat double")
+        out = sjoin.spatial_join(pts, sjoin.PolygonSet(polys), zoom=7, how=how,
+                                 key_col="url")
+        cols = {"semi": ["url"], "anti": ["url"],
+                "identity": ["url", "poly_id", "poly_area"]}.get(how, ["url", "poly_id"])
+        got = sorted(tuple(r) for r in out.select(*cols).collect())
+        want = _oracle_rows(pdf, polys, how)
+        assert got == want
+        if how == "inner":
+            assert len(got) > 20  # the boundary actually lands inside
+
+    @pytest.mark.parametrize("name", ["box", "concave_L"])
+    def test_no_broadcast_or_cover_rebuild_per_call(self, spark, monkeypatch, name):
+        from pyspark import SparkContext
+
+        polys = sjoin.PolygonSet(BOUNDARY_SETS[name])
+        pts = spark.createDataFrame(_boundary_points(BOUNDARY_SETS[name]),
+                                    "url string, lon double, lat double")
+        broadcasts, builds = [], []
+        bc, cover = SparkContext.broadcast, sjoin.PolygonSet.cover_cells
+        monkeypatch.setattr(SparkContext, "broadcast",
+                            lambda self, v: broadcasts.append(1) or bc(self, v))
+        monkeypatch.setattr(sjoin.PolygonSet, "cover_cells",
+                            lambda self, *a, **k: builds.append(1) or cover(self, *a, **k))
+        for _ in range(3):
+            sjoin.spatial_join(pts, polys, zoom=7).collect()
+        assert broadcasts == []
+        assert len(builds) == 1
+
+
+def _cover_cells_loop(ps, zoom):
+    """The per-cell refine loop cover_cells ran before it was vectorized:
+    the oracle for the vectorized build."""
+    rows_cell, rows_pid = [], []
+    for pid in ps.ids:
+        rings = ps.rings[pid]
+        xmin, ymin, xmax, ymax = envelope_np(rings)
+        txa, tya = mercator.lonlat_to_tile_np([xmin], [ymax], zoom)
+        txb, tyb = mercator.lonlat_to_tile_np([xmax], [ymin], zoom)
+        gx, gy = np.meshgrid(np.arange(txa[0], txb[0] + 1, dtype=np.int64),
+                             np.arange(tya[0], tyb[0] + 1, dtype=np.int64))
+        gx, gy = gx.ravel(), gy.ravel()
+        if len(gx) > 4:
+            keep = np.zeros(len(gx), dtype=bool)
+            for i in range(len(gx)):
+                ln0, lt0, ln1, lt1 = mercator.tile_bounds_lonlat_np(
+                    np.array([gx[i]]), np.array([gy[i]]), zoom)
+                rect = np.array([[ln0[0], lt0[0]], [ln1[0], lt0[0]], [ln1[0], lt1[0]],
+                                 [ln0[0], lt1[0]], [ln0[0], lt0[0]]])
+                keep[i] = polygons_intersect_np(rings, [rect])
+            gx, gy = gx[keep], gy[keep]
+        rows_cell.append(cell_encode_np(gx.astype(np.uint64), gy.astype(np.uint64), zoom))
+        rows_pid.append(np.full(len(rows_cell[-1]), pid, dtype=np.int64))
+    return pd.DataFrame({"cell": np.concatenate(rows_cell),
+                         "poly_id": np.concatenate(rows_pid)})
+
+
+class TestCoverCells:
+    @pytest.mark.parametrize("zoom", range(4, 10))
+    @pytest.mark.parametrize("name", ["POLYS", "contract_rects", "contract_tri"])
+    def test_vectorized_refine_matches_loop(self, name, zoom):
+        import __spark_entry__ as em
+
+        polys = {"POLYS": POLYS,
+                 "contract_rects": [(p, em._rect_rings(*r)) for p, *r in em._RECTS],
+                 "contract_tri": [(1, [np.array(em._TRI + [em._TRI[0]])])]}[name]
+        ps = sjoin.PolygonSet(polys)
+        pd.testing.assert_frame_equal(ps.cover_cells(zoom), _cover_cells_loop(ps, zoom))
 
 
 class TestPyramid:

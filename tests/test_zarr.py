@@ -142,45 +142,49 @@ def test_spark_cells_chunked(spark, tmp_path):
     assert (5, 26) not in got  # the fill cell
 
 
-def _v2_to_v3(path, sep):
+def _move_chunks(path, key):
+    """Rename the "iy.ix" chunk files write_zarr_array wrote to key(iy, ix)
+    ("/" in a key is a subdirectory)."""
+    import os
+
+    for name in os.listdir(path):
+        if name.startswith("."):
+            continue
+        iy, ix = name.split(".")
+        dst = os.path.join(path, *key(iy, ix).split("/"))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(os.path.join(path, name), dst)
+
+
+def _v2_to_v3(path, sep, encoding="default", configured=True):
     """Rewrite a v2 store from write_zarr_array (uint8, gzip) as a v3
-    array with the default chunk key encoding and separator `sep`."""
+    array with chunk key encoding `encoding` and separator `sep`
+    (configured=False leaves the separator to the encoding's default)."""
     import json
     import os
 
     meta = json.load(open(os.path.join(path, ".zarray")))
     os.remove(os.path.join(path, ".zarray"))
-    for name in os.listdir(path):
-        iy, ix = name.split(".")
-        dst = os.path.join(path, *f"c{sep}{iy}{sep}{ix}".split("/"))
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(os.path.join(path, name), dst)
+    head = [] if encoding == "v2" else ["c"]
+    _move_chunks(path, lambda iy, ix: sep.join(head + [iy, ix]))
+    enc = {"name": encoding}
+    if configured:
+        enc["configuration"] = {"separator": sep}
     json.dump({
         "zarr_format": 3, "node_type": "array", "shape": meta["shape"],
         "data_type": "uint8", "fill_value": meta["fill_value"],
         "chunk_grid": {"name": "regular", "configuration": {
             "chunk_shape": meta["chunks"]}},
-        "chunk_key_encoding": {"name": "default",
-                               "configuration": {"separator": sep}},
+        "chunk_key_encoding": enc,
         "codecs": [{"name": "bytes", "configuration": {"endian": "little"}},
                    {"name": "gzip", "configuration": {"level": 1}}],
     }, open(os.path.join(path, "zarr.json"), "w"))
 
 
-@pytest.mark.parametrize("sep", ["/", "."])
-def test_spark_cells_v3_separator(spark, tmp_path, sep):
-    # a v3 store keys its chunks c/0/1 or, with the "." separator, c.0.1:
-    # both layouts must read back every chunk, never an empty frame
-    rng = np.random.RandomState(7)
-    arr = rng.randint(1, 255, (20, 30)).astype(np.uint8)
-    arr[4, 9] = 0
-    p = str(tmp_path / "v3.zarr")
-    Z.write_zarr_array(p, arr, chunks=(8, 16),
-                       compressor={"id": "gzip", "level": 1},
-                       fill_value=0)
-    _v2_to_v3(p, sep)
+def _check_store(spark, p, arr, version):
+    """read_zarr_array and read_zarr_cells both give back `arr`."""
     back, meta = Z.read_zarr_array(p)
-    assert meta["version"] == 3
+    assert meta["version"] == version
     assert np.array_equal(back, arr)
     df, _ = Z.read_zarr_cells(spark, p)
     got = {(r.bx, r.by): r.value for r in df.collect()}
@@ -188,3 +192,53 @@ def test_spark_cells_v3_separator(spark, tmp_path, sep):
     want = {(int(x), h - 1 - int(y)): float(arr[y, x])
             for y, x in zip(*np.nonzero(arr))}
     assert got == want
+
+
+def _chunked_store(tmp_path, seed):
+    rng = np.random.RandomState(seed)
+    arr = rng.randint(1, 255, (20, 30)).astype(np.uint8)
+    arr[4, 9] = 0
+    p = str(tmp_path / "store.zarr")
+    Z.write_zarr_array(p, arr, chunks=(8, 16),
+                       compressor={"id": "gzip", "level": 1},
+                       fill_value=0)
+    return p, arr
+
+
+def test_v2_dimension_separator(spark, tmp_path):
+    # .zarray's dimension_separator "/" keys chunks 0/1: read every chunk,
+    # never all fill or an empty frame
+    import json
+    import os
+
+    p, arr = _chunked_store(tmp_path, 11)
+    zpath = os.path.join(p, ".zarray")
+    meta = json.load(open(zpath))
+    meta["dimension_separator"] = "/"
+    json.dump(meta, open(zpath, "w"))
+    _move_chunks(p, lambda iy, ix: f"{iy}/{ix}")
+    _check_store(spark, p, arr, 2)
+
+
+@pytest.mark.parametrize("sep,configured", [(".", False), ("/", True)])
+def test_v3_v2_chunk_key_encoding(spark, tmp_path, sep, configured):
+    # the v3 "v2" encoding has no "c" prefix and defaults to "."
+    p, arr = _chunked_store(tmp_path, 13)
+    _v2_to_v3(p, sep, encoding="v2", configured=configured)
+    _check_store(spark, p, arr, 3)
+
+
+def test_v3_unknown_chunk_key_encoding_refused(tmp_path):
+    p, _ = _chunked_store(tmp_path, 17)
+    _v2_to_v3(p, "/", encoding="hashed")
+    with pytest.raises(ValueError, match="chunk_key_encoding"):
+        Z.read_zarr_array(p)
+
+
+@pytest.mark.parametrize("sep", ["/", "."])
+def test_spark_cells_v3_separator(spark, tmp_path, sep):
+    # a v3 store keys its chunks c/0/1 or, with the "." separator, c.0.1:
+    # both layouts must read back every chunk, never an empty frame
+    p, arr = _chunked_store(tmp_path, 7)
+    _v2_to_v3(p, sep)
+    _check_store(spark, p, arr, 3)
