@@ -4825,10 +4825,12 @@ _BM25_TERMS = ["spark", "join", "window", "vector"]
 
 
 def _q_bm25_topk(spark, sf_dir):
-    # Okapi BM25 top-10 over documents (operators/relevance.py): explode
-    # filtered to the 4 probe terms, broadcast docfreq + 1-row corpus
-    # stats, FIXED-order per-doc fold (conditional-agg slots — one
-    # shuffle), global top-k via orderBy().limit = TakeOrderedAndProject.
+    # Okapi BM25 top-10 over documents (operators/relevance.py): one row
+    # per document holding a probe term (per-term counts on the matched
+    # tokens, no explode), corpus stats + the 4 docfreqs as ONE broadcast
+    # aggregate row, FIXED-order per-doc fold (one slot per term, no
+    # shuffle on doc_id), global top-k via orderBy().limit =
+    # TakeOrderedAndProject.
     # Only ln() is transcendental -> score rounded 6 dp both sides and
     # the rank ordered on the ROUNDED score then doc_id (CLAUDE.md).
     from lib_gdal_spark.operators import relevance

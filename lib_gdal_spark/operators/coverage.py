@@ -482,7 +482,7 @@ def _walk_chains(edges: np.ndarray, own_key: str, tolerance: float):
     return out
 
 
-def _uncross_chains(uniq: DataFrame, max_rounds: int = 8):
+def _uncross_chains(uniq: DataFrame):
     """Cross-chain crossing re-check (GEOS CoverageSimplifier's corrected
     variant, TPVWSimplifier's edge-index guard re-expressed post-hoc):
     detect any contact between segments of DIFFERENT simplified chains
@@ -490,20 +490,26 @@ def _uncross_chains(uniq: DataFrame, max_rounds: int = 8):
     endpoint vertex, and revert every chain involved to its ORIGINAL
     vertex run. Reverting is iterated to a fixed point — an original
     chain cannot cross another original chain (the input coverage is
-    valid), but a still-simplified chain can cross a reverted one.
+    valid), but a still-simplified chain can cross a reverted one. Each
+    round moves at least one chain from simplified to original and
+    stops when none is left to move, so the loop ends after at most
+    (number of chains + 1) rounds, even on an invalid input.
 
     Coarser than GEOS (whole-chain revert instead of per-vertex
     reinstatement — strictly more conservative: the output stays a valid
     coverage, some chains keep more vertices than GEOS would). The
-    detection itself is exact and pure Catalyst column math over a
-    grid-cell pair join, so the revert SET is deterministic and
-    partition-independent.
+    detection is pure Catalyst column math over a grid-cell pair join,
+    so the revert SET is deterministic and partition-independent. Its
+    orientation tests are plain double-precision sign tests, so the
+    validity claim assumes they decide every contact: a crossing closer
+    than rounding to degenerate can be missed.
 
     ``uniq``: (chain, cxs, cys, oxs, oys), one row per chain.
     Returns the fixed (chain, cxs, cys) DataFrame, or None when the
     first round finds no crossing (caller keeps its unmodified plan)."""
     first = True
-    for _ in range(max_rounds):
+    uniq = uniq.withColumn("_orig", F.lit(False))
+    while True:
         seg = (uniq.select(
             "chain",
             F.posexplode(F.transform(
@@ -523,7 +529,7 @@ def _uncross_chains(uniq: DataFrame, max_rounds: int = 8):
             F.abs(F.col("bx") - F.col("ax")),
             F.abs(F.col("by") - F.col("ay"))))).first()[0]
         if cs is None or cs <= 0.0:
-            break
+            return None if first else uniq.select("chain", "cxs", "cys")
         cells = (seg
                  .withColumn("cx", F.explode(F.sequence(
                      F.floor(F.least("ax", "bx") / cs),
@@ -572,11 +578,13 @@ def _uncross_chains(uniq: DataFrame, max_rounds: int = 8):
         dup = ((is_pt(ax, ay, cx, cy) & is_pt(bx, by, dx, dy))
                | (is_pt(ax, ay, dx, dy) & is_pt(bx, by, cx, cy)))
         bad = pairs.filter(proper | interior | dup)
+        # only chains still simplified move; an original one has no
+        # other vertex run to fall back to
         revert = (bad.select(A("chain").alias("chain"))
                   .union(bad.select(B("chain").alias("chain")))
+                  .join(uniq.filter(~F.col("_orig")).select("chain"), "chain")
                   .distinct())
-        n_bad = revert.count()
-        if n_bad == 0:
+        if revert.count() == 0:
             return None if first else uniq.select("chain", "cxs", "cys")
         first = False
         uniq = (uniq.join(revert.withColumn("_rv", F.lit(True)),
@@ -586,9 +594,10 @@ def _uncross_chains(uniq: DataFrame, max_rounds: int = 8):
                          .otherwise(F.col("cxs")).alias("cxs"),
                         F.when(F.col("_rv"), F.col("oys"))
                          .otherwise(F.col("cys")).alias("cys"),
-                        "oxs", "oys")
+                        "oxs", "oys",
+                        (F.col("_orig") | F.col("_rv").isNotNull())
+                        .alias("_orig"))
                 .localCheckpoint())
-    return uniq.select("chain", "cxs", "cys")
 
 
 def simplify_coverage(polys: DataFrame, tolerance: float,
@@ -617,8 +626,9 @@ def simplify_coverage(polys: DataFrame, tolerance: float,
     re-check after DP (`_uncross_chains`): any chain whose simplified
     run contacts another chain beyond shared endpoint vertices reverts
     to its original vertices, iterated to a fixed point — coarser than
-    GEOS's per-vertex reinstatement (documented), but the output is
-    always a valid coverage. The clean case costs one cheap probe job
+    GEOS's per-vertex reinstatement (documented), but the output is a
+    valid coverage (up to the double-precision sign tests the re-check
+    uses; see `_uncross_chains`). The clean case costs one cheap probe job
     over the simplified chain segments and leaves results unchanged;
     the reference autotest's assertions (feature count preserved, point
     count reduced) replay in tests/test_coverage.py on the reference's

@@ -13,16 +13,20 @@ block) and follow the repo's exactness discipline:
   BOTH sides and ranking uses the ROUNDED score (then doc_id) so order
   is deterministic given agreed rounded values — the CLAUDE.md
   transcendental rule. The per-doc fold over query terms is a FIXED
-  order sum (conditional aggregation, one term per slot), never a
+  order sum (one term per slot, 0.0 for an absent term), never a
   data-ordered SUM, so there is no fold-order drift.
 - `ngram_topk`: pure integer counts + lexicographic tie-break — exact.
 
 Scale notes (100 TB):
-- bm25: explode is filtered to the query terms immediately (token
-  volume drops to matches only); docfreq and the 1-row corpus stats are
-  broadcast; one groupBy(doc) shuffle; the global top-k is
-  orderBy().limit(k) = TakeOrderedAndProject (per-partition heaps +
-  driver merge of k rows), NOT a single-partition row_number window.
+- bm25: one row per document, never one per token. The corpus is
+  tokenized once into a persisted narrow row (doc_id, length, the
+  query-term matches); each term's tf is an array count on that row;
+  the corpus size, total length and every term's docfreq are ONE
+  global aggregate row, broadcast back. No explode, no groupBy and no
+  shuffle on doc_id: the only Exchange is the 1-row aggregate's. The
+  global top-k is orderBy().limit(k) = TakeOrderedAndProject
+  (per-partition heaps + driver merge of k rows), NOT a
+  single-partition row_number window.
 - ngram: transform() over a STAGED token-array column (CLAUDE.md:
   arrays consumed by higher-order lambdas must be real projected
   columns, or Catalyst re-evaluates the producing expression per
@@ -61,10 +65,13 @@ def bm25_scores(df: DataFrame, terms: list[str], *,
     docstring), one row per document containing >= 1 query term.
     """
     terms = list(terms)
+    if not terms:
+        raise ValueError("bm25 needs at least one query term")
     # ONE scan of the corpus: tokenize once, keep only (doc_id, full
     # token count, query-term matches) — a narrow int/short-array row —
-    # and persist it so the three consumers (corpus stats, tf, docfreq)
-    # don't each re-scan and re-tokenize 100 TB of text. (CLAUDE.md's
+    # and persist it so the corpus stats and the scoring don't each
+    # re-scan and re-tokenize the text. The plan depends only on (df,
+    # terms), so a repeated request reuses the same cache entry. (The
     # no-wide-string-cache rule doesn't apply: the text column is
     # dropped before the persist.)
     t = tokens_col(text_col)
@@ -73,37 +80,41 @@ def bm25_scores(df: DataFrame, terms: list[str], *,
                 .select("doc_id", "dl",
                         F.filter("t", lambda x: x.isin(terms)).alias("mt"))
                 .persist())
-    tok = narrow.select("doc_id", "dl", F.explode("mt").alias("tok"))
-    tf = tok.groupBy("doc_id", "dl", "tok").agg(F.count("*").alias("tf"))
 
-    stats = narrow.agg(F.count("*").alias("n_docs"),
-                       F.sum("dl").alias("tot_dl"))
-    docfreq = tf.groupBy("tok").agg(F.count("*").alias("df"))
+    # the corpus stats and every term's document frequency in ONE global
+    # aggregate row, broadcast back to the documents
+    stats = narrow.agg(
+        F.count("*").alias("n_docs"), F.sum("dl").alias("tot_dl"),
+        *[F.count_if(F.array_contains("mt", term)).alias(f"_df{i}")
+          for i, term in enumerate(terms)])
+    # per-term tf over the STAGED mt column: a real cached column, so the
+    # filter lambda never re-runs the tokenizer per element
+    docs = narrow.filter(F.size("mt") > 0).select(
+        "doc_id", "dl",
+        *[F.size(F.filter("mt", lambda x: x == term)).alias(f"_tf{i}")
+          for i, term in enumerate(terms)])
+    scored = docs.crossJoin(F.broadcast(stats))
 
     k1p1 = k1 + 1.0
     omb = 1.0 - b
-    scored = tf.join(F.broadcast(docfreq), "tok") \
-               .crossJoin(F.broadcast(stats))
     # op order mirrored verbatim by the oracle SQL: avgdl is one exact
     # integer division (BIGINT sums are order-independent), idf's
     # argument is rational, only ln() itself is transcendental.
     avgdl = F.col("tot_dl").cast("double") / F.col("n_docs")
-    idf_c = F.log(F.lit(1.0) + ((F.col("n_docs") - F.col("df")) + 0.5)
-                  / (F.col("df") + 0.5))
-    contrib = idf_c * (F.col("tf") * k1p1) / (
-        F.col("tf") + k1 * (omb + b * (F.col("dl") / avgdl)))
-    scored = scored.select("doc_id", "tok", contrib.alias("c"))
 
-    # fixed-order per-doc fold: one conditional-agg slot per term
-    # (groupBy().pivot() would plan TWO shuffles — CLAUDE.md)
-    slots = [F.coalesce(F.max(F.when(F.col("tok") == t, F.col("c"))),
-                        F.lit(0.0)).alias(f"_c{i}")
-             for i, t in enumerate(terms)]
-    per_doc = scored.groupBy("doc_id").agg(*slots)
-    total = per_doc["_c0"]
+    def contrib(i):
+        tf, dfq = F.col(f"_tf{i}"), F.col(f"_df{i}")
+        idf_c = F.log(F.lit(1.0) + ((F.col("n_docs") - dfq) + 0.5)
+                      / (dfq + 0.5))
+        c = idf_c * (tf * k1p1) / (tf + k1 * (omb + b * (F.col("dl") / avgdl)))
+        return F.when(tf > 0, c).otherwise(F.lit(0.0))
+
+    # fixed-order per-doc fold, one slot per term, 0.0 for a term the
+    # document lacks: the oracle's COALESCE(MAX(...), 0.0) slots
+    total = contrib(0)
     for i in range(1, len(terms)):
-        total = total + per_doc[f"_c{i}"]
-    return per_doc.select("doc_id", F.round(total, 6).alias("score"))
+        total = total + contrib(i)
+    return scored.select("doc_id", F.round(total, 6).alias("score"))
 
 
 def bm25_topk(df: DataFrame, terms: list[str], k: int = 10, *,
@@ -112,6 +123,8 @@ def bm25_topk(df: DataFrame, terms: list[str], k: int = 10, *,
     asc — total order, partition-count independent). The limit runs as
     TakeOrderedAndProject; the rank window then sees only k rows."""
     from pyspark.sql import Window
+    if k < 1:
+        raise ValueError(f"bm25_topk needs k >= 1, got k={k}")
     top = (bm25_scores(df, terms, id_col=id_col, text_col=text_col)
            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))

@@ -18,7 +18,9 @@ the public Zarr v2 / v3 specs —
   declared dtype), shuffle (byte-plane transpose of elementsize
   lanes), quantize (decode is identity — the stored floats ARE the
   quantized values), fixedscaleoffset (x = stored/scale + offset,
-  rounded to the decimal precision of scale like numcodecs).
+  rounded to the decimal precision of scale like numcodecs). A chain
+  holds at most one arithmetic filter, with every shuffle outside it;
+  any other chain is refused.
 - v3: one zarr.json per node (node_type group/array): data_type
   names (uint8/int16/float32/...), regular chunk_grid,
   chunk_key_encoding "default" -> "c/<i>/<j>" paths (or "c.<i>.<j>"
@@ -92,42 +94,50 @@ def _shuffle(raw: bytes, elementsize: int) -> bytes:
     return a.reshape(n, elementsize).T.tobytes()
 
 
+_ARITH_FILTERS = ("delta", "quantize", "fixedscaleoffset")
+
+
 def _apply_filters_decode(raw: bytes, filters, dtype: np.dtype):
-    """-> decoded ndarray (flat) in the OUTPUT dtype."""
+    """-> decoded ndarray (flat) in the OUTPUT dtype.
+
+    Supported chains: at most one arithmetic filter (delta, quantize,
+    fixedscaleoffset), listed first, then any number of shuffles — i.e.
+    shuffle outermost. Any other chain raises ValueError: a shuffle
+    under an arithmetic filter, or two arithmetic filters, would
+    otherwise decode silently wrong values."""
     filters = filters or []
-    # innermost filter was applied last on encode -> undo in reverse
-    for f in reversed(filters):
-        fid = f.get("id")
-        if fid == "shuffle":
-            raw = _unshuffle(raw, int(f.get("elementsize", 1)))
-        elif fid in ("delta", "quantize", "fixedscaleoffset"):
-            break
-        else:
+    ids = [f.get("id") for f in filters]
+    for fid in ids:
+        if fid != "shuffle" and fid not in _ARITH_FILTERS:
             raise ValueError(f"filter {fid!r} not available")
-    arr = None
-    for f in filters:
-        fid = f.get("id")
-        if fid == "delta":
-            enc = np.dtype(f.get("astype", f.get("dtype", dtype.str)))
-            dec = np.dtype(f.get("dtype", dtype.str))
-            arr = np.cumsum(np.frombuffer(raw, enc).astype(dec))
-        elif fid == "fixedscaleoffset":
-            enc = np.dtype(f.get("astype", "|u1"))
-            dec = np.dtype(f.get("dtype", "<f8"))
-            scale = float(f["scale"])
-            off = float(f["offset"])
-            v = np.frombuffer(raw, enc).astype(np.float64) / scale + off
-            # numcodecs rounds decode output to the scale's precision
-            digits = max(0, int(round(math.log10(scale))))
-            arr = np.round(v, digits).astype(dec)
-        elif fid == "quantize":
-            dec = np.dtype(f.get("dtype", "<f8"))
-            arr = np.frombuffer(raw, np.dtype(
-                f.get("astype", dec.str)))
-            arr = arr.astype(dec)
-    if arr is None:
-        arr = np.frombuffer(raw, dtype)
-    return arr
+    arith = [i for i, fid in enumerate(ids) if fid in _ARITH_FILTERS]
+    if arith and arith != [0]:
+        raise ValueError(
+            f"filter chain {ids} not supported: at most one of "
+            f"{', '.join(_ARITH_FILTERS)}, listed before any shuffle")
+    # the last filter was applied last on encode -> undo in reverse
+    for f in reversed(filters[1:] if arith else filters):
+        raw = _unshuffle(raw, int(f.get("elementsize", 1)))
+    if not arith:
+        return np.frombuffer(raw, dtype)
+    f = filters[0]
+    fid = ids[0]
+    if fid == "delta":
+        enc = np.dtype(f.get("astype", f.get("dtype", dtype.str)))
+        dec = np.dtype(f.get("dtype", dtype.str))
+        return np.cumsum(np.frombuffer(raw, enc).astype(dec))
+    if fid == "fixedscaleoffset":
+        enc = np.dtype(f.get("astype", "|u1"))
+        dec = np.dtype(f.get("dtype", "<f8"))
+        scale = float(f["scale"])
+        off = float(f["offset"])
+        v = np.frombuffer(raw, enc).astype(np.float64) / scale + off
+        # numcodecs rounds decode output to the scale's precision
+        digits = max(0, int(round(math.log10(scale))))
+        return np.round(v, digits).astype(dec)
+    # quantize: decode is identity (the stored floats ARE the values)
+    dec = np.dtype(f.get("dtype", "<f8"))
+    return np.frombuffer(raw, np.dtype(f.get("astype", dec.str))).astype(dec)
 
 
 def _parse_fill(v, dtype: np.dtype):

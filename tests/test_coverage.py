@@ -521,3 +521,31 @@ def test_simplify_coverage_crossing_recheck(spark):
     b = C.simplify_coverage(clean, tolerance=0.05,
                             crossing_recheck=False).collect()
     assert sorted(map(str, a)) == sorted(map(str, b))
+
+
+def test_uncross_chains_cascade_converges(spark):
+    # a domino of crossings: chain 0's run crosses chain 1's simplified
+    # run; each reverted original i then crosses simplified i+1. Every
+    # chain i >= 1 needs its own round (10 chains -> 10 rounds), and the
+    # loop must run to the fixed point, where no chain crosses another
+    n = 10
+    rows = []
+    for i in range(n):
+        orig = ([float(i), i + 1.5, float(i)], [0.0, 5.0, 10.0])
+        simp = orig if i == 0 else ([float(i), float(i)], [0.0, 10.0])
+        rows.append((f"c{i}", simp[0], simp[1], orig[0], orig[1]))
+    uniq = spark.createDataFrame(
+        rows, "chain string, cxs array<double>, cys array<double>, "
+              "oxs array<double>, oys array<double>")
+    fixed = C._uncross_chains(uniq)
+    got = {r.chain: (list(r.cxs), list(r.cys)) for r in fixed.collect()}
+    assert got == {c: (ox, oy) for c, _, _, ox, oy in rows}
+
+
+def test_uncross_chains_clean_input_untouched(spark):
+    uniq = spark.createDataFrame(
+        [("a", [0.0, 0.0], [0.0, 10.0], [0.0, 0.5, 0.0], [0.0, 5.0, 10.0]),
+         ("b", [3.0, 3.0], [0.0, 10.0], [3.0, 3.5, 3.0], [0.0, 5.0, 10.0])],
+        "chain string, cxs array<double>, cys array<double>, "
+        "oxs array<double>, oys array<double>")
+    assert C._uncross_chains(uniq) is None

@@ -3,10 +3,12 @@ multimodal plumbing, metrics, streaming — each against an independent oracle
 (brute force, pandas, or an invariant).
 """
 
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from lib_gdal_spark.operators import (
     dedup, knn, multimodal, ogrsql, polygonize, raster, similarity, textops,
@@ -16,6 +18,43 @@ from lib_gdal_spark.streaming import events as ev
 
 
 # ------------------------------------------------------------------- kNN
+def _jobs(spark, fn):
+    """(fn's result, number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _knn_frames(spark, q, t, cache=True):
+    queries = spark.createDataFrame(pd.DataFrame(
+        {"qid": np.arange(len(q)), "qx": q[:, 0], "qy": q[:, 1]}))
+    targets = spark.createDataFrame(pd.DataFrame(
+        {"tid": np.arange(len(t)), "tx": t[:, 0], "ty": t[:, 1]}))
+    return (queries.cache(), targets.cache()) if cache else (queries, targets)
+
+
+def _knn_oracle(q, t, k):
+    """(qid, tid, rank) rows by (dist, tid), NumPy brute force with the
+    engine's distance expression."""
+    tid = np.arange(len(t))
+    rows = []
+    for i, (x, y) in enumerate(q):
+        d = np.sqrt((x - t[:, 0]) * (x - t[:, 0]) + (y - t[:, 1]) * (y - t[:, 1]))
+        for r, j in enumerate(np.lexsort((tid, d))[:k]):
+            rows.append((i, int(j), r + 1))
+    return sorted(rows)
+
+
+def _rows(df):
+    return sorted((int(r.qid), int(r.tid), int(r.rank))
+                  for r in df.select("qid", "tid", "rank").collect())
+
+
 class TestKNN:
     @pytest.fixture(scope="class")
     def pts(self, spark):
@@ -24,19 +63,15 @@ class TestKNN:
         dense = rng.normal(0, 1, (400, 2))
         sparse = rng.uniform(-50, 50, (40, 2))
         t = np.vstack([dense, sparse])
-        targets = spark.createDataFrame(
-            pd.DataFrame({"tid": np.arange(len(t)), "tx": t[:, 0], "ty": t[:, 1]})
-        )
         q = rng.uniform(-40, 40, (30, 2))
-        queries = spark.createDataFrame(
-            pd.DataFrame({"qid": np.arange(len(q)), "qx": q[:, 0], "qy": q[:, 1]})
-        )
-        return queries.cache(), targets.cache()
+        return _knn_frames(spark, q, t)
 
     def test_ring_matches_bruteforce(self, pts):
+        # the ring helper itself, not the dispatch (these cached inputs
+        # are under the pair budget, so knn_ring would run brute force)
         queries, targets = pts
         bf = knn.knn_bruteforce(queries, targets, k=3).toPandas()
-        rg = knn.knn_ring(queries, targets, k=3, cell_size=1.0).toPandas()
+        rg = knn._knn_rings(queries, targets, k=3, cell_size=1.0).toPandas()
         bf = bf.sort_values(["qid", "rank"]).reset_index(drop=True)
         rg = rg.sort_values(["qid", "rank"]).reset_index(drop=True)
         assert len(bf) == len(rg) == 90
@@ -44,6 +79,98 @@ class TestKNN:
             bf[["qid", "tid", "rank"]], rg[["qid", "tid", "rank"]]
         )
         np.testing.assert_allclose(bf.dist.to_numpy(), rg.dist.to_numpy(), rtol=1e-12)
+
+    @pytest.mark.parametrize("cache", [True, False])
+    def test_small_request_is_one_pass(self, spark, monkeypatch, cache):
+        # local (createDataFrame from pandas) or cached inputs know their
+        # row counts: Q x T = 10 x 2000 is under the budget -> brute force,
+        # no ring round, no localCheckpoint
+        rng = np.random.default_rng(3)
+        q, t = rng.uniform(0, 10, (10, 2)), rng.uniform(0, 10, (2000, 2))
+        queries, targets = _knn_frames(spark, q, t, cache)
+        if cache:
+            queries.count()
+            targets.count()
+        checkpoints = []
+        monkeypatch.setattr(DataFrame, "localCheckpoint",
+                            lambda *a, **kw: checkpoints.append(1))
+        monkeypatch.setattr(knn, "_knn_rings", None)
+        out = knn.knn_ring(queries, targets, k=3, cell_size=1.0)
+        rows, jobs = _jobs(spark, lambda: _rows(out))
+        assert checkpoints == []
+        assert rows == _knn_oracle(q, t, 3)
+        assert jobs <= 3
+
+    def test_unknown_sizes_take_the_ring(self, spark, tmp_path, monkeypatch):
+        rng = np.random.default_rng(4)
+        q, t = rng.uniform(0, 10, (10, 2)), rng.uniform(0, 10, (200, 2))
+        queries, targets = _knn_frames(spark, q, t, cache=False)
+        targets.write.parquet(str(tmp_path / "t"))
+        targets = spark.read.parquet(str(tmp_path / "t"))
+        calls = []
+        ring = knn._knn_rings
+        monkeypatch.setattr(knn, "_knn_rings",
+                            lambda *a, **kw: calls.append(1) or ring(*a, **kw))
+        out = knn.knn_ring(queries, targets, k=3, cell_size=1.0)
+        assert calls == [1]
+        assert _rows(out) == _knn_oracle(q, t, 3)
+
+    @pytest.mark.parametrize("path", ["bruteforce", "ring"])
+    @pytest.mark.parametrize("case", ["equidistant", "k_gt_targets",
+                                      "duplicate_points"])
+    def test_exact_edge_cases(self, spark, path, case):
+        if case == "equidistant":
+            # 4 targets at distance 1 around each query: ties break on tid
+            q = np.array([[0.0, 0.0], [5.0, 5.0]])
+            t = np.array([[1.0, 0.0], [0.0, -1.0], [-1.0, 0.0], [0.0, 1.0],
+                          [6.0, 5.0], [5.0, 4.0], [4.0, 5.0], [5.0, 6.0]])
+            k = 3
+        elif case == "k_gt_targets":
+            q = np.array([[0.0, 0.0], [2.0, 1.0]])
+            t = np.array([[1.0, 1.0], [3.0, 0.5], [-1.0, 2.0]])
+            k = 5
+        else:
+            q = np.array([[0.0, 0.0], [3.0, 3.0]])
+            t = np.array([[1.0, 1.0], [1.0, 1.0], [2.0, 2.0], [2.0, 2.0],
+                          [1.0, 1.0]])
+            k = 4
+        queries, targets = _knn_frames(spark, q, t)
+        if path == "ring":
+            out = knn._knn_rings(queries, targets, k, cell_size=0.5,
+                                 max_rounds=6)
+        else:
+            out = knn.knn_bruteforce(queries, targets, k)
+        assert _rows(out) == _knn_oracle(q, t, k)
+
+    def test_no_cache_growth(self, spark, monkeypatch):
+        # a long-lived session serves repeated requests: none may leave a
+        # persisted RDD or a driver broadcast behind
+        from pyspark import SparkContext
+
+        jsc = spark.sparkContext._jsc
+        rng = np.random.default_rng(6)
+        t = rng.uniform(0, 10, (1000, 2))
+        _, targets = _knn_frames(spark, t[:1], t)
+        targets.count()
+        before = jsc.getPersistentRDDs().size()
+        broadcasts = []
+        bc = SparkContext.broadcast
+        monkeypatch.setattr(SparkContext, "broadcast",
+                            lambda self, v: broadcasts.append(1) or bc(self, v))
+        for _ in range(3):
+            queries = spark.createDataFrame(pd.DataFrame(
+                {"qid": np.arange(5), "qx": rng.uniform(0, 10, 5),
+                 "qy": rng.uniform(0, 10, 5)}))
+            knn.knn_ring(queries, targets, k=2, cell_size=1.0).collect()
+        assert jsc.getPersistentRDDs().size() == before
+        assert broadcasts == []
+
+    @pytest.mark.parametrize("fn", [knn.knn_ring, knn.knn_bruteforce])
+    def test_bad_k_refused(self, pts, fn):
+        queries, targets = pts
+        kw = {"cell_size": 1.0} if fn is knn.knn_ring else {}
+        with pytest.raises(ValueError, match="k >= 1"):
+            fn(queries, targets, 0, **kw)
 
 
 # ---------------------------------------------------------------- raster

@@ -2,7 +2,10 @@
 
 import hashlib
 import math
+import re
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators import relevance, sampling
@@ -52,14 +55,58 @@ class TestBM25:
 
     def test_plan_shape(self, spark):
         # pin the 100 TB shape: corpus tokenized ONCE (persisted narrow
-        # projection feeds stats/tf/docfreq), global top-k is
-        # TakeOrderedAndProject (never a single-partition sort)
+        # projection feeds the stats and the scoring), one row per
+        # document (no explode), no shuffle on doc_id, and the global
+        # top-k is TakeOrderedAndProject (never a single-partition sort)
         d = _docs(spark, [(1, "a b"), (2, "b c")])
         plan = relevance.bm25_topk(d, ["a", "b"], 5)._jdf \
             .queryExecution().executedPlan().toString()
         assert "TakeOrderedAndProject" in plan
         assert "InMemoryTableScan" in plan
-        assert "BroadcastHashJoin" in plan  # docfreq side broadcast
+        assert "Generate" not in plan
+        assert not re.search(r"Exchange hashpartitioning\(doc_id", plan)
+
+    def test_request_jobs_and_cache_flat(self, spark, monkeypatch):
+        # a warm repeated request runs <= 3 jobs and persists or
+        # broadcasts nothing new
+        from pyspark import SparkContext
+
+        d = _docs(spark, [(i, f"a b {'c ' * (i % 5)}") for i in range(40)])
+        jsc = spark.sparkContext._jsc
+        relevance.bm25_topk(d, ["a", "c"], 10).collect()
+        before = jsc.getPersistentRDDs().size()
+        broadcasts = []
+        bc = SparkContext.broadcast
+        monkeypatch.setattr(SparkContext, "broadcast",
+                            lambda self, v: broadcasts.append(1) or bc(self, v))
+        sc = spark.sparkContext
+        for _ in range(3):
+            group = f"bm25-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                relevance.bm25_topk(d, ["a", "c"], 10).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+        assert jsc.getPersistentRDDs().size() == before
+        assert broadcasts == []
+
+    def test_absent_term_scores_zero_slot(self, spark):
+        # a term no document holds adds a 0.0 slot: scores equal the
+        # query without it (df = 0 never reaches a score)
+        d = _docs(spark, self.ROWS)
+        a = relevance.bm25_topk(d, ["a", "b"], 10).collect()
+        b = relevance.bm25_topk(d, ["a", "zzz", "b"], 10).collect()
+        assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+    @pytest.mark.parametrize("terms,k", [([], 10), (["a"], 0)])
+    def test_bad_input_refused(self, spark, terms, k):
+        with pytest.raises(ValueError):
+            relevance.bm25_topk(_docs(spark, self.ROWS), terms, k)
+
+    def test_empty_terms_refused_in_scores(self, spark):
+        with pytest.raises(ValueError, match="query term"):
+            relevance.bm25_scores(_docs(spark, self.ROWS), [])
 
 
 class TestNgramTopk:

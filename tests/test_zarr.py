@@ -242,3 +242,42 @@ def test_spark_cells_v3_separator(spark, tmp_path, sep):
     p, arr = _chunked_store(tmp_path, 7)
     _v2_to_v3(p, sep)
     _check_store(spark, p, arr, 3)
+
+
+def _i4_filters(*chain):
+    return [{"id": "shuffle", "elementsize": 4} if f == "shuffle"
+            else {"id": f, "dtype": "<i4"} for f in chain]
+
+
+def test_delta_then_shuffle_decodes():
+    # encode order [delta, shuffle]: shuffle is outermost, undone first
+    arr = np.array([3, 5, 4, 10, 7, 7], np.int32)
+    enc = np.diff(arr, prepend=np.int32(0)).astype("<i4").tobytes()
+    raw = Z._shuffle(enc, 4)
+    out = Z._apply_filters_decode(raw, _i4_filters("delta", "shuffle"),
+                                  np.dtype("<i4"))
+    assert out.tolist() == arr.tolist()
+
+
+@pytest.mark.parametrize("chain", [("shuffle", "delta"),
+                                   ("delta", "delta"),
+                                   ("delta", "shuffle", "quantize")])
+def test_unsupported_filter_chain_refused(tmp_path, chain):
+    # a shuffle under an arithmetic filter, or two arithmetic filters,
+    # used to decode silently wrong values
+    import json
+    import os
+
+    p, _ = _chunked_store(tmp_path, 19)
+    zpath = os.path.join(p, ".zarray")
+    meta = json.load(open(zpath))
+    meta["filters"] = _i4_filters(*chain)
+    json.dump(meta, open(zpath, "w"))
+    with pytest.raises(ValueError, match="filter chain"):
+        Z.read_zarr_array(p)
+
+
+def test_unknown_filter_behind_arithmetic_refused():
+    filters = [{"id": "bitround"}] + _i4_filters("delta")
+    with pytest.raises(ValueError, match="not available"):
+        Z._apply_filters_decode(b"\0" * 8, filters, np.dtype("<i4"))
