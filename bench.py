@@ -5,11 +5,11 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
    "queries": {name: sec, ...}, "sf": ...}
 
 The flagship workload (the north-star metric's shape) is the synthetic
-pages pipeline: generate deterministic pages -> geocode from text (JVM
-regex) -> cell index -> broadcast exact-PIP spatial join -> zoom 0-12 tile
-pyramid; its throughput (pages+join rows+tiles per second) is also
-reported. scripts/bench_scaling.py runs this same job at two parallelism
-levels for the N-vs-4N scaling-efficiency evidence.
+pages pipeline, `lib_gdal_spark.plans.flagship`: deterministic pages ->
+geocode from text -> cell index -> exact spatial join -> zoom 0-12 tile
+pyramid -> parquet sinks; its throughput (pages+join rows+tiles per
+second) is also reported. scripts/bench_scaling.py runs this same job at
+two parallelism levels for the N-vs-4N scaling-efficiency evidence.
 """
 
 from __future__ import annotations
@@ -136,21 +136,19 @@ def _cpu_counters() -> tuple:
 
 
 def flagship_pipeline(spark, n_pages: int):
-    """The north-star job over the synthetic pages table. Returns
-    (n_pages, join_rows, tiles, engine_sec): synthesis is MATERIALIZED
-    ONCE per session and excluded from engine_sec — the metric is the
-    engine's throughput over an existing pages table (matching scripts/
-    scaling_job.py), not the generator's. (Re-synthesizing per rep made
-    best-of-N measure the cold file listing, not the engine.)
-
-    The geocoded point table is persisted NARROW (text dropped) so the
-    join and the pyramid share ONE extraction pass — the wide-string
-    column never enters the cache (CLAUDE.md cache rule)."""
+    """The north-star job (``plans.flagship``, sinks included) over the
+    synthetic pages table. Returns (n_pages, join_rows, tiles, engine_sec):
+    synthesis is MATERIALIZED ONCE per session and excluded from
+    engine_sec — the metric is the engine's throughput over an existing
+    pages table (matching scripts/scaling_job.py), not the generator's.
+    (Re-synthesizing per rep made best-of-N measure the cold file
+    listing, not the engine.)"""
+    import shutil
     import tempfile
 
     import __spark_entry__ as em
-    from lib_gdal_spark.operators import sjoin, tiles
     from lib_gdal_spark.pages.synth import pages_df
+    from lib_gdal_spark.plans import flagship
 
     src = _PAGES_SRC.get(n_pages)
     if src is None:
@@ -158,19 +156,13 @@ def flagship_pipeline(spark, n_pages: int):
         pages_df(spark, n_pages).write.mode("overwrite").parquet(src)
         _PAGES_SRC[n_pages] = src
     pages = spark.read.parquet(src)
+    out = tempfile.mkdtemp(prefix="bench_flagship_")
 
     t0 = time.time()
-    pts = sjoin.with_tile(
-        sjoin.geocode(pages.select("url", "text"), fast=True), zoom=12)
-    pts = pts.drop("text").persist()
-    joined = sjoin.spatial_join(pts, em._rect_polyset(), zoom=7, how="inner")
-    join_rows = joined.count()
-    pyr = tiles.tile_pyramid(pts.select("url", "tile_x", "tile_y"),
-                             max_zoom=12, min_zoom=0)
-    n_tiles = pyr.count()
+    res = flagship(pages, em._rect_polyset(), out)
     sec = round(time.time() - t0, 3)
-    pts.unpersist()
-    return n_pages, join_rows, n_tiles, sec
+    shutil.rmtree(out, ignore_errors=True)
+    return n_pages, res["join_rows"], res["tiles"], sec
 
 
 def refshape_benchmarks(spark, tmp_dir: str) -> dict:
@@ -247,7 +239,6 @@ def main():
 
     fl_samples = []
     for _ in range(REPS):
-        spark.catalog.clearCache()
         n_pages, join_rows, n_tiles, s = flagship_pipeline(spark, PAGES_N)
         fl_samples.append(s)
     flagship_sec = min(fl_samples)

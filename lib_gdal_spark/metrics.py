@@ -7,18 +7,11 @@ callbacks threaded through every long op (e.g. ogrlayer.cpp:5205) and
 gdal2tiles --resume (gdal2tiles.py:1497-1500).
 
 Design:
-- `stage_snapshot(df, stage)` / `record(df, stage, path)` — the HOT-PATH
-  form: per-partition (partition_id, rows, bytes) computed as a JVM-side
-  aggregation over `spark_partition_id()`. No Python pass touches the
-  data; run it against the persisted stage output after materialization,
-  so it reads the cache. This is the form the flagship/scaling job uses.
-- `instrument(df, stage)` — the EXACT form: wraps a DataFrame in a
-  zero-copy mapInPandas pass-through that additionally captures true
-  per-partition wall_ms into a Spark accumulator; `flush_metrics(spark,
-  path)` appends the collected rows to the `_metrics` parquet table (the
-  Iceberg metadata table stand-in). The wrapper costs one Arrow
-  round-trip over the full data — measured ~2s/10^6 rows/core — so it is
-  for debugging stages, never the 10^12-row hot path.
+- `stage_snapshot(df, stage)` / `record(df, stage, path)` — per-partition
+  (partition_id, rows, bytes) computed as a JVM-side aggregation over
+  `spark_partition_id()`. No Python pass touches the data; run it against
+  a stage's written or persisted output, so it reads that rather than
+  recomputing the stage. `plans.flagship` records its sinks this way.
 - resume = anti-join against the committed sink (operators/tiles.py
   resume_filter) + the `_metrics` table recording which stages completed.
 """
@@ -27,26 +20,12 @@ from __future__ import annotations
 
 import time
 
-import pandas as pd
-from pyspark import AccumulatorParam
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 METRICS_SCHEMA = (
     "stage string, partition_id int, input_rows long, bytes long, "
     "wall_ms double, ts double"
 )
-
-
-class _ListAccum(AccumulatorParam):
-    def zero(self, value):
-        return []
-
-    def addInPlace(self, a, b):
-        a.extend(b)
-        return a
-
-
-_ACCUMS: dict = {}
 
 _FIXED_WIDTH = {
     "boolean": 1, "byte": 1, "short": 2, "integer": 4, "float": 4,
@@ -107,48 +86,3 @@ def record(df: DataFrame, stage: str, path: str | None = None) -> DataFrame:
     if path:
         snap.write.mode("append").parquet(path)
     return snap
-
-
-def instrument(df: DataFrame, stage: str) -> DataFrame:
-    """Pass-through that records (stage, partition_id, rows, bytes, wall_ms)
-    per partition when the plan executes."""
-    spark = df.sparkSession
-    from .session import ship_package
-
-    ship_package(spark)
-    acc = spark.sparkContext.accumulator([], _ListAccum())
-    _ACCUMS[stage] = acc
-    schema = df.schema
-
-    def run(iterator):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        t0 = time.time()
-        rows = 0
-        nbytes = 0
-        for pdf in iterator:
-            rows += len(pdf)
-            nbytes += int(pdf.memory_usage(deep=False).sum())
-            yield pdf
-        acc.add([(stage, pid, rows, nbytes, (time.time() - t0) * 1000.0, time.time())])
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def flush_metrics(spark: SparkSession, path: str | None = None) -> DataFrame:
-    """Collect accumulated per-partition metrics into a DataFrame; append to
-    the `_metrics` table at `path` if given. Clears the buffer."""
-    rows = []
-    for stage, acc in _ACCUMS.items():
-        rows.extend(acc.value)
-    _ACCUMS.clear()
-    pdf = pd.DataFrame(
-        rows, columns=["stage", "partition_id", "input_rows", "bytes", "wall_ms", "ts"]
-    )
-    mdf = spark.createDataFrame(pdf, schema=METRICS_SCHEMA) if len(pdf) else (
-        spark.createDataFrame([], schema=METRICS_SCHEMA)
-    )
-    if path:
-        mdf.write.mode("append").parquet(path)
-    return mdf

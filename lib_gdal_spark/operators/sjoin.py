@@ -24,16 +24,15 @@ Reference semantics re-expressed Spark-first:
   closed (superset) envelope test.
 
 Scale design (100 TB / 10^12 pages):
-- the polygon side (admin boundaries) is small -> ``F.broadcast`` by default:
-  ZERO shuffle of the big side; each task filters its own partition
-  (the distributed analog of the reference's per-executor prepared-geometry
-  cache, ogrlayer.cpp:5325). The cover is built once per (set, zoom) and
-  rides in the plan as a local relation.
-- if the polygon-cover table is too big to broadcast, pass
-  ``broadcast_cover=False`` and optionally ``salt=k``: the left side gains a
-  deterministic salt from ``xxhash64(point id) % k`` and cover rows are
-  replicated k times, flattening hot cells (dense URL clusters). AQE
-  skew-join (session.py) is the runtime backstop.
+- the polygon side (admin boundaries) is small: the cover is built once
+  per (set, zoom) and rides in the plan as a local relation whose size
+  the planner knows, so it picks a broadcast hash join by itself — ZERO
+  shuffle of the big side; each task filters its own partition (the
+  distributed analog of the reference's per-executor prepared-geometry
+  cache, ogrlayer.cpp:5325). A broadcast join has no skew exposure; AQE
+  skew-join (session.py) splits hot partitions of any shuffled join.
+  (Salting the cover join lost in every measured configuration,
+  BENCH/SKEW.md.)
 - an all-box set runs with no Python stage at all. Otherwise the PIP
   kernel only sees (lon, lat, poly_id) survivors — Arrow batches, no
   per-row Python — and the rings travel inside the UDF's pickled closure
@@ -168,13 +167,12 @@ class PolygonSet:
         rows = [(int(pid), self.area(pid)) for pid in self.ids]
         return spark.createDataFrame(rows, "poly_id long, poly_area double")
 
-    def cover_cells(self, zoom: int, refine: bool = True,
-                    with_bbox: bool = False) -> pd.DataFrame:
+    def cover_cells(self, zoom: int, with_bbox: bool = False) -> pd.DataFrame:
         """(cell, poly_id[, xmin..ymax]) covering table at `zoom` (XYZ
         tiles as cells).
 
-        bbox cover, optionally refined by an exact rect-polygon intersects
-        test so fully-outside cells are dropped (fewer phase-1 candidates).
+        bbox cover, refined by an exact rect-polygon intersects test so
+        fully-outside cells are dropped (fewer phase-1 candidates).
         with_bbox=True appends the polygon envelope columns so the join
         can run the Catalyst-side envelope pre-test (ogrlayer.cpp:3753).
         """
@@ -188,7 +186,7 @@ class PolygonSet:
             ys = np.arange(tya[0], tyb[0] + 1, dtype=np.int64)
             gx, gy = np.meshgrid(xs, ys)
             gx, gy = gx.ravel(), gy.ravel()
-            if refine and len(gx) > 4:
+            if len(gx) > 4:
                 keep = _cells_intersect(
                     rings, *mercator.tile_bounds_lonlat_np(gx, gy, zoom))
                 gx, gy = gx[keep], gy[keep]
@@ -261,8 +259,6 @@ def spatial_join(
     how: str = "inner",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    broadcast_cover: bool = True,
-    salt: int | None = None,
     exact: bool = True,
     key_col: str | None = None,
 ) -> DataFrame:
@@ -318,21 +314,8 @@ def spatial_join(
                "xmax double, ymax double",
     )
 
-    if salt and not broadcast_cover:
-        nsalt = int(salt)
-        salt_df = spark.range(nsalt).withColumnRenamed("id", "_salt")
-        cover = cover.crossJoin(salt_df)
-        pts = pts.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(lon_col), F.col(lat_col)), F.lit(nsalt))
-        )
-        join_keys = ["_jcell", "_salt"]
-    else:
-        join_keys = ["_jcell"]
-
-    right = F.broadcast(cover) if broadcast_cover else cover
-    cand = pts.join(right, on=join_keys, how="inner").drop("_jcell")
-    if salt and not broadcast_cover:
-        cand = cand.drop("_salt")
+    # a local relation of known size: the planner broadcasts it unhinted
+    cand = pts.join(cover, on="_jcell", how="inner").drop("_jcell")
 
     # phase 1b — envelope test IN CATALYST (ogrlayer.cpp:3753
     # point-in-envelope shortcut). Half-open on the max edges it is the

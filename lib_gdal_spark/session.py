@@ -66,7 +66,8 @@ def get_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         # AQE: runtime coalesce + skew-join splitting (north_rule requires
-        # explicit skew handling; salting in operators/sjoin.py is the other half)
+        # explicit skew handling; the spatial join's broadcast cover join
+        # has no skew exposure, and salting it lost, BENCH/SKEW.md)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -44,11 +44,12 @@ Reference semantics (studied, re-expressed — no code copied):
   adjustment on block insertion).
 
 Out of scope (documented refusals / silent skips, matching the
-reference's own ignore list where noted): binary DXF (refused), SPLINE/
-HELIX, HATCH, LEADER/MLEADER, MLINE, WIPEOUT, ASM 3D entities (all
-skipped exactly like the reference skips unknown entities), CIRCLE/
-ellipse thickness extrusion (flat geometry), $DWGCODEPAGE values other
-than ANSI_1252/UTF-8.
+reference's own ignore list where noted): binary DXF (refused), MLEADER
+and the ASM entities 3DSOLID/BODY/REGION/SURFACE (skipped exactly like
+the reference skips unknown entities), CIRCLE/ellipse thickness
+extrusion (flat geometry), $DWGCODEPAGE values other than
+ANSI_1252/UTF-8. SPLINE/HELIX, HATCH, LEADER, MLINE and WIPEOUT are
+translated (`next_feature`).
 
 Spark-first: DXF is a single-file interchange format — driver-side
 parse (the shapefile/MIF sidecar contract), distributed feature table

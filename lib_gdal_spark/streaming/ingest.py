@@ -23,7 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import sjoin, tiles
+from ..operators import tiles
+from ..plans.flagship import geotag_tiles
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -31,9 +32,7 @@ PAGES_SCHEMA = (
 
 
 def _epoch_delta(batch_df: DataFrame, max_zoom: int, min_zoom: int) -> DataFrame:
-    pts = sjoin.with_tile(
-        sjoin.geocode(batch_df.select("text"), fast=True), zoom=max_zoom
-    )
+    pts = geotag_tiles(batch_df.select("text"), max_zoom)
     return tiles.tile_pyramid(pts.select("tile_x", "tile_y"),
                               max_zoom=max_zoom, min_zoom=min_zoom)
 

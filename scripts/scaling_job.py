@@ -7,9 +7,10 @@ Phase 0 (untimed setup): synthesize the deterministic pages table to
 parquet once (production reads an existing pages table; synthesizing it is
 not part of the measured workload — both parallelism levels read the SAME
 files).
-Timed phase: read pages parquet -> extract text geotags (JVM regex) ->
-z12 cell index -> broadcast exact-PIP spatial join -> zoom 0-12 pyramid ->
-partitioned parquet sink, with per-partition lineage metrics.
+Timed phase: `lib_gdal_spark.plans.flagship` over the pages parquet —
+text geotags -> z12 cell index -> exact spatial join -> joined sink, and
+geotags -> zoom 0-12 pyramid -> partitioned pyramid sink, with
+per-partition lineage metrics.
 
 Prints one JSON line with wall seconds and throughput.
 
@@ -27,7 +28,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 
 def main():
@@ -54,9 +55,8 @@ def main():
     spark.conf.set("spark.sql.shuffle.partitions", str(max(cores * 2, 8)))
 
     import __spark_entry__ as em
-    from lib_gdal_spark import metrics
-    from lib_gdal_spark.operators import sjoin, tiles
     from lib_gdal_spark.pages.synth import pages_df
+    from lib_gdal_spark.plans import flagship
 
     # ---- setup (untimed): materialize the deterministic input once;
     # 64 fixed partitions so both parallelism levels read identical files
@@ -67,63 +67,13 @@ def main():
         spark.stop()
         return
 
+    polys = em._rect_polyset()
+
     def run_pipeline(out_dir: str, src) -> dict:
         """One full pipeline pass (the timed unit). src = pages DataFrame."""
-        mpath = os.path.join(out_dir, "_metrics")
-        phases = {}
-
-        def tick(name, t_start):
-            now = time.time()
-            phases[name] = round(now - t_start, 3)
-            return now
-
-        # The host saturates memory bandwidth long before it runs out of
-        # cores (measured: 1 core streams 17.6 GB/s, 4 cores only 2.3x
-        # that), so the job touches each byte as few times as possible: NO
-        # persist of wide intermediates (a 32M-row string cache build costs
-        # 3x the extraction and scales at 0.44), each consumer makes
-        # exactly one column-pruned pass over the source, and every
-        # materialization is a sink write the job needed anyway.
         t0 = time.time()
-        t = t0
-        # Stage 1: spatial join — extract (url,text pruned scan) -> cell
-        # index -> broadcast cover join -> exact ray-cast PIP -> parquet
-        # sink. The sink write IS the materialization (no cache). observe()
-        # rides the same action for stage-level rows/bytes at zero extra
-        # passes.
-        pts = sjoin.with_tile(
-            sjoin.geocode(src.select("url", "text"), fast=True), zoom=12
-        ).select("url", "lon", "lat", "tile_x", "tile_y")
-        pts = pts.observe(
-            f"geocode_cell_{out_dir[-9:]}", F.count(F.lit(1)).alias("rows"),
-            F.sum(F.octet_length("url") + F.lit(32)).alias("bytes"),
-        )
-        joined = sjoin.spatial_join(pts, em._rect_polyset(), zoom=7, how="inner")
-        joined.write.mode("overwrite").parquet(os.path.join(out_dir, "joined"))
-        t = tick("sjoin_write", t)
-        joined_back = spark.read.parquet(os.path.join(out_dir, "joined"))
-        join_rows = joined_back.count()
-        # per-partition lineage metrics: JVM agg over the (small) written
-        # join output — no Python pass, no re-scan of the source
-        metrics.record(joined_back, "spatial_join", mpath)
-        t = tick("metrics1", t)
-        # Stage 2: tile pyramid — text-only pruned scan -> cell index ->
-        # one wide map-side-combined groupBy at z12 -> one explode +
-        # groupBy to z0..z12 -> parquet sink partitioned by z.
-        geo = sjoin.with_tile(sjoin.geocode(src.select("text"), fast=True),
-                              zoom=12)
-        pyr = tiles.tile_pyramid(geo.select("tile_x", "tile_y"),
-                                 max_zoom=12, min_zoom=0)
-        tiles.write_pyramid(pyr, os.path.join(out_dir, "pyramid"))
-        t = tick("pyramid_write", t)
-        # Stage-1 per-partition row counts: count-star pass over the
-        # source (parquet metadata-only, no column decode) by partition id.
-        metrics.record(src.select(F.lit(1).alias("one")), "geocode_cell", mpath)
-        t = tick("metrics2", t)
-        wall = time.time() - t0
-        n_tiles = spark.read.parquet(os.path.join(out_dir, "pyramid")).count()
-        return {"wall": wall, "join_rows": join_rows, "tiles": n_tiles,
-                "phases": phases}
+        res = flagship(src, polys, out_dir)
+        return {"wall": time.time() - t0, **res}
 
     # ---- warm-up (untimed): the FULL pipeline over a small slice. This
     # compiles every codegen stage, loads the parquet writer + Arrow
@@ -155,7 +105,6 @@ def main():
         "tiles": best["tiles"],
         "sec": round(best["wall"], 3),
         "rows_per_sec": round(rows / best["wall"], 1),
-        "phases": best["phases"],
         "reps": reps,
     }))
     spark.stop()

@@ -5,7 +5,7 @@ scaling probe (see scripts/bench_scaling_dedup.py).
 The flagship probe (scripts/scaling_job.py) evidences the north rule on
 the spatial-join + tiling half of the engine; this job evidences it on
 the training-data-curation half: the operator family a 100 TB crawl
-actually runs end-to-end —
+actually runs end-to-end (`lib_gdal_spark.plans.curate`) —
 
   read pages -> lang-id + token-count + Gopher quality rules (pure
   Catalyst column math) -> filter -> EXACT dedup (md5 groupBy, min-id
@@ -37,7 +37,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 
 def main():
@@ -70,8 +70,8 @@ def main():
     spark.conf.set("spark.sql.shuffle.partitions", str(max(cores * 2, 8)))
 
     from lib_gdal_spark import metrics
-    from lib_gdal_spark.operators import dedup, sampling, textops
     from lib_gdal_spark.pages.synth import pages_df
+    from lib_gdal_spark.plans import curate
 
     # ---- setup (untimed): materialize the deterministic input once; 64
     # fixed partitions so both parallelism levels read identical files
@@ -84,49 +84,15 @@ def main():
         return
 
     def run_pipeline(out_dir: str, src) -> dict:
-        mpath = os.path.join(out_dir, "_metrics")
-        phases = {}
-
-        def tick(name, t_start):
-            now = time.time()
-            phases[name] = round(now - t_start, 3)
-            return now
-
+        """One curation pass (the timed unit); the curated sink write
+        materializes every stage."""
         t0 = time.time()
-        t = t0
-        # Stage 1 (map-only column math): token count + quality features,
-        # then the quality gate. One pruned pass over (url, text, lang);
-        # no shuffle at all.
-        scored = textops.quality_score(src.select("url", "text", "lang"))
-        # prune the scratch quality columns before anything shuffles:
-        # every downstream exchange (dedup semi-join, signature join)
-        # would otherwise carry 5 extra doubles per row for nothing
-        kept = scored.filter(
-            (F.col("n_tokens") >= 3) & (F.col("alpha_ratio") > 0.3)
-        ).select("url", "text", "lang")
-        # Stage 2: exact dedup — md5(text) groupBy with min-url keep (one
-        # narrow-key shuffle; the 100 TB shape: hash-bucketed agg).
-        uniq = dedup.exact_dedup(kept, "url", "text")
-        # Stage 3: MinHash signatures — shingle explode + 8 MIN aggs
-        # grouped by url (the shuffle-heavy stage; map-side combine keeps
-        # the exchange at ~|docs| x 8 hashes, not |shingles|).
-        sigs = dedup.minhash_signature(uniq, "url", "text",
-                                       n_hashes=8, shingle_n=3)
-        # Stage 4: temperature resample by lang (dim-sized agg +
-        # broadcast rate join — no corpus-wide shuffle) and the curated
-        # sink write, which IS the materialization of stages 1-4.
-        curated = sampling.temperature_resample(
-            uniq.join(sigs, "url"), "lang", "url", alpha=0.5, frac=0.5)
-        curated.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "curated"))
-        t = tick("curate_write", t)
-        back = spark.read.parquet(os.path.join(out_dir, "curated"))
+        curated_path = os.path.join(out_dir, "curated")
+        curate(src).write.mode("overwrite").parquet(curated_path)
+        back = spark.read.parquet(curated_path)
         curated_rows = back.count()
-        metrics.record(back, "curated", mpath)
-        t = tick("metrics", t)
-        wall = time.time() - t0
-        return {"wall": wall, "curated_rows": curated_rows,
-                "phases": phases}
+        metrics.record(back, "curated", os.path.join(out_dir, "_metrics"))
+        return {"wall": time.time() - t0, "curated_rows": curated_rows}
 
     # ---- warm-up (untimed): full pipeline over a small slice — same
     # rationale as scaling_job.py (codegen + worker-pool spin-up is fixed
@@ -140,7 +106,6 @@ def main():
     best = None
     for i in range(reps):
         r = run_pipeline(os.path.join(out_dir, f"rep{i}"), pages)
-        spark.catalog.clearCache()
         if best is None or r["wall"] < best["wall"]:
             best = r
 
@@ -150,7 +115,6 @@ def main():
         "curated_rows": best["curated_rows"],
         "sec": round(best["wall"], 3),
         "rows_per_sec": round(n_pages / best["wall"], 1),
-        "phases": best["phases"],
         "reps": reps,
     }))
     spark.stop()

@@ -104,6 +104,26 @@ class TestSpatialJoinPlan:
         final = explain_str(j).split("== Initial Plan ==")[0]
         assert len(re.findall(r"ArrowEvalPython \(\d+\)", final)) == 1
 
+    def test_unhinted_cover_is_broadcast_over_parquet(self, spark, tmp_path):
+        # no broadcast hint: the planner must choose the broadcast join
+        # from the cover's known size against a big-statistics parquet
+        # scan of the points (the flagship's shape)
+        import __spark_entry__ as em
+
+        spark.range(5000).select(
+            F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+            ((F.col("id") * 7919 % 3600) / 10.0 - 180.0).alias("lon"),
+            ((F.col("id") * 9973 % 1700) / 10.0 - 85.0).alias("lat"),
+        ).write.parquet(str(tmp_path / "pts"))
+        pts = spark.read.parquet(str(tmp_path / "pts"))
+        j = sjoin.spatial_join(pts, em._rect_polyset(), zoom=7, how="inner")
+        j.collect()
+        plan = explain_str(j)
+        assert "isFinalPlan=true" in plan
+        final = plan.split("== Initial Plan ==")[0]
+        assert "BroadcastHashJoin" in final
+        assert "SortMergeJoin" not in final
+
     def test_left_face_anti_join_on_narrow_key(self, spark):
         # the left face finds unmatched points by anti-joining on ONE
         # unique key column — wide payload columns (html at page scale)

@@ -93,15 +93,6 @@ class TestSpatialJoin:
         with pytest.raises(ValueError, match="not.*unique|unique"):
             sjoin.spatial_join(dup, ps, zoom=7, how="left")
 
-    def test_salted_shuffle_path_same_result(self, points, pages_pdf):
-        ps = sjoin.PolygonSet(POLYS)
-        got = sjoin.spatial_join(points, ps, zoom=7, how="inner",
-                                 broadcast_cover=False, salt=4)
-        got_pairs = sorted(
-            (r.url, r.poly_id) for r in got.select("url", "poly_id").collect()
-        )
-        assert got_pairs == oracle_join(pages_pdf)
-
     def test_layer_algebra_faces(self, points, pages_pdf):
         # Identity/Union/SymDifference (ogrlayer.cpp:6589/:5622/:6159)
         # recast for point inputs; poly 9 is placed in an empty corner so
