@@ -1,4 +1,4 @@
-"""Two-phase distributed spatial join: cell pre-filter + exact PIP kernel.
+"""Two-phase distributed spatial join: cell pre-filter + exact ray-cast.
 
 Reference semantics re-expressed Spark-first:
 
@@ -13,68 +13,57 @@ Reference semantics re-expressed Spark-first:
 - Here phase 1 (cheap) is a *cell equi-join*: every point carries a z-order
   cell id (Catalyst column math, geo/cells.py); every polygon is exploded to
   the cells its geometry covers. The join on ``cell`` is hash-partitionable,
-  broadcastable, and prunable. Phase 2 (exact) runs in Catalyst when it can:
-  for an axis-aligned rectangle ("box": one ring, the 4 corners of its
-  envelope joined by axis-parallel edges) the ray-cast kernel
-  (geo/pip.py, semantics of ogr/ogrlinearring.cpp:452-521) answers exactly
-  ``[xmin, xmax) x [ymin, ymax)`` — a vertical edge gives the ray crossing
-  ``xint == x`` bit for bit and horizontal edges never straddle — so the
-  half-open envelope test IS the exact test. Only a set holding a non-box
-  polygon plans the kernel, as an Arrow pandas UDF over the survivors of a
-  closed (superset) envelope test.
+  broadcastable, and prunable. Phase 2 (exact) is one Catalyst expression
+  for every polygon: the closed exterior envelope test, then the ray-cast
+  of geo/pip.py (semantics of ogr/ogrlinearring.cpp:452-521) as an
+  ``aggregate`` over the polygon's edges, which ride in the cover rows.
+  The edges keep ``point_in_ring_np``'s order and float operations, so for
+  finite vertices the answer is ``point_in_polygon_np``'s bit for bit:
+  half-open on the max edges, holes by even-odd parity over all rings.
 
 Scale design (100 TB / 10^12 pages):
-- the polygon side (admin boundaries) is small: the cover is built once
-  per (set, zoom) and rides in the plan as a local relation whose size
-  the planner knows, so it picks a broadcast hash join by itself — ZERO
-  shuffle of the big side; each task filters its own partition (the
-  distributed analog of the reference's per-executor prepared-geometry
-  cache, ogrlayer.cpp:5325). A broadcast join has no skew exposure; AQE
-  skew-join (session.py) splits hot partitions of any shuffled join.
-  (Salting the cover join lost in every measured configuration,
-  BENCH/SKEW.md.)
-- an all-box set runs with no Python stage at all. Otherwise the PIP
-  kernel only sees (lon, lat, poly_id) survivors — Arrow batches, no
-  per-row Python — and the rings travel inside the UDF's pickled closure
-  (PySpark broadcasts a command above 1 MB by itself), so no call leaves
-  a broadcast behind.
+- the polygon side (admin boundaries) is small: the cover, edges included,
+  is built once per (set, zoom) and rides in the plan as a local relation
+  whose size the planner knows, so it picks a broadcast hash join by
+  itself — ZERO shuffle of the big side; each task filters its own
+  partition (the distributed analog of the reference's per-executor
+  prepared-geometry cache, ogrlayer.cpp:5325). A broadcast join has no
+  skew exposure; AQE skew-join (session.py) splits hot partitions of any
+  shuffled join. (Salting the cover join lost in every measured
+  configuration, BENCH/SKEW.md.)
+- the plan holds no Python stage, and no call leaves a broadcast behind.
+  The ray-cast costs O(edges) per candidate row, and the broadcast carries
+  (cover rows x edges) values: the figure to watch for large
+  admin-boundary sets.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from ..geo import mercator
 from ..geo.cells import cell_encode_col, cell_encode_np
 from ..geo.pip import envelope_np, point_in_polygon_np
-from ..geo.rtree import PackedRTree
 from ..pages.synth import GEOTAG_RE
 
 
-def _is_box(rings) -> bool:
-    """One ring whose vertices, closing vertex dropped, are the 4 distinct
-    corners of its envelope joined by axis-parallel edges, with a finite
-    width and height. For such a ring ``point_in_ring_np`` is exactly
-    ``[xmin, xmax) x [ymin, ymax)``: a vertical edge gives ``xint == x1``
-    bit for bit (``0 * finite + x1``) and horizontal edges never straddle.
-    An infinite extent would turn ``xint`` into NaN, so it is no box."""
-    if len(rings) != 1:
-        return False
-    r = rings[0]
-    if len(r) >= 2 and r[0][0] == r[-1][0] and r[0][1] == r[-1][1]:
-        r = r[:-1]
-    if len(r) != 4:
-        return False
-    lo, hi = r.min(axis=0), r.max(axis=0)
-    if not np.isfinite(hi - lo).all():
-        return False
-    corners = {(lo[0], lo[1]), (hi[0], lo[1]), (hi[0], hi[1]), (lo[0], hi[1])}
-    if len(corners) != 4 or {tuple(v) for v in r.tolist()} != corners:
-        return False
-    nxt = np.roll(r, -1, axis=0)
-    return bool(((r[:, 0] == nxt[:, 0]) != (r[:, 1] == nxt[:, 1])).all())
+def _edges(rings) -> list:
+    """The ray-cast edges of every ring as (x0, y0, x1, y1), in
+    ``point_in_ring_np``'s order: the closing vertex dropped, edge i runs
+    from vertex i-1 (wrapping) to vertex i. Left out: horizontal edges,
+    which never straddle, and edges with a NaN coordinate, whose crossing
+    x is NaN and so never right of a point. Neither counts a crossing,
+    and without them the divisor ``y0 - y1`` is never 0."""
+    out = []
+    for r in rings:
+        if len(r) >= 2 and r[0][0] == r[-1][0] and r[0][1] == r[-1][1]:
+            r = r[:-1]
+        e = np.hstack([np.roll(r, 1, axis=0), r])
+        e = e[(e[:, 1] != e[:, 3]) & ~np.isnan(e).any(axis=1)]
+        out.extend(map(tuple, e.tolist()))
+    return out
 
 
 def _orient(ax, ay, bx, by, cx, cy):
@@ -131,12 +120,11 @@ def _cells_intersect(rings, ln0, lt0, ln1, lt1) -> np.ndarray:
 
 
 class PolygonSet:
-    """Driver-side polygon dimension: rings + envelopes + packed R-tree.
+    """Driver-side polygon dimension: rings + envelopes.
 
     polys: list of (poly_id:int, rings:list[np.ndarray(n,2) lon/lat]).
-    Small by construction (admin/boundary sets); broadcast to executors.
-    ``is_box[i]`` marks ``ids[i]`` as an axis-aligned rectangle, whose
-    exact PIP answer is its half-open envelope (see ``_is_box``).
+    Small by construction (admin/boundary sets); its cover rides in the
+    join plan and is broadcast to executors.
     """
 
     def __init__(self, polys):
@@ -145,8 +133,6 @@ class PolygonSet:
                       for p, rings in polys}
         boxes = np.array([envelope_np(self.rings[p]) for p in self.ids], dtype=np.float64)
         self.boxes = boxes.reshape(-1, 4)
-        self.is_box = np.array([_is_box(self.rings[p]) for p in self.ids], dtype=bool)
-        self.rtree = PackedRTree(self.boxes) if len(self.ids) else None
         self._covers = {}
 
     def area(self, pid: int) -> float:
@@ -207,11 +193,15 @@ class PolygonSet:
         return out
 
     def _cover(self, zoom: int) -> pd.DataFrame:
-        """``cover_cells(zoom, with_bbox=True)``, built once per zoom: the
-        set does not change, and a serving session joins against it on
-        every request. At most one frame per zoom level, so it is bounded."""
+        """``cover_cells(zoom, with_bbox=True)`` plus each row's polygon
+        ``edges`` (see ``_edges``), built once per zoom: the set does not
+        change, and a serving session joins against it on every request.
+        At most one frame per zoom level, so it is bounded."""
         if zoom not in self._covers:
-            self._covers[zoom] = self.cover_cells(zoom, with_bbox=True)
+            cover = self.cover_cells(zoom, with_bbox=True)
+            edges = {p: _edges(self.rings[p]) for p in self.ids}
+            cover["edges"] = [edges[p] for p in cover.poly_id]
+            self._covers[zoom] = cover
         return self._covers[zoom]
 
 
@@ -290,12 +280,10 @@ def spatial_join(
     hashes or dedups wide payload columns (html at page scale).
 
     exact=True decides containment as the ray-cast kernel does
-    (geo/pip.py), half-open on the max edges. When every polygon of the
-    set is a box (``PolygonSet.is_box``) that is the Catalyst test
-    ``xmin <= lon < xmax and ymin <= lat < ymax`` and the plan holds no
-    Python stage; otherwise a closed envelope test feeds the PIP pandas
-    UDF. exact=False keeps only the closed envelope test: a superset of
-    the exact answer.
+    (geo/pip.py): the closed exterior envelope test, then the even-odd
+    count of +x ray crossings over the edges of all rings, both in
+    Catalyst — half-open on the max edges, holes excluded. exact=False
+    keeps only the closed envelope test: a superset of the exact answer.
     """
     spark = points.sparkSession
     # ALWAYS derive the join cell at THIS zoom — a pre-existing `cell`
@@ -311,46 +299,25 @@ def spatial_join(
     cover = spark.createDataFrame(
         polys._cover(zoom),
         schema="_jcell long, poly_id long, xmin double, ymin double, "
-               "xmax double, ymax double",
+               "xmax double, ymax double, "
+               "edges array<struct<x0:double,y0:double,x1:double,y1:double>>",
     )
 
     # a local relation of known size: the planner broadcasts it unhinted
     cand = pts.join(cover, on="_jcell", how="inner").drop("_jcell")
 
-    # phase 1b — envelope test IN CATALYST (ogrlayer.cpp:3753
-    # point-in-envelope shortcut). Half-open on the max edges it is the
-    # exact answer for an all-box set; closed it is a superset of the
-    # ray-cast result, so the PIP kernel only ever REMOVES rows.
+    # phase 1b — closed envelope test (ogrlayer.cpp:3753 point-in-envelope
+    # shortcut; point_in_polygon_np's pre-test), then phase 2 — the
+    # ray-cast in point_in_ring_np's float operations, parity over every
+    # ring's edges
     x, y = F.col(lon_col), F.col(lat_col)
-    decided = exact and bool(polys.is_box.all())
-    if decided:
-        upper = (x < F.col("xmax")) & (y < F.col("ymax"))
-    else:
-        upper = (x <= F.col("xmax")) & (y <= F.col("ymax"))
-    cand = cand.filter(
-        (x >= F.col("xmin")) & (y >= F.col("ymin")) & upper
-    ).drop("xmin", "ymin", "xmax", "ymax")
-
-    if exact and not decided:
-        from ..session import ship_package
-
-        ship_package(spark)  # workers must import the PIP kernel
-        rings_map = polys.rings  # pickled with the UDF: no broadcast to leak
-
-        @F.pandas_udf(T.BooleanType())
-        def _pip(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-            out = np.zeros(len(lon), dtype=bool)
-            lons = lon.to_numpy(np.float64)
-            lats = lat.to_numpy(np.float64)
-            pids = pid.to_numpy(np.int64)
-            for p in np.unique(pids):
-                m = pids == p
-                rings = rings_map.get(int(p))
-                if rings:
-                    out[m] = point_in_polygon_np(lons[m], lats[m], rings)
-            return pd.Series(out)
-
-        cand = cand.filter(_pip(x, y, F.col("poly_id")))
+    keep = ((x >= F.col("xmin")) & (x <= F.col("xmax"))
+            & (y >= F.col("ymin")) & (y <= F.col("ymax")))
+    if exact:
+        keep = keep & F.aggregate("edges", F.lit(False), lambda acc, e: acc != (
+            ((e.y1 > y) != (e.y0 > y))
+            & (x < (e.x0 - e.x1) * (y - e.y1) / (e.y0 - e.y1) + e.x1)))
+    cand = cand.filter(keep).drop("xmin", "ymin", "xmax", "ymax", "edges")
 
     if how == "inner":
         return cand

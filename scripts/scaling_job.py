@@ -42,10 +42,6 @@ def main():
         SparkSession.builder.appName("scaling_job")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # 64k-row Arrow batches for the PIP kernel — the reference's own
-        # batch size (ogrlayerarrow.cpp:1948); default 10k spends ~6x more
-        # per-batch overhead in the vectorized UDF path
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

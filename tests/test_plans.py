@@ -7,12 +7,12 @@ Checks (via explain(formatted)) that:
 - the spatial join's phase-1 cell join is a BroadcastHashJoin (zero shuffle
   of the big side);
 - aggregations are partial (map-side combine) before the exchange;
-- the two-phase spatial predicate keeps the cheap test JVM-side: the PIP
-  UDF appears AFTER the join, not in the scan, and an all-box polygon
-  set plans no Python stage at all.
+- the two-phase spatial predicate runs after the cell join, not in the
+  scan, and no polygon set plans a Python stage.
 """
 
 import re
+import uuid
 
 import numpy as np
 import pytest
@@ -64,45 +64,74 @@ class TestPushdown:
         assert plan.index("HashAggregate") < plan.index("Exchange")
 
 
+def _plan_sets():
+    """Polygon sets the exact join plans the same way: boxes, a concave L,
+    a holed box, a box plus a triangle, a many-vertex star with a hole."""
+    import __spark_entry__ as em
+
+    box = (1, em._rect_rings(0.0, 0.0, 20.0, 20.0))
+    ell = (2, [np.array([[30.0, 0.0], [60.0, 0.0], [60.0, 15.0], [45.0, 15.0],
+                         [45.0, 30.0], [30.0, 30.0], [30.0, 0.0]])])
+    holed = (3, em._rect_rings(0.0, 0.0, 40.0, 25.0)
+             + em._rect_rings(10.0, 5.0, 20.0, 15.0))
+    tri = (5, [np.array([[0.0, 0.0], [40.0, 0.0], [20.0, 25.0], [0.0, 0.0]])])
+    t = np.linspace(0.0, 2 * np.pi, 400, endpoint=False)
+    ring = np.column_stack([(10.0 + 4.0 * np.sin(7 * t)) * np.cos(t) + 20.0,
+                            (10.0 + 4.0 * np.sin(7 * t)) * np.sin(t) + 15.0])
+    star = (6, [np.vstack([ring, ring[:1]])] + em._rect_rings(17.0, 12.0, 23.0, 18.0))
+    return {"box": em._rect_polyset(), "concave_L": sjoin.PolygonSet([ell]),
+            "holed": sjoin.PolygonSet([holed]), "mixed": sjoin.PolygonSet([box, tri]),
+            "star": sjoin.PolygonSet([star])}
+
+
 class TestSpatialJoinPlan:
     def test_cover_join_is_broadcast(self, spark):
         pdf = spark.createDataFrame(
             [(f"u{i}", float(i % 50), float(i % 30)) for i in range(100)],
             "url string, lon double, lat double",
         )
-        # a concave L: not a box, so the exact PIP kernel is planned
-        polys = sjoin.PolygonSet(
-            [(1, [np.array([[30.0, 0.0], [60.0, 0.0], [60.0, 15.0], [45.0, 15.0],
-                            [45.0, 30.0], [30.0, 30.0], [30.0, 0.0]])])]
-        )
-        j = sjoin.spatial_join(pdf, polys, zoom=6, how="inner")
-        plan = explain_str(j)
-        assert "BroadcastHashJoin" in plan
-        # exact PIP runs AFTER the join (two-phase discipline): the plan
-        # prints top-down, so the UDF node comes first
-        assert plan.index("ArrowEvalPython") < plan.index("BroadcastHashJoin")
+        for name, polys in _plan_sets().items():
+            j = sjoin.spatial_join(pdf, polys, zoom=6, how="inner")
+            j.collect()
+            plan = explain_str(j)
+            assert "isFinalPlan=true" in plan, name
+            # formatted explain numbers nodes children first, so a node
+            # above another has the larger id
+            ids = {int(i) for i in re.findall(r"\((\d+)\)",
+                                              plan.split("== Initial Plan ==")[0])}
+            nodes = {int(m[1]): m[0] for m in re.finditer(
+                r"^\((\d+)\) .*?(?=^\(\d+\) |\Z)", plan, re.S | re.M)}
+            bhj = [i for i in ids if nodes[i].split()[1] == "BroadcastHashJoin"]
+            assert len(bhj) == 1, name
+            # the exact ray-cast runs after the cell join (two-phase
+            # discipline): in the join's condition or in a filter above it
+            cast = [i for i in ids if "aggregate(" in nodes[i]]
+            assert cast, name
+            for i in cast:
+                assert nodes[i].split()[1] in ("BroadcastHashJoin", "Filter"), nodes[i]
+                assert i >= bhj[0], name
+            assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, name
 
     def test_box_set_has_no_python(self, spark):
-        # a box's exact answer is its half-open envelope, decided in Catalyst
-        import __spark_entry__ as em
-
+        # one exact path for every set: a non-box polygon adds no Python
+        # stage and no job to a small request
         pdf = spark.createDataFrame(
             [(f"u{i}", float(i % 50), float(i % 30)) for i in range(100)],
             "url string, lon double, lat double",
         )
-        j = sjoin.spatial_join(pdf, em._rect_polyset(), zoom=6, how="inner")
-        j.collect()
-        plan = explain_str(j)
-        assert "isFinalPlan=true" in plan
-        assert "BroadcastHashJoin" in plan
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-        # one non-box polygon brings back exactly one PIP stage
-        tri = (5, [np.array([[0.0, 0.0], [40.0, 0.0], [20.0, 25.0], [0.0, 0.0]])])
-        mixed = sjoin.PolygonSet([(1, em._rect_rings(0.0, 0.0, 20.0, 20.0)), tri])
-        j = sjoin.spatial_join(pdf, mixed, zoom=6, how="inner")
-        j.collect()
-        final = explain_str(j).split("== Initial Plan ==")[0]
-        assert len(re.findall(r"ArrowEvalPython \(\d+\)", final)) == 1
+        sc = spark.sparkContext
+        for name in ("box", "mixed"):
+            group = f"sjoin-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                j = sjoin.spatial_join(pdf, _plan_sets()[name], zoom=6, how="inner")
+                j.collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2, name
+            plan = explain_str(j)
+            assert "isFinalPlan=true" in plan
+            assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
     def test_unhinted_cover_is_broadcast_over_parquet(self, spark, tmp_path):
         # no broadcast hint: the planner must choose the broadcast join

@@ -4,6 +4,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+import __spark_entry__ as em
 from lib_gdal_spark.geo import mercator
 from lib_gdal_spark.geo.cells import cell_encode_np
 from lib_gdal_spark.geo.pip import envelope_np, point_in_polygon_np, polygons_intersect_np
@@ -164,25 +165,25 @@ def _oracle_rows(pdf, polys, how):
                   + [(u, None, None) for u in miss])  # identity
 
 
+def _star():
+    """A 400-vertex concave star, radius 10 + 4 sin 7t, with a square hole."""
+    t = np.linspace(0.0, 2 * np.pi, 400, endpoint=False)
+    r = 10.0 + 4.0 * np.sin(7 * t)
+    ring = np.column_stack([r * np.cos(t), r * np.sin(t)])
+    hole = np.array([[-3.0, -3.0], [3.0, -3.0], [3.0, 3.0], [-3.0, 3.0], [-3.0, -3.0]])
+    return (6, [np.vstack([ring, ring[:1]]), hole])
+
+
 BOUNDARY_SETS = {"box": [POLYS[0]], "concave_L": [POLYS[1]],
-                 "box_with_hole": [POLYS[2]], "mixed": [POLYS[0], TRI]}
+                 "box_with_hole": [POLYS[2]], "mixed": [POLYS[0], TRI],
+                 "contract_rects_tri": [(p, em._rect_rings(*r)) for p, *r in em._RECTS]
+                 + [(5, [np.array(em._TRI + [em._TRI[0]])])],
+                 "star_with_hole": [_star()]}
 
 
 class TestBoxRule:
-    @pytest.mark.parametrize("rings,want", [
-        ([np.array([[0.0, 0.0], [1.0, 0.0], [1.0, 2.0], [0.0, 2.0], [0.0, 0.0]])], True),
-        ([np.array([[0.0, 0.0], [0.0, 2.0], [1.0, 2.0], [1.0, 0.0]])], True),  # open, CW
-        ([np.array([[0.0, 0.0], [1.0, 2.0], [1.0, 0.0], [0.0, 2.0]])], False),  # bow tie
-        ([np.array([[0.0, 0.0], [1.0, 0.0], [0.0, 0.0], [1.0, 0.0]])], False),  # degenerate
-        ([np.array([[0.0, 0.0], [np.inf, 0.0], [np.inf, 1.0], [0.0, 1.0]])], False),
-        (POLYS[1][1], False), (POLYS[2][1], False), (TRI[1], False),
-    ], ids=["closed", "open_cw", "bow_tie", "degenerate", "infinite",
-            "concave_L", "holed", "triangle"])
-    def test_is_box(self, rings, want):
-        assert sjoin._is_box(rings) is want
-
     def test_box_pip_is_half_open_envelope(self):
-        # the identity the Catalyst-side decision rests on
+        # a box's ray-cast answer is its half-open envelope, bit for bit
         pdf = _boundary_points([POLYS[0]])
         x, y = pdf.lon.to_numpy(), pdf.lat.to_numpy()
         xmin, ymin, xmax, ymax = envelope_np(POLYS[0][1])
@@ -211,23 +212,25 @@ class TestBoundaryPoints:
         if how == "inner":
             assert len(got) > 20  # the boundary actually lands inside
 
-    @pytest.mark.parametrize("name", ["box", "concave_L"])
+    @pytest.mark.parametrize("name", ["box", "concave_L", "mixed"])
     def test_no_broadcast_or_cover_rebuild_per_call(self, spark, monkeypatch, name):
         from pyspark import SparkContext
 
         polys = sjoin.PolygonSet(BOUNDARY_SETS[name])
         pts = spark.createDataFrame(_boundary_points(BOUNDARY_SETS[name]),
                                     "url string, lon double, lat double")
-        broadcasts, builds = [], []
-        bc, cover = SparkContext.broadcast, sjoin.PolygonSet.cover_cells
+        broadcasts, builds, edges = [], [], []
+        bc, cover, ed = SparkContext.broadcast, sjoin.PolygonSet.cover_cells, sjoin._edges
         monkeypatch.setattr(SparkContext, "broadcast",
                             lambda self, v: broadcasts.append(1) or bc(self, v))
         monkeypatch.setattr(sjoin.PolygonSet, "cover_cells",
                             lambda self, *a, **k: builds.append(1) or cover(self, *a, **k))
+        monkeypatch.setattr(sjoin, "_edges", lambda rings: edges.append(1) or ed(rings))
         for _ in range(3):
             sjoin.spatial_join(pts, polys, zoom=7).collect()
         assert broadcasts == []
         assert len(builds) == 1
+        assert len(edges) == len(polys.ids)  # once per polygon, at one zoom
 
 
 def _cover_cells_loop(ps, zoom):
@@ -261,8 +264,6 @@ class TestCoverCells:
     @pytest.mark.parametrize("zoom", range(4, 10))
     @pytest.mark.parametrize("name", ["POLYS", "contract_rects", "contract_tri"])
     def test_vectorized_refine_matches_loop(self, name, zoom):
-        import __spark_entry__ as em
-
         polys = {"POLYS": POLYS,
                  "contract_rects": [(p, em._rect_rings(*r)) for p, *r in em._RECTS],
                  "contract_tri": [(1, [np.array(em._TRI + [em._TRI[0]])])]}[name]
