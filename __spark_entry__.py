@@ -4799,8 +4799,8 @@ def _q_temperature_resample(spark, sf_dir):
     # keep rate min(1, frac * sqrt(n_max/n_g)) (alpha=0.5) — integer
     # counts -> one division + sqrt + multiply, all correctly-rounded
     # IEEE ops, so the rate doubles are bit-identical cross-engine; kept
-    # iff md5-unit-hash(doc_id) < rate. One tiny dim aggregate + a
-    # broadcast rate join; no corpus-wide shuffle.
+    # iff md5-unit-hash(doc_id) < rate. One tiny dim aggregate with a
+    # window max + a broadcast rate join; no corpus-wide shuffle.
     from lib_gdal_spark.operators import sampling
     d = _tbl(spark, sf_dir, "documents").select("doc_id", "lang")
     return (sampling.temperature_resample(d, "lang", "doc_id",
@@ -4809,10 +4809,11 @@ def _q_temperature_resample(spark, sf_dir):
 
 
 def _o_temperature_resample():
-    from lib_gdal_spark.operators.sampling import (temperature_rate_sql,
+    from lib_gdal_spark.operators.sampling import (TEMP_SEED,
+                                                   temperature_rate_sql,
                                                    unit_hash_sql)
     ctes = temperature_rate_sql("lang", "documents", alpha=0.5, frac=0.5)
-    u = unit_hash_sql("d.doc_id", "temp|")
+    u = unit_hash_sql("d.doc_id", TEMP_SEED)
     return f"""
 WITH {ctes}
 SELECT d.doc_id, d.lang, r.keep_rate
@@ -4940,9 +4941,9 @@ FROM s WHERE cos >= 0.5 ORDER BY cos DESC, id_a, id_b LIMIT 50
 
 
 def _q_ngram_topk(spark, sf_dir):
-    # corpus-wide top-25 word trigrams (boilerplate detection): staged
-    # token array -> transform() n-gram lambda -> explode -> partial-agg
-    # count; integer counts + lexicographic tie-break = exact
+    # corpus-wide top-25 word trigrams (boilerplate detection): token
+    # posexplode -> n-1 lead() windows -> partial-agg count; integer
+    # counts + lexicographic tie-break = exact
     from lib_gdal_spark.operators import relevance
     return relevance.ngram_topk(_tbl(spark, sf_dir, "documents"), 3, 25)
 

@@ -4,17 +4,17 @@ Not present in the reference (GDAL dedups nothing); required first-class ops
 for a training-data pipeline over the pages/documents tables. All hashing is
 md5-hex (identical in Spark, DuckDB, and Python — keeps every operator
 oracle-checkable) and every step is JVM-side column math: tokenize with
-regexp_extract_all, explode, min-hash as MIN over string hashes. No Python
-in the hot path.
+regexp_extract_all, min-hash as the smallest of a document's string hashes.
+No Python in the hot path.
 
 Scale notes:
 - exact_dedup is one hash-aggregate (map-side partial min) — the cheapest
   possible full-corpus dedup; the digest groupBy key is uniform by
   construction (no skew).
-- minhash/LSH: signatures are b*r MIN aggregations over the exploded
-  shingle table; the band self-join joins on (band_idx, band_key) — a
+- minhash/LSH: signatures are n_hashes array_min columns on each doc's
+  own row, no shuffle; the band self-join joins on (band_idx, band_key) — a
   uniformly-hashed key, so the classic skew trap (empty-text hot key) is
-  removed by filtering null/short docs first.
+  removed by dropping docs with no token first.
 - the candidate pair set is verified with exact n-gram Jaccard BEFORE being
   declared duplicates (two-phase discipline again: cheap banding pre-filter,
   exact verify on survivors).
@@ -43,52 +43,52 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.join(keep, on=id_col, how="left_semi")
 
 
-def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3,
-             distinct: bool = True) -> DataFrame:
-    """(id, shingle) rows: n-gram word shingles joined by single spaces.
-
-    distinct=True gives SET semantics (one row per (id, shingle)) — what
-    Jaccard needs — at the cost of a full exchange of the shingle table,
-    the widest shuffle in any dedup job. Pass distinct=False for
-    consumers that are duplicate-insensitive (MIN/MAX aggregation): the
-    exploded rows then feed a map-side partial agg directly and nothing
-    wider than the per-doc result ever crosses the network."""
-    toks = df.select(F.col(id_col), tokens_col(text_col).alias("_toks"))
-    # windowed n-grams via transform over token indices (JVM-side)
-    ng = F.transform(
+def _shingle_array(n: int):
+    """The staged ``_toks``'s n-gram word shingles joined by single spaces;
+    a doc of fewer than n tokens is one shorter shingle ("" for none)."""
+    return F.transform(
         F.sequence(F.lit(0), F.greatest(F.size("_toks") - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice("_toks", i + 1, n)),
-    )
-    out = toks.select(id_col, F.explode(ng).alias("shingle")).filter(
-        F.length("shingle") > 0
-    )
-    return out.distinct() if distinct else out
+        lambda i: F.concat_ws(" ", F.slice("_toks", i + 1, n)))
+
+
+def shingles(df: DataFrame, id_col: str, text_col: str,
+             n: int = 3) -> DataFrame:
+    """Distinct (id, shingle) rows: each doc's n-gram word shingle SET,
+    what Jaccard needs. A MIN consumer skips this full exchange of the
+    shingle table and hashes the per-row array (with_minhash)."""
+    toks = df.select(F.col(id_col), tokens_col(text_col).alias("_toks"))
+    return (toks.select(id_col, F.explode(_shingle_array(n)).alias("shingle"))
+            .filter(F.length("shingle") > 0).distinct())
+
+
+def with_minhash(df: DataFrame, text_col: str, n_hashes: int = 8,
+                 shingle_n: int = 3) -> DataFrame:
+    """``df``'s rows with a token, plus mh_i = min over the doc's shingles
+    of md5('i|' || shingle) for i < n_hashes on the same row: a valid
+    min-hash of a uniform hex hash, portable across engines. No shuffle.
+
+    Staged selects (CLAUDE.md HOF rule): tokens, shingles, hashes. The
+    no-token filter tests the SOURCE text: a filter on a staged array is
+    pushed below its select and inlines the tokenizer again."""
+    toks = (df.filter(F.lower(F.col(text_col)).rlike(TOKEN_RE))
+            .select("*", tokens_col(text_col).alias("_toks")))
+    sh = toks.select(*df.columns, _shingle_array(shingle_n).alias("_sh"))
+    mh = [F.array_min(F.transform(
+              "_sh", lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))))
+          .alias(f"mh_{i}") for i in range(n_hashes)]
+    return sh.select(*df.columns, *mh)
 
 
 def minhash_signature(df: DataFrame, id_col: str, text_col: str,
                       n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
-    """Per-doc MinHash signature: mh_i = MIN(md5(i || shingle)).
-
-    The lexicographic min of a uniform hex hash is a valid min-hash; using
-    md5 with a seed prefix gives n_hashes independent permutations, portable
-    across engines (oracle-checkable).
-    """
-    # distinct=False: MIN is duplicate-insensitive, so the set-semantics
-    # exchange would be pure waste — without it the exploded shingles
-    # feed the partial MIN agg map-side and the only shuffle carries one
-    # row per doc (id + n_hashes hex strings), not the shingle table.
-    sh = shingles(df, id_col, text_col, shingle_n, distinct=False)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"mh_{i}")
-        for i in range(n_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
+    """(id, mh_0..mh_{n-1}) of with_minhash. Precondition: ids are unique."""
+    return with_minhash(df.select(id_col, text_col), text_col, n_hashes,
+                        shingle_n).drop(text_col)
 
 
 def lsh_candidate_pairs(sig: DataFrame, id_col: str,
                         bands: int = 4, rows_per_band: int = 2) -> DataFrame:
     """Banded LSH: docs sharing any band key become a candidate pair (a<b)."""
-    n = bands * rows_per_band
     band_cols = []
     for b in range(bands):
         cols = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]

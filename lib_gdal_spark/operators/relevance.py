@@ -27,10 +27,9 @@ Scale notes (100 TB):
   global top-k is orderBy().limit(k) = TakeOrderedAndProject
   (per-partition heaps + driver merge of k rows), NOT a
   single-partition row_number window.
-- ngram: transform() over a STAGED token-array column (CLAUDE.md:
-  arrays consumed by higher-order lambdas must be real projected
-  columns, or Catalyst re-evaluates the producing expression per
-  element), then explode + partial-agg count.
+- ngram: token posexplode + n-1 lead() windows per document, then a
+  partial-agg count — not a transform() lambda, which re-ran the
+  tokenizer per element (the CLAUDE.md HOF trap).
 """
 
 from __future__ import annotations

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 _POW52 = float(2 ** 52)
+TEMP_SEED = "temp|"  # temperature_resample's unit-hash seed
+RATE_COL = "keep_rate"  # temperature_resample's output column
 
 
 def _unit_hash(col, seed: str):
@@ -83,9 +85,7 @@ def split_thresholds_sql(key_expr: str, weights=None,
 
 
 def temperature_resample(df: DataFrame, group_col: str, id_col: str, *,
-                         alpha: float = 0.5, frac: float = 0.5,
-                         seed: str = "temp|",
-                         rate_col: str = "keep_rate") -> DataFrame:
+                         alpha: float = 0.5, frac: float = 0.5) -> DataFrame:
     """Temperature-based corpus rebalancing (the mC4/XLM-R multilingual
     resampling step): downsample over-represented groups toward
     ``share^alpha``-proportional balance without upsampling anything.
@@ -98,8 +98,8 @@ def temperature_resample(df: DataFrame, group_col: str, id_col: str, *,
     groups keep progressively more (clamped at 1 — no row is ever
     duplicated). alpha=1 is uniform ``frac`` sampling, alpha=0 fully
     flattens the distribution (each group targets n_max * frac rows).
-    A row is kept iff md5-unit-hash(id) < rate_g — deterministic across
-    runs, engines and partitionings.
+    A row is kept iff md5-unit-hash(TEMP_SEED || id) < rate_g —
+    deterministic across runs, engines and partitionings.
 
     Exactness: for alpha in {0.0, 0.5, 1.0} the rate uses only integer
     division, sqrt and one multiply (all correctly-rounded IEEE ops, so
@@ -107,13 +107,13 @@ def temperature_resample(df: DataFrame, group_col: str, id_col: str, *,
     other alphas go through pow(), which is NOT in the whitelist — fine
     for production use, but don't claim an exact oracle for them.
 
-    Scale shape: one count aggregate over the (small) group dimension, a
-    scalar max over it, and a broadcast join of the per-group rates back
-    onto the corpus — no corpus-wide shuffle at all. Output = input
-    columns + ``rate_col`` on the kept rows."""
+    Scale shape: one count aggregate over the (small) group dimension,
+    n_max as a window max over those few per-group rows, and a broadcast
+    join of the per-group rates back onto the corpus — no corpus-wide
+    shuffle at all. Output = input columns + RATE_COL on the kept rows."""
     counts = df.groupBy(group_col).agg(F.count("*").alias("n_g"))
-    nmax = counts.agg(F.max("n_g").alias("n_max"))
-    ratio = F.col("n_max").cast("double") / F.col("n_g").cast("double")
+    n_max = F.max("n_g").over(Window.partitionBy())
+    ratio = n_max.cast("double") / F.col("n_g").cast("double")
     expo = 1.0 - float(alpha)
     if expo == 0.5:
         scaled = F.sqrt(ratio)
@@ -123,18 +123,17 @@ def temperature_resample(df: DataFrame, group_col: str, id_col: str, *,
         scaled = F.lit(1.0)
     else:
         scaled = F.pow(ratio, F.lit(expo))
-    rates = (counts.crossJoin(F.broadcast(nmax))
-             .select(F.col(group_col).alias("_grp"),
-                     F.least(F.lit(1.0),
-                             F.lit(float(frac)) * scaled).alias(rate_col)))
-    u = _unit_hash(F.col(id_col), seed)
+    rates = counts.select(F.col(group_col).alias("_grp"),
+                          F.least(F.lit(1.0),
+                                  F.lit(float(frac)) * scaled).alias(RATE_COL))
+    u = _unit_hash(F.col(id_col), TEMP_SEED)
     # null-safe join: a NULL group is a real group (groupBy counts it and
     # it gets a rate like any other) — a plain equi-join would silently
     # DROP every null-group row instead of sampling it
     return (df.join(F.broadcast(rates),
                     F.col(group_col).eqNullSafe(F.col("_grp")))
               .drop("_grp")
-              .filter(u < F.col(rate_col)))
+              .filter(u < F.col(RATE_COL)))
 
 
 def temperature_rate_sql(group_expr: str, table: str = "documents", *,

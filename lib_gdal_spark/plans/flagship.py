@@ -5,8 +5,8 @@
 index -> z0..z12 tile pyramid -> ``pyramid/`` sink, with per-partition
 lineage rows appended to ``_metrics/`` (metrics.py).
 
-``curate``: quality gate -> exact dedup -> MinHash signatures ->
-temperature resample by language.
+``curate``: quality gate -> exact dedup -> MinHash signature columns on
+each row -> temperature resample by language.
 
 Every caller uses these zooms, so they are constants, not options.
 """
@@ -67,14 +67,14 @@ def flagship(pages: DataFrame, polys: sjoin.PolygonSet, out_dir: str) -> dict:
 def curate(pages: DataFrame) -> DataFrame:
     """Curated pages: (url, text, lang) rows passing the quality gate
     (>= 3 tokens, alphanumeric ratio > 0.3), one per distinct text (min
-    url), with their 8-hash MinHash signature over 3-token shingles,
-    resampled by lang at temperature alpha 0.5 (the largest lang keeps
-    half its rows; sampling.temperature_resample)."""
+    url), with their 8-hash MinHash signature columns mh_0..mh_7 over
+    3-token shingles (dedup.with_minhash: no shuffle, no join), resampled
+    by lang at temperature alpha 0.5 (the largest lang keeps half its
+    rows; sampling.temperature_resample)."""
     # the scratch quality columns are dropped before anything shuffles
     kept = (textops.quality_score(pages.select("url", "text", "lang"))
             .filter((F.col("n_tokens") >= 3) & (F.col("alpha_ratio") > 0.3))
             .select("url", "text", "lang"))
     uniq = dedup.exact_dedup(kept, "url", "text")
-    sigs = dedup.minhash_signature(uniq, "url", "text", n_hashes=8, shingle_n=3)
-    return sampling.temperature_resample(uniq.join(sigs, "url"), "lang", "url",
-                                         alpha=0.5, frac=0.5)
+    return sampling.temperature_resample(dedup.with_minhash(uniq, "text", 8, 3),
+                                         "lang", "url", alpha=0.5, frac=0.5)

@@ -9,10 +9,9 @@ actually runs end-to-end (`lib_gdal_spark.plans.curate`) —
 
   read pages -> lang-id + token-count + Gopher quality rules (pure
   Catalyst column math) -> filter -> EXACT dedup (md5 groupBy, min-id
-  keep) -> MinHash signatures (shingle explode + 8 MIN aggs — the
-  shuffle-heavy stage) -> temperature resample (dim-sized agg +
-  broadcast rate join) -> curated parquet sink, with per-partition
-  lineage metrics.
+  keep) -> MinHash signatures (8 array_min columns on each row, no
+  shuffle) -> temperature resample (dim-sized agg + broadcast rate
+  join) -> curated parquet sink, with per-partition lineage metrics.
 
 Deliberately EXCLUDED from the timed probe: the LSH candidate pair-join.
 On the synthetic 20-word-vocab pages its bucket collision rate is an

@@ -102,6 +102,15 @@ _TOK = re.compile(r"[a-z0-9]+")
 _NON_ALNUM = re.compile(r"[^a-zA-Z0-9]")
 
 
+def _minhash(text: str) -> list:
+    """The 8-hash MinHash of one text: min md5('i|' || shingle) over its
+    3-token shingles (a doc under 3 tokens is one shorter shingle)."""
+    toks = _TOK.findall(text.lower())
+    sh = {" ".join(toks[s:s + 3]) for s in range(max(len(toks) - 3, 0) + 1)}
+    return [min(hashlib.md5(f"{i}|{g}".encode()).hexdigest() for g in sh)
+            for i in range(8)]
+
+
 def _curated_urls(pdf: pd.DataFrame) -> list:
     """The curate chain in pandas: quality gate (>= 3 tokens, alnum ratio
     > 0.3) -> min url per distinct text -> docs with a shingle ->
@@ -130,11 +139,15 @@ class TestCurate:
         pdf = pages_pdf[["url", "text", "lang"]]
         dup = pdf.iloc[::7].assign(url=lambda d: "https://mirror.example.org/" + d.url)
         pdf = pd.concat([pdf, dup], ignore_index=True)
-        got = sorted(r.url for r in curate(spark.createDataFrame(pdf))
-                     .select("url").collect())
+        rows = curate(spark.createDataFrame(pdf)).collect()
+        got = sorted(r.url for r in rows)
         want = _curated_urls(pdf)
         assert 0 < len(want) < len(dup) + N
         assert got == want
+        # every curated row carries its text's 8-hash signature
+        mh = [f"mh_{i}" for i in range(8)]
+        assert rows[0].__fields__[3:11] == mh
+        assert all([r[c] for c in mh] == _minhash(r.text) for r in rows)
 
 
 def _run_script(name: str, tmp_path) -> dict:

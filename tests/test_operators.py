@@ -277,6 +277,33 @@ class TestDedup:
         got = {(r.id_a, r.id_b) for r in pairs.itertuples()}
         assert (0, 1) in got  # identical text -> identical simhash
 
+    def test_minhash_signature_edge_rows(self, spark):
+        """Signatures equal a hashlib recomputation: 3-token shingles, a
+        doc of 1 or 2 tokens is one shorter shingle, and a doc with no
+        token (None, "", punctuation, non-[a-z0-9] script) has no row."""
+        import hashlib
+        import re
+
+        texts = [None, "", "!!! ... ---", "   ", "Hello", "two words",
+                 "three word doc", "a b c d e f a b c",
+                 "café naïve Straße ünïcode ok", "ÄÖÜ 123 x_y-z",
+                 "日本語 テキスト"]
+        df = spark.createDataFrame(list(enumerate(texts)),
+                                   "doc_id long, text string")
+        got = {r["doc_id"]: [r[f"mh_{i}"] for i in range(8)] for r in
+               dedup.minhash_signature(df, "doc_id", "text").collect()}
+        want = {}
+        for doc_id, t in enumerate(texts):
+            toks = re.findall("[a-z0-9]+", (t or "").lower())
+            if not toks:
+                continue
+            sh = {" ".join(toks[s:s + 3])
+                  for s in range(max(len(toks) - 3, 0) + 1)}
+            want[doc_id] = [min(hashlib.md5(f"{i}|{g}".encode()).hexdigest()
+                                for g in sh) for i in range(8)]
+        assert sorted(want) == [4, 5, 6, 7, 8, 9]
+        assert got == want
+
 
 # ------------------------------------------------------------ similarity
 class TestSimilarity:

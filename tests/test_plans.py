@@ -8,7 +8,8 @@ Checks (via explain(formatted)) that:
   of the big side);
 - aggregations are partial (map-side combine) before the exchange;
 - the two-phase spatial predicate runs after the cell join, not in the
-  scan, and no polygon set plans a Python stage.
+  scan, and no polygon set plans a Python stage;
+- every tokenizing operator runs its tokenizer regex once per row.
 """
 
 import re
@@ -484,23 +485,61 @@ class TestWebtextNewPlans:
         spark.catalog.clearCache()
 
 
-class TestMinhashPlan:
-    def test_minhash_signature_single_exchange(self, spark):
-        """The only shuffle is the per-doc MIN agg (map-side combined):
-        shingles feed the partial agg distinct-free — MIN is duplicate-
-        insensitive, so a set-semantics exchange of the shingle table
-        (the widest table in any dedup job) would be pure waste."""
-        from lib_gdal_spark.operators import dedup
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
 
-        df = spark.createDataFrame(
+
+def _md5_gram_hash(c):
+    # the driver contract's winnow hash (__spark_entry__._q_winnow)
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
+def _tokenizing_ops():
+    from lib_gdal_spark.operators import dedup, sampling, textops
+
+    return {
+        "shingles": lambda d: dedup.shingles(d, "doc_id", "text"),
+        "minhash_signature": lambda d: dedup.minhash_signature(
+            d, "doc_id", "text"),
+        "with_minhash": lambda d: dedup.with_minhash(d, "text"),
+        "winnow_fingerprints": lambda d: textops.winnow_fingerprints(
+            d, k=3, window=4, hash_fn=_md5_gram_hash),
+        "repetition_ratio": lambda d: textops.repetition_ratio(d),
+        "hashed_ngram_buckets": lambda d: sampling._hashed_ngram_buckets(
+            d, "doc_id", "text", 8, "dsir|"),
+        "simhash": lambda d: dedup.simhash(d, "doc_id", "text"),
+    }
+
+
+class TestMinhashPlan:
+    def _docs(self, spark):
+        return spark.createDataFrame(
             [(i, "w x y z w x y z") for i in range(8)],
             "doc_id long, text string")
-        sig = dedup.minhash_signature(df, "doc_id", "text")
+
+    def test_minhash_signature_no_exchange(self, spark):
+        """The signature is n_hashes columns on each document's own row:
+        no shingle explode, no Exchange at all (neither a shingle-table
+        exchange nor a per-doc MIN aggregate), and the tokenizer runs
+        once per row."""
+        from lib_gdal_spark.operators import dedup
+
+        sig = dedup.minhash_signature(self._docs(spark), "doc_id", "text")
         plan = sig._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 1, plan
-        # and it's the partial-agg exchange: a partial_min aggregate
-        # (SortAggregate — string MIN) runs BEFORE the exchange
-        assert "partial_min" in plan[plan.index("Exchange"):], plan
+        assert "Exchange" not in plan, plan
+        assert "Generate" not in plan, plan
+        assert _optimized(sig).count("regexp_extract_all") == 1
+
+    @pytest.mark.parametrize("op", sorted(_tokenizing_ops()))
+    def test_tokenizer_runs_once(self, spark, op):
+        """Guard against the higher-order-function trap (CLAUDE.md): a
+        token array consumed by a transform() lambda must stay a staged
+        column. If Catalyst inlines it — through a collapsed projection,
+        or a filter on a staged array pushed below its select — the
+        optimized plan holds more than one copy of the tokenizer regex."""
+        out = _tokenizing_ops()[op](self._docs(spark))
+        assert _optimized(out).count("regexp_extract_all") == 1, \
+            _optimized(out)
 
 
 class TestRound4Plans:
