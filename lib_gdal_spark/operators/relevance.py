@@ -56,8 +56,7 @@ def idf(n_docs: int, df: int) -> float:
 
 
 def bm25_scores(df: DataFrame, terms: list[str], *,
-                id_col: str = "doc_id", text_col: str = "text",
-                k1: float = K1, b: float = B) -> DataFrame:
+                id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-document BM25 score for an OR-query over `terms`.
 
     Returns (doc_id, score) with score rounded to 6 dp (see module
@@ -94,8 +93,6 @@ def bm25_scores(df: DataFrame, terms: list[str], *,
           for i, term in enumerate(terms)])
     scored = docs.crossJoin(F.broadcast(stats))
 
-    k1p1 = k1 + 1.0
-    omb = 1.0 - b
     # op order mirrored verbatim by the oracle SQL: avgdl is one exact
     # integer division (BIGINT sums are order-independent), idf's
     # argument is rational, only ln() itself is transcendental.
@@ -105,7 +102,7 @@ def bm25_scores(df: DataFrame, terms: list[str], *,
         tf, dfq = F.col(f"_tf{i}"), F.col(f"_df{i}")
         idf_c = F.log(F.lit(1.0) + ((F.col("n_docs") - dfq) + 0.5)
                       / (dfq + 0.5))
-        c = idf_c * (tf * k1p1) / (tf + k1 * (omb + b * (F.col("dl") / avgdl)))
+        c = idf_c * (tf * K1P1) / (tf + K1 * (ONE_MINUS_B + B * (F.col("dl") / avgdl)))
         return F.when(tf > 0, c).otherwise(F.lit(0.0))
 
     # fixed-order per-doc fold, one slot per term, 0.0 for a term the

@@ -108,11 +108,13 @@ def temperature_resample(df: DataFrame, group_col: str, id_col: str, *,
     for production use, but don't claim an exact oracle for them.
 
     Scale shape: one count aggregate over the (small) group dimension,
-    n_max as a window max over those few per-group rows, and a broadcast
-    join of the per-group rates back onto the corpus — no corpus-wide
-    shuffle at all. Output = input columns + RATE_COL on the kept rows."""
+    n_max as a scalar subquery over those few per-group rows (it reuses
+    the count's exchange; an unpartitioned window would warn on every
+    call), and a broadcast join of the per-group rates back onto the
+    corpus — no corpus-wide shuffle at all. Output = input columns +
+    RATE_COL on the kept rows."""
     counts = df.groupBy(group_col).agg(F.count("*").alias("n_g"))
-    n_max = F.max("n_g").over(Window.partitionBy())
+    n_max = counts.select(F.max("n_g")).scalar()
     ratio = n_max.cast("double") / F.col("n_g").cast("double")
     expo = 1.0 - float(alpha)
     if expo == 0.5:

@@ -21,6 +21,13 @@ Reference semantics re-expressed Spark-first:
   finite vertices the answer is ``point_in_polygon_np``'s bit for bit:
   half-open on the max edges, holes by even-odd parity over all rings.
 
+- Every face is ONE join of the points with the cover whose condition is
+  the whole containment test; only the join type differs: inner -> inner;
+  left, identity, union -> left; semi -> left_semi (each input row once,
+  however many polygons contain it); anti, symdiff -> left_anti. No face
+  needs a unique key, and none deduplicates or re-joins the points; union
+  and symdiff add the point-free polygons from a tiny id anti-join.
+
 Scale design (100 TB / 10^12 pages):
 - the polygon side (admin boundaries) is small: the cover, edges included,
   is built once per (set, zoom) and rides in the plan as a local relation
@@ -229,17 +236,22 @@ def geocode(df: DataFrame, text_col: str = "text", fast: bool = False) -> DataFr
     )
 
 
-def with_tile(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat",
-              prefix: str = "") -> DataFrame:
+def with_tile(df: DataFrame, zoom: int, lon_col: str = "lon",
+              lat_col: str = "lat") -> DataFrame:
     """Add tile_x/tile_y (XYZ) + cell id columns — pure Catalyst math."""
     tx = mercator.tile_x_col(F.col(lon_col), zoom)
     ty = mercator.tile_y_col(F.col(lat_col), zoom)
     return (
-        df.withColumn(f"{prefix}tile_x", tx)
-        .withColumn(f"{prefix}tile_y", ty)
-        .withColumn(f"{prefix}cell", cell_encode_col(F.col(f"{prefix}tile_x"),
-                                                     F.col(f"{prefix}tile_y"), zoom))
+        df.withColumn("tile_x", tx)
+        .withColumn("tile_y", ty)
+        .withColumn("cell", cell_encode_col(F.col("tile_x"), F.col("tile_y"), zoom))
     )
+
+
+# the one join each face makes (see spatial_join)
+_JOIN_TYPE = {"inner": "inner", "left": "left", "semi": "left_semi",
+              "anti": "left_anti", "identity": "left", "union": "left",
+              "symdiff": "left_anti"}
 
 
 def spatial_join(
@@ -250,14 +262,21 @@ def spatial_join(
     lon_col: str = "lon",
     lat_col: str = "lat",
     exact: bool = True,
-    key_col: str | None = None,
 ) -> DataFrame:
     """Join points to the polygons containing them. Output = points columns +
     ``poly_id`` (null for unmatched rows under how='left').
 
-    how: 'inner' | 'left' (left keeps unmatched points with poly_id NULL —
-    the OGR left-join shape) | 'semi' (points in >=1 polygon, deduped) |
-    'anti' (points in no polygon) | the three layer-algebra faces below.
+    Every face is one join of the points with the broadcast cover whose
+    condition is the whole containment test (cell equality, the closed
+    envelope, the ray-cast); only the join type differs:
+
+    - 'inner' (inner): one row per (point, containing polygon);
+    - 'left' (left): the OGR left-join shape — an unmatched point keeps
+      one row with poly_id NULL;
+    - 'semi' (left_semi): each input row once if >= 1 polygon contains it
+      (duplicate input rows stay duplicates);
+    - 'anti' (left_anti): the input rows no polygon contains;
+    - the layer-algebra faces below.
 
     Layer-algebra faces (the reference's Layer.Identity/Union/
     SymDifference, ogr/ogrsf_frmts/generic/ogrlayer.cpp:6589, :5622,
@@ -265,19 +284,14 @@ def spatial_join(
     recast for point inputs where "intersects" is exact containment and
     a method polygon's non-intersecting part is the whole polygon iff it
     contains no input point:
-    - 'identity':  matched points (with poly_id + poly_area) + unmatched
-      points (method fields NULL) — every input row survives, method
-      attributes attach where covered;
+    - 'identity' (left, then poly_area from the broadcast attribute
+      table): every input row survives, method attributes attach where
+      covered, NULL elsewhere;
     - 'union':     identity rows + one row per polygon containing NO
       point (input fields NULL, method fields set);
-    - 'symdiff':   unmatched points + point-free polygons only.
+    - 'symdiff' (left_anti, method fields NULL): unmatched points +
+      point-free polygons only.
     All three return points columns + (poly_id, poly_area).
-
-    key_col: a UNIQUE row id column used by the left/anti faces to find
-    unmatched points (defaults to the FIRST column of `points`, which the
-    caller must guarantee unique — url/doc_id in the page tables). The
-    anti-join runs on this single narrow key, so the exchange never
-    hashes or dedups wide payload columns (html at page scale).
 
     exact=True decides containment as the ray-cast kernel does
     (geo/pip.py): the closed exterior envelope test, then the even-odd
@@ -285,6 +299,8 @@ def spatial_join(
     Catalyst — half-open on the max edges, holes excluded. exact=False
     keeps only the closed envelope test: a superset of the exact answer.
     """
+    if how not in _JOIN_TYPE:
+        raise ValueError(f"unknown how={how!r}")
     spark = points.sparkSession
     # ALWAYS derive the join cell at THIS zoom — a pre-existing `cell`
     # column may be indexed at a different zoom and would silently join to
@@ -296,81 +312,54 @@ def spatial_join(
     )
     pts = points.withColumn("_jcell", jcell)
 
+    # a local relation of known size: the planner broadcasts it unhinted
     cover = spark.createDataFrame(
         polys._cover(zoom),
-        schema="_jcell long, poly_id long, xmin double, ymin double, "
+        schema="_c long, poly_id long, xmin double, ymin double, "
                "xmax double, ymax double, "
                "edges array<struct<x0:double,y0:double,x1:double,y1:double>>",
     )
 
-    # a local relation of known size: the planner broadcasts it unhinted
-    cand = pts.join(cover, on="_jcell", how="inner").drop("_jcell")
-
-    # phase 1b — closed envelope test (ogrlayer.cpp:3753 point-in-envelope
-    # shortcut; point_in_polygon_np's pre-test), then phase 2 — the
-    # ray-cast in point_in_ring_np's float operations, parity over every
-    # ring's edges
+    # phase 1 — the cell equi-join; phase 1b — closed envelope test
+    # (ogrlayer.cpp:3753 point-in-envelope shortcut; point_in_polygon_np's
+    # pre-test); phase 2 — the ray-cast in point_in_ring_np's float
+    # operations, parity over every ring's edges
     x, y = F.col(lon_col), F.col(lat_col)
-    keep = ((x >= F.col("xmin")) & (x <= F.col("xmax"))
-            & (y >= F.col("ymin")) & (y <= F.col("ymax")))
+    inside = ((F.col("_jcell") == F.col("_c"))
+              & (x >= F.col("xmin")) & (x <= F.col("xmax"))
+              & (y >= F.col("ymin")) & (y <= F.col("ymax")))
     if exact:
-        keep = keep & F.aggregate("edges", F.lit(False), lambda acc, e: acc != (
+        inside = inside & F.aggregate("edges", F.lit(False), lambda acc, e: acc != (
             ((e.y1 > y) != (e.y0 > y))
             & (x < (e.x0 - e.x1) * (y - e.y1) / (e.y0 - e.y1) + e.x1)))
-    cand = cand.filter(keep).drop("xmin", "ymin", "xmax", "ymax", "edges")
 
-    if how == "inner":
-        return cand
-    if how == "semi":
-        return cand.drop("poly_id").distinct()
-    key = key_col
-    if key is None:
-        # The key-based faces (left/anti/identity/union/symdiff) anti-join
-        # on this column and silently produce wrong unmatched sets if it
-        # is not unique. When the caller did not choose it, probe
-        # uniqueness with a single narrow-column agg; hot paths should
-        # pass key_col explicitly (a known-unique row id) to skip this.
-        key = points.columns[0]
-        dup = (points.groupBy(key).count()
-               .filter(F.col("count") > 1).limit(1).count())
-        if dup:
-            raise ValueError(
-                f"spatial_join how={how!r}: defaulted key column {key!r} "
-                "is not unique; pass key_col= (a unique row id) explicitly")
-    if how == "anti":
-        return points.join(
-            cand.select(key).distinct(), on=key, how="left_anti",
-        )
-    if how == "left":
-        matched = cand
-        unmatched = points.join(
-            matched.select(key).distinct(), on=key, how="left_anti",
-        ).withColumn("poly_id", F.lit(None).cast("long"))
-        return matched.unionByName(unmatched)
-    if how in ("identity", "union", "symdiff"):
-        attrs = F.broadcast(polys.attrs_df(spark))
-        out_cols = [*points.columns, "poly_id", "poly_area"]
-        unmatched = points.join(
-            cand.select(key).distinct(), on=key, how="left_anti",
-        ).withColumn("poly_id", F.lit(None).cast("long")).withColumn(
+    def join(kind):
+        return pts.join(cover, inside, kind).drop(
+            "_jcell", "_c", "xmin", "ymin", "xmax", "ymax", "edges")
+
+    out = join(_JOIN_TYPE[how])
+    if how in ("inner", "left", "semi", "anti"):
+        return out
+    attrs = F.broadcast(polys.attrs_df(spark))
+    if how == "symdiff":
+        out = out.withColumn("poly_id", F.lit(None).cast("long")).withColumn(
             "poly_area", F.lit(None).cast("double"))
-        matched = cand.join(attrs, on="poly_id", how="left").select(*out_cols)
-        # method features intersecting NO input row (the polygon side of
-        # union/symdiff): tiny anti-join of the id dimension against the
-        # distinct matched ids
-        ids_df = spark.createDataFrame([(int(p),) for p in polys.ids],
-                                       "poly_id long")
-        null_pts = [F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in points.schema.fields]
-        method_only = (
-            ids_df.join(cand.select("poly_id").distinct(),
-                        on="poly_id", how="left_anti")
-            .join(attrs, on="poly_id", how="left")
-            .select(*null_pts, "poly_id", "poly_area")
-        )
-        if how == "identity":
-            return matched.unionByName(unmatched)
-        if how == "union":
-            return matched.unionByName(unmatched).unionByName(method_only)
-        return unmatched.unionByName(method_only)  # symdiff
-    raise ValueError(f"unknown how={how}")
+    else:
+        out = out.join(attrs, on="poly_id", how="left").select(
+            *points.columns, "poly_id", "poly_area")
+    if how == "identity":
+        return out
+    # method features intersecting NO input row (the polygon side of
+    # union/symdiff): tiny anti-join of the id dimension against the
+    # distinct matched ids
+    ids_df = spark.createDataFrame([(int(p),) for p in polys.ids],
+                                   "poly_id long")
+    null_pts = [F.lit(None).cast(f.dataType).alias(f.name)
+                for f in points.schema.fields]
+    method_only = (
+        ids_df.join(join("inner").select("poly_id").distinct(),
+                    on="poly_id", how="left_anti")
+        .join(attrs, on="poly_id", how="left")
+        .select(*null_pts, "poly_id", "poly_area")
+    )
+    return out.unionByName(method_only)

@@ -76,10 +76,10 @@ def tile_pyramid(points: DataFrame, max_zoom: int = 14,
     )
 
 
-def write_pyramid(pyramid: DataFrame, path: str,
-                  mode: str = "overwrite") -> None:
-    """Materialize partitioned by z (the Iceberg-partition layout stand-in:
-    partition column z, file-level min/max stats on x/y give pruning).
+def write_pyramid(pyramid: DataFrame, path: str) -> None:
+    """Materialize partitioned by z, replacing what is at `path` (the
+    Iceberg-partition layout stand-in: partition column z, file-level
+    min/max stats on x/y give pruning).
 
     Keeps the pyramid's existing hash partitioning (no extra shuffle) and
     sorts (z, x, y) within each task so every output file's row groups
@@ -88,7 +88,7 @@ def write_pyramid(pyramid: DataFrame, path: str,
     stays at the task count, not the zoom count."""
     (
         pyramid.sortWithinPartitions("z", "x", "y")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("z")
         .parquet(path)
     )

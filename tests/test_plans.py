@@ -85,6 +85,30 @@ def _plan_sets():
             "star": sjoin.PolygonSet([star])}
 
 
+def _final_nodes(plan):
+    """(ids of the final plan's nodes, {id: node detail text}) from an
+    executed formatted explain. Formatted explain numbers nodes children
+    first, so a node above another has the larger id."""
+    assert "isFinalPlan=true" in plan
+    ids = {int(i) for i in re.findall(r"\((\d+)\)",
+                                      plan.split("== Initial Plan ==")[0])}
+    nodes = {int(m[1]): m[0] for m in re.finditer(
+        r"^\((\d+)\) .*?(?=^\(\d+\) |\Z)", plan, re.S | re.M)}
+    return ids, nodes
+
+
+def _job_count(spark, fn):
+    """Spark jobs run by ``fn()``, counted by job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 class TestSpatialJoinPlan:
     def test_cover_join_is_broadcast(self, spark):
         pdf = spark.createDataFrame(
@@ -95,13 +119,7 @@ class TestSpatialJoinPlan:
             j = sjoin.spatial_join(pdf, polys, zoom=6, how="inner")
             j.collect()
             plan = explain_str(j)
-            assert "isFinalPlan=true" in plan, name
-            # formatted explain numbers nodes children first, so a node
-            # above another has the larger id
-            ids = {int(i) for i in re.findall(r"\((\d+)\)",
-                                              plan.split("== Initial Plan ==")[0])}
-            nodes = {int(m[1]): m[0] for m in re.finditer(
-                r"^\((\d+)\) .*?(?=^\(\d+\) |\Z)", plan, re.S | re.M)}
+            ids, nodes = _final_nodes(plan)
             bhj = [i for i in ids if nodes[i].split()[1] == "BroadcastHashJoin"]
             assert len(bhj) == 1, name
             # the exact ray-cast runs after the cell join (two-phase
@@ -120,16 +138,9 @@ class TestSpatialJoinPlan:
             [(f"u{i}", float(i % 50), float(i % 30)) for i in range(100)],
             "url string, lon double, lat double",
         )
-        sc = spark.sparkContext
         for name in ("box", "mixed"):
-            group = f"sjoin-{uuid.uuid4().hex}"
-            sc.setJobGroup(group, group)
-            try:
-                j = sjoin.spatial_join(pdf, _plan_sets()[name], zoom=6, how="inner")
-                j.collect()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2, name
+            j = sjoin.spatial_join(pdf, _plan_sets()[name], zoom=6, how="inner")
+            assert _job_count(spark, j.collect) <= 2, name
             plan = explain_str(j)
             assert "isFinalPlan=true" in plan
             assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
@@ -154,10 +165,12 @@ class TestSpatialJoinPlan:
         assert "BroadcastHashJoin" in final
         assert "SortMergeJoin" not in final
 
-    def test_left_face_anti_join_on_narrow_key(self, spark):
-        # the left face finds unmatched points by anti-joining on ONE
-        # unique key column — wide payload columns (html at page scale)
-        # must never appear in an exchange hash key or aggregate key
+    @pytest.mark.parametrize("how", ["left", "semi", "anti", "identity"])
+    def test_face_is_one_broadcast_join(self, spark, how):
+        # every face is one join of the points with the broadcast cover
+        # under the containment test: no exchange or aggregate over the
+        # points (wide payload columns, html at page scale, are never
+        # hashed or deduplicated) and one join carries the ray-cast
         pdf = spark.createDataFrame(
             [(f"u{i}", float(i % 50), float(i % 30), b"x" * 10) for i in range(100)],
             "url string, lon double, lat double, html binary",
@@ -165,14 +178,39 @@ class TestSpatialJoinPlan:
         polys = sjoin.PolygonSet(
             [(1, [np.array([[0.0, 0.0], [40.0, 0.0], [40.0, 25.0], [0.0, 25.0], [0.0, 0.0]])])]
         )
-        j = sjoin.spatial_join(pdf, polys, zoom=6, how="left")
-        plan = explain_str(j)
-        for line in plan.splitlines():
-            if "hashpartitioning" in line or "HashAggregate" in line:
-                assert "html" not in line.split("ReadSchema")[0], line
-        # and the matched-keys dedup is on the key alone, never full rows
-        assert "html" not in "".join(
-            l for l in plan.splitlines() if "HashAggregate" in l)
+        j = sjoin.spatial_join(pdf, polys, zoom=6, how=how)
+        j.collect()
+        ids, nodes = _final_nodes(explain_str(j))
+        kinds = [nodes[i].split()[1] for i in ids]
+        assert "Exchange" not in kinds and "HashAggregate" not in kinds, kinds
+        cast = [i for i in ids if "aggregate(" in nodes[i]]
+        assert len(cast) == 1 and nodes[cast[0]].split()[1] == "BroadcastHashJoin", kinds
+
+    def test_faces_run_no_more_jobs_than_inner(self, spark, tmp_path):
+        # left/semi/anti are one join each, like inner: no uniqueness
+        # probe, no second pass over the points; and no face runs a job
+        # before an action
+        import __spark_entry__ as em
+
+        spark.range(5000).select(
+            F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+            ((F.col("id") * 7919 % 3600) / 10.0 - 180.0).alias("lon"),
+            ((F.col("id") * 9973 % 1700) / 10.0 - 85.0).alias("lat"),
+        ).write.parquet(str(tmp_path / "pts"))
+        pts = spark.read.parquet(str(tmp_path / "pts"))
+        polys = em._rect_polyset()
+
+        def run(how):
+            return _job_count(spark, lambda: sjoin.spatial_join(
+                pts, polys, zoom=7, how=how).write.format("noop").mode("overwrite").save())
+
+        inner = run("inner")
+        assert inner >= 1
+        for how in ("left", "semi", "anti"):
+            assert run(how) <= inner, how
+        for how in ("inner", "left", "semi", "anti", "identity", "union", "symdiff"):
+            assert _job_count(spark, lambda: sjoin.spatial_join(
+                pts, polys, zoom=7, how=how)) == 0, how
 
     def test_no_python_in_prefilter(self, spark):
         # phase 1 (cell assignment + cover join) must be pure JVM

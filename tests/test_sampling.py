@@ -187,6 +187,16 @@ class TestTemperatureResample:
                                            "id").collect())
         assert one == many
 
+    def test_no_window_in_plan(self, spark):
+        # n_max is a scalar subquery over the group counts: an
+        # unpartitioned window would warn "No Partition Defined" per call
+        out = temperature_resample(self._skewed(spark), "grp", "id")
+        out.collect()
+        plan = out._sc._jvm.PythonSQLUtils.explainString(
+            out._jdf.queryExecution(), "formatted")
+        assert "isFinalPlan=true" in plan
+        assert "Window" not in plan, plan
+
     def test_sql_twin_matches(self, spark):
         import duckdb
 
