@@ -9645,7 +9645,7 @@ FROM hit WHERE rn = 1
 # ------------------------------------------------------------------- entry
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship pipeline on sf0.001: pages -> cell index -> exact-PIP
+    """Flagship pipeline on sf0.001: pages -> tile_x/tile_y -> exact-PIP
     spatial join to polygons -> zoom 0-8 tile pyramid of join rows."""
     sf_dir = "/root/testdata/sf0.001"
     p = sjoin.with_tile(_pages(spark, sf_dir), zoom=8)

@@ -3,33 +3,22 @@
 The reference indexes space with quadtrees (.qix sidecars, alg/gdalgrid.cpp
 quadtree search), packed Hilbert R-trees
 (ogr/ogrsf_frmts/flatgeobuf/packedrtree.h:120) and SQLite R-trees
-(ogr/ogrsf_frmts/gpkg/ogrgeopackagetablelayer.cpp:1659). In a distributed
-engine the index becomes a *partitioning key*: we encode each point's
-(tile_x, tile_y, zoom) into a single int64 so that
-
-- equality on cell_id is an equi-join key (hash-partitionable, AQE-skew-safe),
-- min/max column stats on cell_id give parquet row-group skipping
-  (the Spark analog of ogrparquetlayer.cpp:257-381 geo-stats row-group
-  pruning), because z-order preserves locality,
-- a parent cell is a constant-time bit-shift of a child (pyramid rollups).
+(ogr/ogrsf_frmts/gpkg/ogrgeopackagetablelayer.cpp:1659). A cell id packs
+(tile_x, tile_y, zoom) into a single int64 whose z-order preserves
+locality, and whose parent cell is a constant-time bit-shift of a child.
 
 Layout (id is a non-negative int64):
     bits 58..62 : zoom (0..29)
     bits  0..57 : Morton interleave of (x, y), x at even bit positions
 
-Pure functions, NumPy-vectorized; Column versions build the identical
-shift/mask expression tree JVM-side (no UDF in the hot path).
+Pure NumPy-vectorized functions: the kernels of the ``cell_id`` and
+``cell_parent`` SQL functions (functions/__init__.py). The spatial join
+keys on the tile pair itself (operators/sjoin.py), not on a cell id.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-try:
-    from pyspark.sql import Column
-    from pyspark.sql import functions as F
-except Exception:  # pragma: no cover
-    F = None
 
 _MASKS = (
     (16, np.uint64(0x0000FFFF0000FFFF)),
@@ -128,29 +117,3 @@ def ring_shell_np(cell: int, k: int) -> np.ndarray:
     return np.array(
         [c for c in k_ring_np(cell, k).tolist() if c not in inner], dtype=np.int64
     )
-
-
-# --------------------------------------------------------------- Column side
-
-def _spread_col(v: "Column") -> "Column":
-    v = v.cast("long").bitwiseAND(F.lit((1 << 29) - 1))
-    for shift, mask in _MASKS:
-        v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(int(mask)))
-    return v
-
-
-def cell_encode_col(x: "Column", y: "Column", zoom) -> "Column":
-    """Column version of cell_encode_np — pure bit ops, codegen'd JVM-side."""
-    z = F.lit(zoom) if isinstance(zoom, int) else zoom
-    morton = _spread_col(x).bitwiseOR(F.shiftleft(_spread_col(y), 1))
-    return morton.bitwiseOR(F.shiftleft(z.cast("long"), ZOOM_SHIFT))
-
-
-def cell_zoom_col(cell: "Column") -> "Column":
-    return F.shiftright(cell, ZOOM_SHIFT).bitwiseAND(F.lit(31))
-
-
-def cell_parent_col(cell: "Column", steps: int = 1) -> "Column":
-    morton = cell.bitwiseAND(F.lit((1 << ZOOM_SHIFT) - 1))
-    nz = cell_zoom_col(cell) - F.lit(steps)
-    return F.shiftright(morton, 2 * steps).bitwiseOR(F.shiftleft(nz, ZOOM_SHIFT))

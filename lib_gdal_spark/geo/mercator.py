@@ -90,20 +90,15 @@ def pixels_to_tile_np(px, py):
     return tx, ty
 
 
-def lonlat_to_tile_np(lon, lat, zoom: int, xyz: bool = True):
-    """lon/lat -> (tx, ty) tile indices, clamped to [0, 2^z-1].
-
-    xyz=True returns slippy/XYZ y (top-left origin, gdal2tiles GetYTile
-    flip); xyz=False returns TMS y.
-    """
+def lonlat_to_tile_np(lon, lat, zoom: int):
+    """lon/lat -> XYZ (tx, ty) tile indices, clamped to [0, 2^z-1]: the
+    TMS row flipped to a top-left origin (gdal2tiles GetYTile)."""
     mx, my = lonlat_to_meters_np(lon, lat)
     px, py = meters_to_pixels_np(mx, my, zoom)
     tx, ty = pixels_to_tile_np(px, py)
     n = np.int64(2 ** zoom)
     tx = np.clip(tx, 0, n - 1)
-    ty = np.clip(ty, 0, n - 1)
-    if xyz:
-        ty = n - 1 - ty
+    ty = n - 1 - np.clip(ty, 0, n - 1)
     return tx, ty
 
 
@@ -151,14 +146,11 @@ def meters_y_col(lat: "Column") -> "Column":
     )
 
 
-def tile_x_col(lon: "Column", zoom) -> "Column":
-    """XYZ tile x from lon; ceil-minus-one rule, clamped. zoom: int or Column."""
-    zoom = F.lit(zoom) if isinstance(zoom, int) else zoom
-    res = F.lit(INITIAL_RESOLUTION) / F.pow(F.lit(2.0), zoom.cast("double"))
-    px = (meters_x_col(lon) + F.lit(ORIGIN_SHIFT)) / res
+def tile_x_col(lon: "Column", zoom: int) -> "Column":
+    """XYZ tile x from lon; ceil-minus-one rule, clamped to [0, 2^z-1]."""
+    px = (meters_x_col(lon) + F.lit(ORIGIN_SHIFT)) / F.lit(resolution(zoom))
     tx = (F.ceil(px / F.lit(float(TILE_SIZE))) - 1).cast("long")
-    n = F.pow(F.lit(2.0), zoom.cast("double")).cast("long")
-    return F.greatest(F.lit(0).cast("long"), F.least(tx, n - 1))
+    return F.greatest(F.lit(0), F.least(tx, F.lit(2 ** zoom - 1)))
 
 
 def tile_size_meters(zoom: int) -> float:
@@ -176,10 +168,10 @@ def tile_center_lon_col(x: "Column", zoom: int) -> "Column":
     ) / F.lit(ORIGIN_SHIFT) * F.lit(180.0)
 
 
-def tile_center_lat_col(y: "Column", zoom: int, xyz: bool = True) -> "Column":
-    """Lat of the CENTER of tile row y — inverse Mercator
-    (gdal2tiles.py:431-440 MetersToLatLon). For XYZ y (top-left origin)
-    the TMS flip folds into my = ORIGIN_SHIFT - (y + 0.5) * tile_size_m.
+def tile_center_lat_col(y: "Column", zoom: int) -> "Column":
+    """Lat of the CENTER of XYZ tile row y — inverse Mercator
+    (gdal2tiles.py:431-440 MetersToLatLon), with the TMS flip folded
+    into my = ORIGIN_SHIFT - (y + 0.5) * tile_size_m.
 
     TRANSCENDENTAL (atan/exp): engines may differ in the last ulp, so
     downstream use must be ulp-tolerant — index arithmetic (floor into a
@@ -187,10 +179,7 @@ def tile_center_lat_col(y: "Column", zoom: int, xyz: bool = True) -> "Column":
     The duckdb twin (_dd_tile_center_lat in __spark_entry__) mirrors this
     op order term by term."""
     s = tile_size_meters(zoom)
-    if xyz:
-        my = F.lit(ORIGIN_SHIFT) - (y.cast("double") + F.lit(0.5)) * F.lit(s)
-    else:
-        my = (y.cast("double") + F.lit(0.5)) * F.lit(s) - F.lit(ORIGIN_SHIFT)
+    my = F.lit(ORIGIN_SHIFT) - (y.cast("double") + F.lit(0.5)) * F.lit(s)
     inner = my / F.lit(ORIGIN_SHIFT) * F.lit(180.0)
     return (
         F.lit(2.0) * F.atan(F.exp(inner * F.lit(math.pi / 180.0)))
@@ -198,14 +187,10 @@ def tile_center_lat_col(y: "Column", zoom: int, xyz: bool = True) -> "Column":
     ) * F.lit(180.0 / math.pi)
 
 
-def tile_y_col(lat: "Column", zoom, xyz: bool = True) -> "Column":
-    """Tile y from lat (XYZ by default — gdal2tiles GetYTile flip)."""
-    zoom = F.lit(zoom) if isinstance(zoom, int) else zoom
-    res = F.lit(INITIAL_RESOLUTION) / F.pow(F.lit(2.0), zoom.cast("double"))
-    py = (meters_y_col(lat) + F.lit(ORIGIN_SHIFT)) / res
+def tile_y_col(lat: "Column", zoom: int) -> "Column":
+    """XYZ tile y from lat: the TMS row by the ceil-minus-one rule,
+    clamped to [0, 2^z-1], then flipped (gdal2tiles GetYTile)."""
+    last = 2 ** zoom - 1
+    py = (meters_y_col(lat) + F.lit(ORIGIN_SHIFT)) / F.lit(resolution(zoom))
     ty = (F.ceil(py / F.lit(float(TILE_SIZE))) - 1).cast("long")
-    n = F.pow(F.lit(2.0), zoom.cast("double")).cast("long")
-    ty = F.greatest(F.lit(0).cast("long"), F.least(ty, n - 1))
-    if xyz:
-        ty = n - 1 - ty
-    return ty
+    return F.lit(last) - F.greatest(F.lit(0), F.least(ty, F.lit(last)))

@@ -1,4 +1,4 @@
-"""Two-phase distributed spatial join: cell pre-filter + exact ray-cast.
+"""Two-phase distributed spatial join: tile pre-filter + exact ray-cast.
 
 Reference semantics re-expressed Spark-first:
 
@@ -10,10 +10,12 @@ Reference semantics re-expressed Spark-first:
   ``InstallFilter`` / :3824 ``FilterGeometry``): a cheap envelope test first,
   the exact geometry test only on survivors.
 
-- Here phase 1 (cheap) is a *cell equi-join*: every point carries a z-order
-  cell id (Catalyst column math, geo/cells.py); every polygon is exploded to
-  the cells its geometry covers. The join on ``cell`` is hash-partitionable,
-  broadcastable, and prunable. Phase 2 (exact) is one Catalyst expression
+- Here phase 1 (cheap) is a *tile-pair equi-join*: every point carries its
+  XYZ tile (x, y) at the join zoom (Catalyst column math, geo/mercator.py);
+  every polygon is exploded to the tiles its geometry covers. The two int
+  keys pack into one long, so the join is hash-partitionable and
+  broadcastable as a single-long hashed relation; nothing rolls cells up,
+  so the key needs equality only. Phase 2 (exact) is one Catalyst expression
   for every polygon: the closed exterior envelope test, then the ray-cast
   of geo/pip.py (semantics of ogr/ogrlinearring.cpp:452-521) as an
   ``aggregate`` over the polygon's edges, which ride in the cover rows.
@@ -51,7 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..geo import mercator
-from ..geo.cells import cell_encode_col, cell_encode_np
+from ..geo.cells import MAX_ZOOM
 from ..geo.pip import envelope_np, point_in_polygon_np
 from ..pages.synth import GEOTAG_RE
 
@@ -161,15 +163,16 @@ class PolygonSet:
         return spark.createDataFrame(rows, "poly_id long, poly_area double")
 
     def cover_cells(self, zoom: int, with_bbox: bool = False) -> pd.DataFrame:
-        """(cell, poly_id[, xmin..ymax]) covering table at `zoom` (XYZ
-        tiles as cells).
+        """(x, y, poly_id[, xmin..ymax]) covering table at `zoom`: the int32
+        XYZ tiles each polygon touches.
 
         bbox cover, refined by an exact rect-polygon intersects test so
-        fully-outside cells are dropped (fewer phase-1 candidates).
+        fully-outside tiles are dropped (fewer phase-1 candidates).
         with_bbox=True appends the polygon envelope columns so the join
         can run the Catalyst-side envelope pre-test (ogrlayer.cpp:3753).
         """
-        rows_cell, rows_pid = [], []
+        empty = np.empty(0, np.int64)
+        rows_x, rows_y, rows_pid = [empty], [empty], [empty]
         for pid in self.ids:
             rings = self.rings[pid]
             xmin, ymin, xmax, ymax = envelope_np(rings)
@@ -183,16 +186,12 @@ class PolygonSet:
                 keep = _cells_intersect(
                     rings, *mercator.tile_bounds_lonlat_np(gx, gy, zoom))
                 gx, gy = gx[keep], gy[keep]
-            cells = cell_encode_np(gx.astype(np.uint64), gy.astype(np.uint64), zoom)
-            rows_cell.append(cells)
-            rows_pid.append(np.full(len(cells), pid, dtype=np.int64))
-        if not rows_cell:
-            out = pd.DataFrame({"cell": np.empty(0, np.int64),
-                                "poly_id": np.empty(0, np.int64)})
-        else:
-            out = pd.DataFrame(
-                {"cell": np.concatenate(rows_cell), "poly_id": np.concatenate(rows_pid)}
-            )
+            rows_x.append(gx)
+            rows_y.append(gy)
+            rows_pid.append(np.full(len(gx), pid, dtype=np.int64))
+        out = pd.DataFrame({"x": np.concatenate(rows_x).astype(np.int32),
+                            "y": np.concatenate(rows_y).astype(np.int32),
+                            "poly_id": np.concatenate(rows_pid)})
         if with_bbox:
             box = pd.DataFrame(self.boxes, columns=["xmin", "ymin", "xmax", "ymax"])
             box["poly_id"] = self.ids
@@ -238,14 +237,10 @@ def geocode(df: DataFrame, text_col: str = "text", fast: bool = False) -> DataFr
 
 def with_tile(df: DataFrame, zoom: int, lon_col: str = "lon",
               lat_col: str = "lat") -> DataFrame:
-    """Add tile_x/tile_y (XYZ) + cell id columns — pure Catalyst math."""
-    tx = mercator.tile_x_col(F.col(lon_col), zoom)
-    ty = mercator.tile_y_col(F.col(lat_col), zoom)
-    return (
-        df.withColumn("tile_x", tx)
-        .withColumn("tile_y", ty)
-        .withColumn("cell", cell_encode_col(F.col("tile_x"), F.col("tile_y"), zoom))
-    )
+    """Add the XYZ tile columns tile_x/tile_y at `zoom` — pure Catalyst
+    math."""
+    return df.withColumns({"tile_x": mercator.tile_x_col(F.col(lon_col), zoom),
+                           "tile_y": mercator.tile_y_col(F.col(lat_col), zoom)})
 
 
 # the one join each face makes (see spatial_join)
@@ -267,8 +262,8 @@ def spatial_join(
     ``poly_id`` (null for unmatched rows under how='left').
 
     Every face is one join of the points with the broadcast cover whose
-    condition is the whole containment test (cell equality, the closed
-    envelope, the ray-cast); only the join type differs:
+    condition is the whole containment test (tile equality at `zoom`, the
+    closed envelope, the ray-cast); only the join type differs:
 
     - 'inner' (inner): one row per (point, containing polygon);
     - 'left' (left): the OGR left-join shape — an unmatched point keeps
@@ -298,34 +293,35 @@ def spatial_join(
     count of +x ray crossings over the edges of all rings, both in
     Catalyst — half-open on the max edges, holes excluded. exact=False
     keeps only the closed envelope test: a superset of the exact answer.
+
+    `zoom` must lie in [0, MAX_ZOOM], where a tile index fits an int key.
     """
     if how not in _JOIN_TYPE:
         raise ValueError(f"unknown how={how!r}")
+    if not 0 <= zoom <= MAX_ZOOM:
+        raise ValueError(f"zoom={zoom} outside [0, {MAX_ZOOM}]")
     spark = points.sparkSession
-    # ALWAYS derive the join cell at THIS zoom — a pre-existing `cell`
-    # column may be indexed at a different zoom and would silently join to
-    # nothing (cell ids embed their zoom in the high bits)
-    jcell = cell_encode_col(
-        mercator.tile_x_col(F.col(lon_col), zoom),
-        mercator.tile_y_col(F.col(lat_col), zoom),
-        zoom,
-    )
-    pts = points.withColumn("_jcell", jcell)
+    # ALWAYS derive the join tile from lon/lat at THIS zoom: the points'
+    # own tile_x/tile_y, if any, may sit at another zoom (the flagship
+    # tiles at z12 and joins at z7) and would join to the wrong tiles
+    pts = points.withColumns({
+        "_jx": mercator.tile_x_col(F.col(lon_col), zoom).cast("int"),
+        "_jy": mercator.tile_y_col(F.col(lat_col), zoom).cast("int")})
 
     # a local relation of known size: the planner broadcasts it unhinted
     cover = spark.createDataFrame(
         polys._cover(zoom),
-        schema="_c long, poly_id long, xmin double, ymin double, "
+        schema="_x int, _y int, poly_id long, xmin double, ymin double, "
                "xmax double, ymax double, "
                "edges array<struct<x0:double,y0:double,x1:double,y1:double>>",
     )
 
-    # phase 1 — the cell equi-join; phase 1b — closed envelope test
+    # phase 1 — the tile-pair equi-join; phase 1b — closed envelope test
     # (ogrlayer.cpp:3753 point-in-envelope shortcut; point_in_polygon_np's
     # pre-test); phase 2 — the ray-cast in point_in_ring_np's float
     # operations, parity over every ring's edges
     x, y = F.col(lon_col), F.col(lat_col)
-    inside = ((F.col("_jcell") == F.col("_c"))
+    inside = ((F.col("_jx") == F.col("_x")) & (F.col("_jy") == F.col("_y"))
               & (x >= F.col("xmin")) & (x <= F.col("xmax"))
               & (y >= F.col("ymin")) & (y <= F.col("ymax")))
     if exact:
@@ -335,7 +331,7 @@ def spatial_join(
 
     def join(kind):
         return pts.join(cover, inside, kind).drop(
-            "_jcell", "_c", "xmin", "ymin", "xmax", "ymax", "edges")
+            "_jx", "_jy", "_x", "_y", "xmin", "ymin", "xmax", "ymax", "edges")
 
     out = join(_JOIN_TYPE[how])
     if how in ("inner", "left", "semi", "anti"):

@@ -1,8 +1,8 @@
 """The engine's two batch jobs, each defined once.
 
-``flagship``: pages -> geotag -> z12 cell index -> exact spatial join
-(z7 polygon cover) -> ``joined/`` sink, and pages -> geotag -> z12 cell
-index -> z0..z12 tile pyramid -> ``pyramid/`` sink, with per-partition
+``flagship``: pages -> geotag -> z12 tile_x/tile_y -> exact spatial join
+(z7 polygon cover) -> ``joined/`` sink, and pages -> geotag -> z12
+tile_x/tile_y -> z0..z12 tile pyramid -> ``pyramid/`` sink, with per-partition
 lineage rows appended to ``_metrics/`` (metrics.py).
 
 ``curate``: quality gate -> exact dedup -> MinHash signature columns on
@@ -26,8 +26,8 @@ JOIN_ZOOM = 7
 
 def geotag_tiles(pages: DataFrame, zoom: int) -> DataFrame:
     """Pages -> (lon, lat) from the trailing ``@lat,lon`` geotag (the
-    pages-table contract, so ``geocode(fast=True)``) -> tile_x/tile_y/cell
-    at ``zoom``."""
+    pages-table contract, so ``geocode(fast=True)``) -> tile_x/tile_y at
+    ``zoom``."""
     return sjoin.with_tile(sjoin.geocode(pages, fast=True), zoom=zoom)
 
 

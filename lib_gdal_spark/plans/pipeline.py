@@ -27,7 +27,7 @@ barriers). Steps:
     limit <n>
     offset <n>
     grid <cell_size> <radius>         IDW-grid points (x, y, z)
-    tile <zoom>                       add tile_x/tile_y/cell columns
+    tile <zoom>                       add tile_x/tile_y
     pyramid <max_zoom> [min_zoom]     aggregate to the zoom pyramid
     tee <path>                        write a copy, keep flowing
     partition <col,...>               declare Hive partition cols for write
@@ -125,8 +125,8 @@ def _step_grid(ctx, df, args):
 
 
 def _step_tile(ctx, df, args):
-    # engine-native: assign tile_x/tile_y/cell at a zoom (the pipeline
-    # registry's rasterize/grid steps generalized to the cell model)
+    # engine-native: add tile_x/tile_y at a zoom (the pipeline registry's
+    # rasterize/grid steps generalized to the tile model)
     from ..operators import sjoin
 
     return sjoin.with_tile(df, int(args))

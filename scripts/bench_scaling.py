@@ -96,7 +96,7 @@ writer classes/spawns the Python worker pool), then best of
 shows +-20% steal-time noise run-to-run).
 
 Job (timed, per pass): [stage 1] pages parquet (url,text pruned scan) ->
-geotag extraction (JVM byte-scan) -> z12 cell index -> broadcast-cover
+geotag extraction (JVM byte-scan) -> z12 tile_x/tile_y -> broadcast-cover
 exact-ray-cast-PIP spatial join -> parquet join-output sink + per-partition
 lineage metrics; [stage 2] text-only pruned scan -> z12 cell groupBy
 (map-side combine) -> explode + groupBy to z0 -> parquet pyramid sink

@@ -8,7 +8,7 @@ parquet once (production reads an existing pages table; synthesizing it is
 not part of the measured workload — both parallelism levels read the SAME
 files).
 Timed phase: `lib_gdal_spark.plans.flagship` over the pages parquet —
-text geotags -> z12 cell index -> exact spatial join -> joined sink, and
+text geotags -> z12 tile_x/tile_y -> exact spatial join -> joined sink, and
 geotags -> zoom 0-12 pyramid -> partitioned pyramid sink, with
 per-partition lineage metrics.
 

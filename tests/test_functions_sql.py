@@ -179,20 +179,34 @@ class TestStFunctions:
 
 class TestTileFunctions:
     def test_tile_matches_column_api(self, sql, spark):
+        # the SQL forms run mercator.lonlat_to_tile_np; besides a grid,
+        # the points sit on tile edges (lon exact, lat through the inverse
+        # projection), on the +-180 and +-MAX_LAT clamps and past them,
+        # and one coordinate of a row is NaN
+        import numpy as np
         from lib_gdal_spark.geo import mercator
 
-        df = spark.range(100).select(
-            ((F.col("id") * 37 % 360) - 180.0 + 0.5).alias("lon"),
-            ((F.col("id") * 17 % 160) - 80.0 + 0.5).alias("lat"),
-        )
-        df.createOrReplaceTempView("pts")
-        via_sql = sql.sql(
-            "SELECT tile_x(lon, 7) x, tile_y(lat, 7) y FROM pts").toPandas()
-        via_col = df.select(
-            mercator.tile_x_col(F.col("lon"), 7).alias("x"),
-            mercator.tile_y_col(F.col("lat"), 7).alias("y"),
-        ).toPandas()
-        assert (via_sql.values == via_col.values).all()
+        for zoom in (0, 7, 12, 29):
+            n = 2 ** zoom
+            k = np.array(sorted({0, 1, n // 2, n - 1, n}))
+            lon0, lat0, _, _ = mercator.tile_bounds_lonlat_np(k, k, zoom)
+            m = mercator.MAX_LAT
+            rows = [(float(a), float(b)) for a in lon0 for b in lat0] + [
+                (-180.0, -m), (180.0, m), (-180.0, m), (180.0, -m),
+                (-190.0, -89.0), (190.0, 89.0), (float("nan"), 0.0), (0.0, float("nan"))]
+            df = spark.range(100).select(
+                ((F.col("id") * 37 % 360) - 180.0 + 0.5).alias("lon"),
+                ((F.col("id") * 17 % 160) - 80.0 + 0.5).alias("lat"),
+            ).unionByName(spark.createDataFrame(rows, "lon double, lat double"))
+            df.createOrReplaceTempView("pts")
+            via_sql = sql.sql(
+                f"SELECT tile_x(lon, {zoom}) x, tile_y(lat, {zoom}) y FROM pts").toPandas()
+            via_col = df.select(
+                mercator.tile_x_col(F.col("lon"), zoom).alias("x"),
+                mercator.tile_y_col(F.col("lat"), zoom).alias("y"),
+            ).toPandas()
+            assert len(via_col) == 100 + len(rows), zoom
+            assert (via_sql.values == via_col.values).all(), zoom
 
     def test_cell_id_parent(self, sql):
         r = sql.sql("""

@@ -4,10 +4,10 @@ Checks (via explain(formatted)) that:
 - filters reach the parquet scan (PushedFilters) and columns are pruned
   (ReadSchema) — the engine analog of the reference's WHERE pushdown
   (ogr_gensql.cpp:132-145) and ignored-fields pruning (ogrunionlayer.cpp:540);
-- the spatial join's phase-1 cell join is a BroadcastHashJoin (zero shuffle
+- the spatial join's phase-1 tile join is a BroadcastHashJoin (zero shuffle
   of the big side);
 - aggregations are partial (map-side combine) before the exchange;
-- the two-phase spatial predicate runs after the cell join, not in the
+- the two-phase spatial predicate runs after the tile join, not in the
   scan, and no polygon set plans a Python stage;
 - every tokenizing operator runs its tokenizer regex once per row.
 """
@@ -97,6 +97,14 @@ def _final_nodes(plan):
     return ids, nodes
 
 
+def _walk(node):
+    """``node`` and every node below it in a JVM physical plan."""
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _walk(kids.apply(i))
+
+
 def _job_count(spark, fn):
     """Spark jobs run by ``fn()``, counted by job group."""
     sc = spark.sparkContext
@@ -122,7 +130,7 @@ class TestSpatialJoinPlan:
             ids, nodes = _final_nodes(plan)
             bhj = [i for i in ids if nodes[i].split()[1] == "BroadcastHashJoin"]
             assert len(bhj) == 1, name
-            # the exact ray-cast runs after the cell join (two-phase
+            # the exact ray-cast runs after the tile join (two-phase
             # discipline): in the join's condition or in a filter above it
             cast = [i for i in ids if "aggregate(" in nodes[i]]
             assert cast, name
@@ -148,7 +156,9 @@ class TestSpatialJoinPlan:
     def test_unhinted_cover_is_broadcast_over_parquet(self, spark, tmp_path):
         # no broadcast hint: the planner must choose the broadcast join
         # from the cover's known size against a big-statistics parquet
-        # scan of the points (the flagship's shape)
+        # scan of the points (the flagship's shape). The join key is the
+        # int tile pair, which Spark packs into one long: no cell id's
+        # bit interleave in the plan, and no shuffle of the points
         import __spark_entry__ as em
 
         spark.range(5000).select(
@@ -158,12 +168,24 @@ class TestSpatialJoinPlan:
         ).write.parquet(str(tmp_path / "pts"))
         pts = spark.read.parquet(str(tmp_path / "pts"))
         j = sjoin.spatial_join(pts, em._rect_polyset(), zoom=7, how="inner")
+        qe = j._jdf.queryExecution()
+        assert "shiftleft" not in qe.optimizedPlan().toString().lower()
+        joins = [n for n in _walk(qe.sparkPlan()) if n.nodeName() == "BroadcastHashJoin"]
+        assert len(joins) == 1
+        for keys, names in ((joins[0].leftKeys(), ["_jx", "_jy"]),
+                            (joins[0].rightKeys(), ["_x", "_y"])):
+            keys = [keys.apply(i) for i in range(keys.size())]
+            assert [k.name() for k in keys] == names
+            assert [k.dataType().simpleString() for k in keys] == ["int", "int"]
         j.collect()
         plan = explain_str(j)
         assert "isFinalPlan=true" in plan
         final = plan.split("== Initial Plan ==")[0]
-        assert "BroadcastHashJoin" in final
         assert "SortMergeJoin" not in final
+        ids, nodes = _final_nodes(plan)
+        kinds = [nodes[i].split()[1] for i in ids]
+        assert kinds.count("BroadcastHashJoin") == 1, kinds
+        assert "Exchange" not in kinds, kinds
 
     @pytest.mark.parametrize("how", ["left", "semi", "anti", "identity"])
     def test_face_is_one_broadcast_join(self, spark, how):
@@ -213,7 +235,7 @@ class TestSpatialJoinPlan:
                 pts, polys, zoom=7, how=how)) == 0, how
 
     def test_no_python_in_prefilter(self, spark):
-        # phase 1 (cell assignment + cover join) must be pure JVM
+        # phase 1 (tile assignment + cover join) must be pure JVM
         pdf = spark.createDataFrame(
             [(f"u{i}", float(i % 50), float(i % 30)) for i in range(100)],
             "url string, lon double, lat double",

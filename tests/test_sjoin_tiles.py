@@ -6,7 +6,6 @@ import pytest
 
 import __spark_entry__ as em
 from lib_gdal_spark.geo import mercator
-from lib_gdal_spark.geo.cells import cell_encode_np
 from lib_gdal_spark.geo.pip import envelope_np, point_in_polygon_np, polygons_intersect_np
 from lib_gdal_spark.operators import sjoin, tiles
 from lib_gdal_spark.pages.synth import synth_pages_pdf, extract_text_bytes
@@ -65,6 +64,10 @@ class TestGeocode:
         tx, ty = mercator.lonlat_to_tile_np(pdf.lon.to_numpy(), pdf.lat.to_numpy(), 7)
         np.testing.assert_array_equal(pdf.tile_x.to_numpy(), tx)
         np.testing.assert_array_equal(pdf.tile_y.to_numpy(), ty)
+
+    def test_with_tile_adds_only_the_tile_pair(self, spark, pages_pdf):
+        df = sjoin.geocode(spark.createDataFrame(pages_pdf[["url", "text"]].head(10)))
+        assert sjoin.with_tile(df, 7).columns == df.columns + ["tile_x", "tile_y"]
 
 
 class TestSpatialJoin:
@@ -147,6 +150,11 @@ class TestSpatialJoin:
         assert sym.count() == n_unmatched + 1
         assert sym.filter("url IS NOT NULL AND poly_id IS NOT NULL").count() == 0
 
+    @pytest.mark.parametrize("zoom", [-1, 30])
+    def test_zoom_outside_int_key_refused(self, points, zoom):
+        with pytest.raises(ValueError, match="zoom"):
+            sjoin.spatial_join(points, sjoin.PolygonSet(POLYS), zoom=zoom)
+
     def test_no_exact_is_superset(self, points):
         ps = sjoin.PolygonSet(POLYS)
         exact = sjoin.spatial_join(points, ps, zoom=7, how="inner").count()
@@ -158,9 +166,9 @@ class TestRoundTrips:
     def test_pip_request_py4j_budget(self, spark, py4j_calls):
         """One 100-point pip request, plan built and collected, stays
         within a budget of driver-to-JVM round trips: the count measured
-        when the budget was set (1,428) plus 10 %. Nearly all of them
-        build the join cell's Column tree; ROADMAP item 1 tightens this
-        budget toward 300."""
+        when the budget was set (976) plus 10 %. Most of them build the
+        join tile's Column math and the ray-cast lambda; ROADMAP item 1
+        tightens this budget toward 300."""
         q = spark.createDataFrame(
             [(f"q{i}", float(i % 50), float(i % 30)) for i in range(100)],
             "url string, lon double, lat double")
@@ -171,7 +179,7 @@ class TestRoundTrips:
         request()  # warm: first-use lookups are not per-request cost
         rows, calls = py4j_calls(request)
         assert len(rows) > 0
-        assert calls <= 1571, calls
+        assert calls <= 1074, calls
 
 
 def _boundary_points(polys):
@@ -279,7 +287,7 @@ class TestBoundaryPoints:
 def _cover_cells_loop(ps, zoom):
     """The per-cell refine loop cover_cells ran before it was vectorized:
     the oracle for the vectorized build."""
-    rows_cell, rows_pid = [], []
+    rows_x, rows_y, rows_pid = [], [], []
     for pid in ps.ids:
         rings = ps.rings[pid]
         xmin, ymin, xmax, ymax = envelope_np(rings)
@@ -297,9 +305,10 @@ def _cover_cells_loop(ps, zoom):
                                  [ln0[0], lt1[0]], [ln0[0], lt0[0]]])
                 keep[i] = polygons_intersect_np(rings, [rect])
             gx, gy = gx[keep], gy[keep]
-        rows_cell.append(cell_encode_np(gx.astype(np.uint64), gy.astype(np.uint64), zoom))
-        rows_pid.append(np.full(len(rows_cell[-1]), pid, dtype=np.int64))
-    return pd.DataFrame({"cell": np.concatenate(rows_cell),
+        rows_x.append(gx.astype(np.int32))
+        rows_y.append(gy.astype(np.int32))
+        rows_pid.append(np.full(len(gx), pid, dtype=np.int64))
+    return pd.DataFrame({"x": np.concatenate(rows_x), "y": np.concatenate(rows_y),
                          "poly_id": np.concatenate(rows_pid)})
 
 
@@ -323,7 +332,7 @@ class TestPyramid:
         assert len(z0) == 1 and z0.n_pages.iloc[0] == N
 
     def test_base_matches_direct_tile_assignment(self, points):
-        base = tiles.base_tiles(sjoin.with_tile(points.drop("tile_x", "tile_y", "cell"), 8), 8)
+        base = tiles.base_tiles(sjoin.with_tile(points.drop("tile_x", "tile_y"), 8), 8)
         pdf = base.toPandas()
         raw = points.select("lon", "lat").toPandas()
         tx, ty = mercator.lonlat_to_tile_np(raw.lon.to_numpy(), raw.lat.to_numpy(), 8)
