@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession, functions as F, types as T
 
 from ..geo import cells as _cells, clip as _clip, curves as _curves, \
@@ -208,19 +209,23 @@ def register_all(spark: SparkSession) -> None:
             _wkb.encode_point(float(a), float(b)) for a, b in zip(x, y)
         ])
 
-    @F.pandas_udf(T.LongType())
-    def tile_x(lon: pd.Series, zoom: pd.Series) -> pd.Series:
-        z = int(zoom.iloc[0])
+    # Arrow UDFs, not pandas ones: pandas reads a NULL double as NaN, and
+    # the tile of a NULL coordinate is NULL while NaN's is a real tile
+    @F.arrow_udf(T.LongType())
+    def tile_x(lon: pa.Array, zoom: pa.Array) -> pa.Array:
+        z = zoom[0].as_py()
         tx, _ = _mercator.lonlat_to_tile_np(
-            lon.to_numpy(np.float64), np.zeros(len(lon)), z)
-        return pd.Series(tx.astype(np.int64))
+            lon.to_numpy(zero_copy_only=False), np.zeros(len(lon)), z)
+        return pa.array(tx.astype(np.int64), mask=lon.is_null().to_numpy(
+            zero_copy_only=False))
 
-    @F.pandas_udf(T.LongType())
-    def tile_y(lat: pd.Series, zoom: pd.Series) -> pd.Series:
-        z = int(zoom.iloc[0])
+    @F.arrow_udf(T.LongType())
+    def tile_y(lat: pa.Array, zoom: pa.Array) -> pa.Array:
+        z = zoom[0].as_py()
         _, ty = _mercator.lonlat_to_tile_np(
-            np.zeros(len(lat)), lat.to_numpy(np.float64), z)
-        return pd.Series(ty.astype(np.int64))
+            np.zeros(len(lat)), lat.to_numpy(zero_copy_only=False), z)
+        return pa.array(ty.astype(np.int64), mask=lat.is_null().to_numpy(
+            zero_copy_only=False))
 
     @F.pandas_udf(T.LongType())
     def cell_id(x: pd.Series, y: pd.Series, zoom: pd.Series) -> pd.Series:

@@ -32,6 +32,8 @@ import numpy as np
 try:  # Column helpers are optional so the kernel lib imports Spark-free
     from pyspark.sql import Column
     from pyspark.sql import functions as F
+
+    from ..session import built
 except Exception:  # pragma: no cover
     F = None
 
@@ -146,11 +148,22 @@ def meters_y_col(lat: "Column") -> "Column":
     )
 
 
-def tile_x_col(lon: "Column", zoom: int) -> "Column":
-    """XYZ tile x from lon; ceil-minus-one rule, clamped to [0, 2^z-1]."""
-    px = (meters_x_col(lon) + F.lit(ORIGIN_SHIFT)) / F.lit(resolution(zoom))
-    tx = (F.ceil(px / F.lit(float(TILE_SIZE))) - 1).cast("long")
-    return F.greatest(F.lit(0), F.least(tx, F.lit(2 ** zoom - 1)))
+def _clamped(coord: str, t: "Column", zoom: int) -> "Column":
+    """t clamped to [0, 2^z-1], NULL where `coord` is NULL: greatest and
+    least skip a NULL argument, so a NULL t alone would clamp to a real
+    tile."""
+    clamp = F.greatest(F.lit(0), F.least(t, F.lit(2 ** zoom - 1)))
+    return F.when(F.col(coord).isNotNull(), clamp)
+
+
+def tile_x_col(lon: str, zoom: int) -> "Column":
+    """XYZ tile x of the lon column `lon`; ceil-minus-one rule, clamped to
+    [0, 2^z-1]; NULL for a NULL lon. Built once per (lon, zoom)."""
+    def build():
+        px = (meters_x_col(F.col(lon)) + F.lit(ORIGIN_SHIFT)) / F.lit(resolution(zoom))
+        tx = (F.ceil(px / F.lit(float(TILE_SIZE))) - 1).cast("long")
+        return _clamped(lon, tx, zoom)
+    return built(("mercator.tile_x", lon, zoom), build)
 
 
 def tile_size_meters(zoom: int) -> float:
@@ -187,10 +200,12 @@ def tile_center_lat_col(y: "Column", zoom: int) -> "Column":
     ) * F.lit(180.0 / math.pi)
 
 
-def tile_y_col(lat: "Column", zoom: int) -> "Column":
-    """XYZ tile y from lat: the TMS row by the ceil-minus-one rule,
-    clamped to [0, 2^z-1], then flipped (gdal2tiles GetYTile)."""
-    last = 2 ** zoom - 1
-    py = (meters_y_col(lat) + F.lit(ORIGIN_SHIFT)) / F.lit(resolution(zoom))
-    ty = (F.ceil(py / F.lit(float(TILE_SIZE))) - 1).cast("long")
-    return F.lit(last) - F.greatest(F.lit(0), F.least(ty, F.lit(last)))
+def tile_y_col(lat: str, zoom: int) -> "Column":
+    """XYZ tile y of the lat column `lat`: the TMS row by the
+    ceil-minus-one rule, clamped to [0, 2^z-1], then flipped (gdal2tiles
+    GetYTile); NULL for a NULL lat. Built once per (lat, zoom)."""
+    def build():
+        py = (meters_y_col(F.col(lat)) + F.lit(ORIGIN_SHIFT)) / F.lit(resolution(zoom))
+        ty = (F.ceil(py / F.lit(float(TILE_SIZE))) - 1).cast("long")
+        return F.lit(2 ** zoom - 1) - _clamped(lat, ty, zoom)
+    return built(("mercator.tile_y", lat, zoom), build)

@@ -38,18 +38,23 @@ def _bytes_expr(df: DataFrame):
     octet length for string/binary columns, fixed width for scalars."""
     from pyspark.sql import functions as F
 
-    parts = []
+    from .session import built
+
+    varying = []
     fixed = 0
     for f in df.schema.fields:
         t = f.dataType.simpleString()
         if t in ("string", "binary"):
-            parts.append(F.coalesce(F.octet_length(F.col(f.name)), F.lit(0)))
+            varying.append(f.name)
         else:
             fixed += _FIXED_WIDTH.get(t, 8)
-    expr = F.lit(fixed).cast("long")
-    for p in parts:
-        expr = expr + p
-    return expr
+
+    def build():
+        expr = F.lit(fixed).cast("long")
+        for name in varying:
+            expr = expr + F.coalesce(F.octet_length(F.col(name)), F.lit(0))
+        return expr
+    return built(("metrics.bytes", fixed, *varying), build)
 
 
 def stage_snapshot(df: DataFrame, stage: str) -> DataFrame:

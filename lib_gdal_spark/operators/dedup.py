@@ -24,22 +24,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import built
+
 TOKEN_RE = "[a-z0-9]+"
 
 
 def tokens_col(text_col: str):
     """Lowercased word tokens — JVM regex."""
-    return F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_RE), 0)
+    return built(("tokens", text_col), lambda: F.regexp_extract_all(
+        F.lower(F.col(text_col)), F.lit(TOKEN_RE), 0))
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Keep one row per exact text (min id wins — deterministic)."""
-    digest = F.md5(F.col(text_col)).alias("_digest")
-    keep = (
-        df.select(F.col(id_col), digest)
-        .groupBy("_digest")
-        .agg(F.min(id_col).alias(id_col))
-    )
+    digest, first = built(("exact_dedup", id_col, text_col), lambda: (
+        F.md5(F.col(text_col)).alias("_digest"), F.min(id_col).alias(id_col)))
+    keep = df.select(id_col, digest).groupBy("_digest").agg(first)
     return df.join(keep, on=id_col, how="left_semi")
 
 
@@ -70,13 +70,19 @@ def with_minhash(df: DataFrame, text_col: str, n_hashes: int = 8,
     Staged selects (CLAUDE.md HOF rule): tokens, shingles, hashes. The
     no-token filter tests the SOURCE text: a filter on a staged array is
     pushed below its select and inlines the tokenizer again."""
-    toks = (df.filter(F.lower(F.col(text_col)).rlike(TOKEN_RE))
-            .select("*", tokens_col(text_col).alias("_toks")))
-    sh = toks.select(*df.columns, _shingle_array(shingle_n).alias("_sh"))
-    mh = [F.array_min(F.transform(
-              "_sh", lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))))
-          .alias(f"mh_{i}") for i in range(n_hashes)]
-    return sh.select(*df.columns, *mh)
+    def build():
+        mh = [F.array_min(F.transform(
+                  "_sh", lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))))
+              .alias(f"mh_{i}") for i in range(n_hashes)]
+        return (F.lower(F.col(text_col)).rlike(TOKEN_RE),
+                tokens_col(text_col).alias("_toks"),
+                _shingle_array(shingle_n).alias("_sh"), *mh)
+
+    has_token, toks, sh, *mh = built(
+        ("with_minhash", text_col, n_hashes, shingle_n), build)
+    cols = df.columns
+    return (df.filter(has_token).select("*", toks)
+            .select(*cols, sh).select(*cols, *mh))
 
 
 def minhash_signature(df: DataFrame, id_col: str, text_col: str,

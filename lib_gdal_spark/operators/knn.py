@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import built
+
 
 # Q x T pairs up to which one brute-force pass costs less CPU than the
 # ring's fixed cost alone. Both costs measured on a 4-vCPU VM, local[4],
@@ -57,10 +59,15 @@ _BF_CPU_S_PER_PAIR = 2.1e-6
 PAIR_BUDGET = _RING_FIXED_CPU_S / _BF_CPU_S_PER_PAIR
 
 
-def _dist(qx, qy, tx, ty):
-    # plain multiplies (not pow) so the arithmetic is bit-identical to the
-    # duckdb oracle's (qx-tx)*(qx-tx) expression
-    return F.sqrt((qx - tx) * (qx - tx) + (qy - ty) * (qy - ty))
+def _dist(qx: str, qy: str, tx: str, ty: str):
+    """The query-target distance over the named columns, built once per
+    name set."""
+    def build():
+        # plain multiplies (not pow) so the arithmetic is bit-identical to
+        # the duckdb oracle's (qx-tx)*(qx-tx) expression
+        dx, dy = F.col(qx) - F.col(tx), F.col(qy) - F.col(ty)
+        return F.sqrt(dx * dx + dy * dy)
+    return built(("knn.dist", qx, qy, tx, ty), build)
 
 
 def _check_k(k: int) -> None:
@@ -89,14 +96,17 @@ def knn_bruteforce(queries: DataFrame, targets: DataFrame, k: int,
     tie-break on tid so results are reproducible under shuffle.
     """
     _check_k(k)
-    j = queries.crossJoin(targets)
-    j = j.withColumn("dist", _dist(F.col(qx), F.col(qy), F.col(tx), F.col(ty)))
-    w = Window.partitionBy(qid).orderBy(F.col("dist").asc(), F.col(tid).asc())
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid, tid, "dist", "rank")
-    )
+    return (queries.crossJoin(targets)
+            .select(qid, tid, _dist(qx, qy, tx, ty).alias("dist"))
+            .select("*", _rank(qid, tid))
+            .filter(f"`rank` <= {int(k)}"))
+
+
+def _rank(qid: str, tid: str):
+    """Each query's rank column, by (dist, tid)."""
+    return built(("knn.rank", qid, tid), lambda: F.row_number().over(
+        Window.partitionBy(qid).orderBy(F.col("dist").asc(), F.col(tid).asc())
+    ).alias("rank"))
 
 
 _OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
@@ -157,12 +167,11 @@ def _knn_rings(queries: DataFrame, targets: DataFrame, k: int,
         )
         cand = (
             q_r.join(t_r, on=["_gx", "_gy"], how="inner")
-            .withColumn("dist", _dist(F.col(qx), F.col(qy), F.col(tx), F.col(ty)))
+            .withColumn("dist", _dist(qx, qy, tx, ty))
             # 3x3 blocks of adjacent exploded cells can duplicate (q,t) pairs
             .dropDuplicates([qid, tid])
         )
-        w = Window.partitionBy(qid).orderBy(F.col("dist").asc(), F.col(tid).asc())
-        ranked = cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        ranked = cand.select("*", _rank(qid, tid)).filter(f"`rank` <= {int(k)}")
         stats = ranked.groupBy(qid).agg(
             F.count(F.lit(1)).alias("_n"), F.max("dist").alias("_kth")
         )

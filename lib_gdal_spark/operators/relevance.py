@@ -27,6 +27,12 @@ Scale notes (100 TB):
   global top-k is orderBy().limit(k) = TakeOrderedAndProject
   (per-partition heaps + driver merge of k rows), NOT a
   single-partition row_number window.
+- bm25 plan construction: each Column call is one py4j round trip. The
+  per-term parts (the match filter, each tf and docfreq) depend on the
+  query, so they are SQL strings, a few round trips per term; a term's
+  tf is size(mt) - size(array_remove(mt, term)), with no Python lambda.
+  The fixed parts, the score fold included, are built once per
+  (columns, number of terms) and session (session.built).
 - ngram: token posexplode + n-1 lead() windows per document, then a
   partial-agg count — not a transform() lambda, which re-ran the
   tokenizer per element (the CLAUDE.md HOF trap).
@@ -38,6 +44,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import built
 from .dedup import tokens_col
 
 # BM25 free parameters (Robertson et al.; the values every engine
@@ -65,6 +72,7 @@ def bm25_scores(df: DataFrame, terms: list[str], *,
     terms = list(terms)
     if not terms:
         raise ValueError("bm25 needs at least one query term")
+    n = len(terms)
     # ONE scan of the corpus: tokenize once, keep only (doc_id, full
     # token count, query-term matches) — a narrow int/short-array row —
     # and persist it so the corpus stats and the scoring don't each
@@ -72,30 +80,45 @@ def bm25_scores(df: DataFrame, terms: list[str], *,
     # terms), so a repeated request reuses the same cache entry. (The
     # no-wide-string-cache rule doesn't apply: the text column is
     # dropped before the persist.)
-    t = tokens_col(text_col)
-    narrow = (df.select(F.col(id_col).alias("doc_id"),
-                        F.size(t).alias("dl"), t.alias("t"))
-                .select("doc_id", "dl",
-                        F.filter("t", lambda x: x.isin(terms)).alias("mt"))
+    lits = [_sql_string(t) for t in terms]
+    narrow = (df.select(*built(("bm25.narrow", id_col, text_col), lambda: (
+                  F.col(id_col).alias("doc_id"),
+                  F.size(tokens_col(text_col)).alias("dl"),
+                  tokens_col(text_col).alias("t"))))
+                .selectExpr("doc_id", "dl",
+                            f"filter(t, x -> x IN ({', '.join(lits)})) AS mt")
                 .persist())
 
     # the corpus stats and every term's document frequency in ONE global
     # aggregate row, broadcast back to the documents
-    stats = narrow.agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("tot_dl"),
-        *[F.count_if(F.array_contains("mt", term)).alias(f"_df{i}")
-          for i, term in enumerate(terms)])
+    stats = narrow.selectExpr(
+        "count(*) AS n_docs", "sum(dl) AS tot_dl",
+        *[f"count_if(array_contains(mt, {t})) AS _df{i}"
+          for i, t in enumerate(lits)])
     # per-term tf over the STAGED mt column: a real cached column, so the
-    # filter lambda never re-runs the tokenizer per element
-    docs = narrow.filter(F.size("mt") > 0).select(
-        "doc_id", "dl",
-        *[F.size(F.filter("mt", lambda x: x == term)).alias(f"_tf{i}")
-          for i, term in enumerate(terms)])
+    # count never re-runs the tokenizer per element. mt holds no NULLs,
+    # so the elements array_remove drops are exactly the term's matches
+    docs = narrow.filter(built(("bm25.matched",), lambda: F.size("mt") > 0)) \
+        .selectExpr("doc_id", "dl",
+                    *[f"size(mt) - size(array_remove(mt, {t})) AS _tf{i}"
+                      for i, t in enumerate(lits)])
     scored = docs.crossJoin(F.broadcast(stats))
+    return scored.select("doc_id", built(("bm25.score", n), lambda: _score(n)))
 
-    # op order mirrored verbatim by the oracle SQL: avgdl is one exact
-    # integer division (BIGINT sums are order-independent), idf's
-    # argument is rational, only ln() itself is transcendental.
+
+def _sql_string(s: str) -> str:
+    """`s` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _score(n: int):
+    """The rounded BM25 score over _tf0.._tf{n-1} and _df0.._df{n-1}.
+
+    Op order mirrored verbatim by the oracle SQL: avgdl is one exact
+    integer division (BIGINT sums are order-independent), idf's argument
+    is rational, only ln() itself is transcendental. The per-doc fold is
+    fixed-order, one slot per term, 0.0 for a term the document lacks:
+    the oracle's COALESCE(MAX(...), 0.0) slots."""
     avgdl = F.col("tot_dl").cast("double") / F.col("n_docs")
 
     def contrib(i):
@@ -105,12 +128,10 @@ def bm25_scores(df: DataFrame, terms: list[str], *,
         c = idf_c * (tf * K1P1) / (tf + K1 * (ONE_MINUS_B + B * (F.col("dl") / avgdl)))
         return F.when(tf > 0, c).otherwise(F.lit(0.0))
 
-    # fixed-order per-doc fold, one slot per term, 0.0 for a term the
-    # document lacks: the oracle's COALESCE(MAX(...), 0.0) slots
     total = contrib(0)
-    for i in range(1, len(terms)):
+    for i in range(1, n):
         total = total + contrib(i)
-    return scored.select("doc_id", F.round(total, 6).alias("score"))
+    return F.round(total, 6).alias("score")
 
 
 def bm25_topk(df: DataFrame, terms: list[str], k: int = 10, *,
@@ -121,11 +142,15 @@ def bm25_topk(df: DataFrame, terms: list[str], k: int = 10, *,
     from pyspark.sql import Window
     if k < 1:
         raise ValueError(f"bm25_topk needs k >= 1, got k={k}")
+
+    def build():
+        order = (F.desc("score"), F.asc("doc_id"))
+        return order, F.row_number().over(Window.orderBy(*order)).alias("rank")
+
+    order, rank = built(("bm25.rank",), build)
     top = (bm25_scores(df, terms, id_col=id_col, text_col=text_col)
-           .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return top.select("doc_id", "score",
-                      F.row_number().over(w).alias("rank"))
+           .orderBy(*order).limit(k))
+    return top.select("doc_id", "score", rank)
 
 
 def inverted_postings(df: DataFrame, *, id_col: str = "doc_id",

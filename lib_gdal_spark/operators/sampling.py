@@ -26,19 +26,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import built
+
 _POW52 = float(2 ** 52)
 TEMP_SEED = "temp|"  # temperature_resample's unit-hash seed
 RATE_COL = "keep_rate"  # temperature_resample's output column
 
 
-def _unit_hash(col, seed: str):
+def _unit_hash(key_col: str, seed: str):
     """md5(seed || key) -> exact double in [0, 1): 13 hex digits are a
     52-bit integer, and division by 2^52 is an exact power-of-two
-    scale — Spark, duckdb and Python produce identical bits."""
-    h = F.conv(F.substring(F.md5(F.concat(F.lit(seed),
-                                          col.cast("string"))), 1, 13),
-               16, 10).cast("long").cast("double")
-    return h / F.lit(_POW52)
+    scale — Spark, duckdb and Python produce identical bits. Built once
+    per (key_col, seed)."""
+    def build():
+        h = F.conv(F.substring(F.md5(F.concat(
+            F.lit(seed), F.col(key_col).cast("string"))), 1, 13),
+            16, 10).cast("long").cast("double")
+        return h / F.lit(_POW52)
+    return built(("unit_hash", key_col, seed), build)
 
 
 def dataset_split(df: DataFrame, key_col: str, weights=None,
@@ -50,7 +55,7 @@ def dataset_split(df: DataFrame, key_col: str, weights=None,
     and partitionings."""
     if weights is None:
         weights = {"train": 0.9, "val": 0.05, "test": 0.05}
-    u = _unit_hash(F.col(key_col), seed)
+    u = _unit_hash(key_col, seed)
     expr = None
     acc = 0.0
     names = list(weights)
@@ -113,29 +118,39 @@ def temperature_resample(df: DataFrame, group_col: str, id_col: str, *,
     call), and a broadcast join of the per-group rates back onto the
     corpus — no corpus-wide shuffle at all. Output = input columns +
     RATE_COL on the kept rows."""
-    counts = df.groupBy(group_col).agg(F.count("*").alias("n_g"))
-    n_max = counts.select(F.max("n_g")).scalar()
-    ratio = n_max.cast("double") / F.col("n_g").cast("double")
+    n_g, n_max, grp, same_grp, keep = built(
+        ("temperature_resample", group_col, id_col), lambda: (
+            F.count("*").alias("n_g"), F.max("n_g"),
+            F.col(group_col).alias("_grp"),
+            # null-safe join: a NULL group is a real group (groupBy counts
+            # it and it gets a rate like any other) — a plain equi-join
+            # would silently DROP every null-group row instead of sampling
+            F.col(group_col).eqNullSafe(F.col("_grp")),
+            _unit_hash(id_col, TEMP_SEED) < F.col(RATE_COL)))
+    counts = df.groupBy(group_col).agg(n_g)
+    # the rate depends on the call's alpha and frac: one SQL string over
+    # the count and n_max, with every literal typed DOUBLE
+    ratio = "CAST(n_max AS DOUBLE) / CAST(n_g AS DOUBLE)"
     expo = 1.0 - float(alpha)
     if expo == 0.5:
-        scaled = F.sqrt(ratio)
+        scaled = f"sqrt({ratio})"
     elif expo == 1.0:
         scaled = ratio
     elif expo == 0.0:
-        scaled = F.lit(1.0)
+        scaled = "1.0D"
     else:
-        scaled = F.pow(ratio, F.lit(expo))
-    rates = counts.select(F.col(group_col).alias("_grp"),
-                          F.least(F.lit(1.0),
-                                  F.lit(float(frac)) * scaled).alias(RATE_COL))
-    u = _unit_hash(F.col(id_col), TEMP_SEED)
-    # null-safe join: a NULL group is a real group (groupBy counts it and
-    # it gets a rate like any other) — a plain equi-join would silently
-    # DROP every null-group row instead of sampling it
-    return (df.join(F.broadcast(rates),
-                    F.col(group_col).eqNullSafe(F.col("_grp")))
+        scaled = f"pow({ratio}, {_sql_double(expo)})"
+    rates = counts.withColumn("n_max", counts.select(n_max).scalar()).select(
+        grp, F.expr(f"least(1.0D, {_sql_double(frac)} * {scaled})").alias(RATE_COL))
+    return (df.join(F.broadcast(rates), same_grp)
               .drop("_grp")
-              .filter(u < F.col(RATE_COL)))
+              .filter(keep))
+
+
+def _sql_double(x: float) -> str:
+    """Finite `x` as a Spark SQL DOUBLE literal (a bare decimal parses
+    as DECIMAL)."""
+    return f"{float(x)!r}D"
 
 
 def temperature_rate_sql(group_expr: str, table: str = "documents", *,

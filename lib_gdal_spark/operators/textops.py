@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import built
 from .dedup import TOKEN_RE, tokens_col
 
 # tiny built-in stopword lists — an n-gram/stopword-hit language heuristic
@@ -32,6 +33,13 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     - mean word length sanity (penalize <3 or >10)
     - stopword ratio (any language)
     """
+    return df.withColumns(dict(zip(
+        ("n_chars_q", "n_tokens", "alpha_ratio", "stopword_ratio", "quality"),
+        built(("quality_score", text_col), lambda: _quality_features(text_col)))))
+
+
+def _quality_features(text_col: str) -> tuple:
+    """quality_score's five columns, in its output order."""
     n_chars = F.length(F.col(text_col))
     toks = tokens_col(text_col)
     n_toks = F.size(toks)
@@ -43,16 +51,9 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     alpha_ratio = F.when(n_chars > 0, alpha / n_chars).otherwise(F.lit(0.0))
     wl_score = F.when((mean_wl >= 3) & (mean_wl <= 10), F.lit(1.0)).otherwise(F.lit(0.5))
     stop_ratio = F.when(n_toks > 0, stop_hits / n_toks).otherwise(F.lit(0.0))
-    return (
-        df.withColumn("n_chars_q", n_chars)
-        .withColumn("n_tokens", n_toks)
-        .withColumn("alpha_ratio", alpha_ratio)
-        .withColumn("stopword_ratio", stop_ratio)
-        .withColumn(
-            "quality",
-            (len_score + alpha_ratio + wl_score + F.least(stop_ratio * 4, F.lit(1.0))) / 4.0,
-        )
-    )
+    quality = (len_score + alpha_ratio + wl_score
+               + F.least(stop_ratio * 4, F.lit(1.0))) / 4.0
+    return n_chars, n_toks, alpha_ratio, stop_ratio, quality
 
 
 def lang_id(df: DataFrame, text_col: str = "text",

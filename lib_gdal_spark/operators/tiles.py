@@ -30,21 +30,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import built
+
 
 def base_tiles(points: DataFrame, zoom: int) -> DataFrame:
     """Aggregate cell-keyed points (tile_x/tile_y columns from
-    sjoin.with_tile) into base tiles at `zoom`.
+    sjoin.with_tile) into base tiles at `zoom`; a point with a NULL tile
+    (a NULL coordinate) is in no tile.
 
     Returns (z, x, y, n_pages).
     """
-    return points.groupBy("tile_x", "tile_y").agg(
-        F.count(F.lit(1)).alias("n_pages")
-    ).select(
+    has_tile, n_pages, *zxy = built(("tiles.base", zoom), lambda: (
+        F.col("tile_x").isNotNull() & F.col("tile_y").isNotNull(),
+        F.count(F.lit(1)).alias("n_pages"),
         F.lit(zoom).cast("int").alias("z"),
         F.col("tile_x").cast("long").alias("x"),
-        F.col("tile_y").cast("long").alias("y"),
-        "n_pages",
-    )
+        F.col("tile_y").cast("long").alias("y")))
+    return (points.filter(has_tile).groupBy("tile_x", "tile_y").agg(n_pages)
+            .select(*zxy, "n_pages"))
 
 
 def tile_pyramid(points: DataFrame, max_zoom: int = 14,
@@ -61,18 +64,18 @@ def tile_pyramid(points: DataFrame, max_zoom: int = 14,
         raise ValueError(
             f"tile_pyramid: need 0 <= min_zoom <= max_zoom, "
             f"got {min_zoom}, {max_zoom}")
-    shifts = F.explode(F.sequence(F.lit(0), F.lit(max_zoom - min_zoom)))
+    shifts, z, x, y, n_pages = built(("tiles.pyramid", max_zoom, min_zoom), lambda: (
+        F.explode(F.sequence(F.lit(0), F.lit(max_zoom - min_zoom))).alias("s"),
+        (F.lit(max_zoom) - F.col("s")).cast("int").alias("z"),
+        F.expr("shiftright(x, s)").alias("x"),
+        F.expr("shiftright(y, s)").alias("y"),
+        F.sum("n_pages").alias("n_pages")))
     return (
         base_tiles(points, max_zoom)
-        .select(shifts.alias("s"), "x", "y", "n_pages")
-        .select(
-            (F.lit(max_zoom) - F.col("s")).cast("int").alias("z"),
-            F.expr("shiftright(x, s)").alias("x"),
-            F.expr("shiftright(y, s)").alias("y"),
-            "n_pages",
-        )
+        .select(shifts, "x", "y", "n_pages")
+        .select(z, x, y, "n_pages")
         .groupBy("z", "x", "y")
-        .agg(F.sum("n_pages").alias("n_pages"))
+        .agg(n_pages)
     )
 
 

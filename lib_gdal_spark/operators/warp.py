@@ -94,8 +94,8 @@ def kernel_weight_sql(d: str, kernel: str) -> str:
 def _tiled(src: DataFrame, zoom: int, lon_col: str, lat_col: str,
            value_col: str) -> DataFrame:
     return src.select(
-        mercator.tile_x_col(F.col(lon_col), zoom).alias("x"),
-        mercator.tile_y_col(F.col(lat_col), zoom).alias("y"),
+        mercator.tile_x_col(lon_col, zoom).alias("x"),
+        mercator.tile_y_col(lat_col, zoom).alias("y"),
         F.col(value_col).alias("_v"),
     )
 
@@ -159,8 +159,8 @@ def _target_centers(src: DataFrame, zoom: int, lon_col: str, lat_col: str):
     """Distinct target tiles (the forward image of the source) with their
     inverse-projected center coordinates."""
     tgt = src.select(
-        mercator.tile_x_col(F.col(lon_col), zoom).alias("x"),
-        mercator.tile_y_col(F.col(lat_col), zoom).alias("y"),
+        mercator.tile_x_col(lon_col, zoom).alias("x"),
+        mercator.tile_y_col(lat_col, zoom).alias("y"),
     ).distinct()
     return tgt.withColumn(
         "_lon", mercator.tile_center_lon_col(F.col("x"), zoom)

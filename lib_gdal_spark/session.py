@@ -9,11 +9,40 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import zipfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _SHIPPED: set = set()
+_BUILT: dict = {}
+_BUILT_SC = None  # the SparkContext whose Columns _BUILT holds
+_BUILT_LOCK = threading.RLock()  # re-entrant: a build may call built()
+
+
+def built(key: tuple, build):
+    """The Column (or tuple of Columns) ``build()`` makes, built once per
+    active SparkContext.
+
+    Every ``F.*`` call and Column method is one py4j round trip, and an
+    operator's fixed expressions (a tile key, a ray-cast lambda, a score
+    fold) are the same on every call, so they are built once and reused:
+    a Column is an unresolved expression, valid in any plan of its
+    session. ``key`` names the operator and what the expression depends
+    on: column names and small ints (a zoom, a hash or term count), never
+    a request's values, so the memo is bounded by the code's call shapes,
+    not by the traffic. A new active SparkContext drops the whole memo,
+    so a Column of a stopped context is never reused."""
+    global _BUILT_SC
+    with _BUILT_LOCK:
+        sc = SparkContext._active_spark_context
+        if sc is not _BUILT_SC:
+            _BUILT.clear()
+            _BUILT_SC = sc
+        if key not in _BUILT:
+            _BUILT[key] = build()
+        return _BUILT[key]
 
 
 def ship_package(spark: SparkSession) -> None:

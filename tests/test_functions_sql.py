@@ -202,11 +202,25 @@ class TestTileFunctions:
             via_sql = sql.sql(
                 f"SELECT tile_x(lon, {zoom}) x, tile_y(lat, {zoom}) y FROM pts").toPandas()
             via_col = df.select(
-                mercator.tile_x_col(F.col("lon"), zoom).alias("x"),
-                mercator.tile_y_col(F.col("lat"), zoom).alias("y"),
+                mercator.tile_x_col("lon", zoom).alias("x"),
+                mercator.tile_y_col("lat", zoom).alias("y"),
             ).toPandas()
             assert len(via_col) == 100 + len(rows), zoom
             assert (via_sql.values == via_col.values).all(), zoom
+
+    def test_null_coordinate_has_no_tile(self, sql, spark):
+        # NULL in, NULL out, in both forms; NaN keeps its clamped tile
+        from lib_gdal_spark.geo import mercator
+
+        spark.createDataFrame(
+            [(None, None), (None, 5.0), (5.0, None), (float("nan"), 5.0)],
+            "lon double, lat double").createOrReplaceTempView("null_pts")
+        via_sql = [tuple(r) for r in sql.sql(
+            "SELECT tile_x(lon, 7) x, tile_y(lat, 7) y FROM null_pts").collect()]
+        via_col = [tuple(r) for r in spark.table("null_pts").select(
+            mercator.tile_x_col("lon", 7), mercator.tile_y_col("lat", 7)).collect()]
+        tx, ty = (int(v[0]) for v in mercator.lonlat_to_tile_np([5.0], [5.0], 7))
+        assert via_sql == via_col == [(None, None), (None, ty), (tx, None), (0, ty)]
 
     def test_cell_id_parent(self, sql):
         r = sql.sql("""

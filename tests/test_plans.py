@@ -156,9 +156,13 @@ class TestSpatialJoinPlan:
     def test_unhinted_cover_is_broadcast_over_parquet(self, spark, tmp_path):
         # no broadcast hint: the planner must choose the broadcast join
         # from the cover's known size against a big-statistics parquet
-        # scan of the points (the flagship's shape). The join key is the
-        # int tile pair, which Spark packs into one long: no cell id's
-        # bit interleave in the plan, and no shuffle of the points
+        # scan of the points (the flagship's shape). A left join can build
+        # only its right side, so there the broadcast is the planner's
+        # choice of the cover's local relation; an inner join of these
+        # 5,000 narrow rows may broadcast either side, and what it must
+        # not do is shuffle the points. The join key is the int tile pair,
+        # which Spark packs into one long: no cell id's bit interleave in
+        # the plan
         import __spark_entry__ as em
 
         spark.range(5000).select(
@@ -167,25 +171,32 @@ class TestSpatialJoinPlan:
             ((F.col("id") * 9973 % 1700) / 10.0 - 85.0).alias("lat"),
         ).write.parquet(str(tmp_path / "pts"))
         pts = spark.read.parquet(str(tmp_path / "pts"))
-        j = sjoin.spatial_join(pts, em._rect_polyset(), zoom=7, how="inner")
-        qe = j._jdf.queryExecution()
-        assert "shiftleft" not in qe.optimizedPlan().toString().lower()
-        joins = [n for n in _walk(qe.sparkPlan()) if n.nodeName() == "BroadcastHashJoin"]
-        assert len(joins) == 1
-        for keys, names in ((joins[0].leftKeys(), ["_jx", "_jy"]),
-                            (joins[0].rightKeys(), ["_x", "_y"])):
-            keys = [keys.apply(i) for i in range(keys.size())]
-            assert [k.name() for k in keys] == names
-            assert [k.dataType().simpleString() for k in keys] == ["int", "int"]
-        j.collect()
-        plan = explain_str(j)
-        assert "isFinalPlan=true" in plan
-        final = plan.split("== Initial Plan ==")[0]
-        assert "SortMergeJoin" not in final
-        ids, nodes = _final_nodes(plan)
-        kinds = [nodes[i].split()[1] for i in ids]
-        assert kinds.count("BroadcastHashJoin") == 1, kinds
-        assert "Exchange" not in kinds, kinds
+        for how in ("left", "inner"):
+            j = sjoin.spatial_join(pts, em._rect_polyset(), zoom=7, how=how)
+            qe = j._jdf.queryExecution()
+            assert "shiftleft" not in qe.optimizedPlan().toString().lower()
+            joins = [n for n in _walk(qe.sparkPlan()) if n.nodeName() == "BroadcastHashJoin"]
+            assert len(joins) == 1, how
+            for keys, names in ((joins[0].leftKeys(), ["_jx", "_jy"]),
+                                (joins[0].rightKeys(), ["_x", "_y"])):
+                keys = [keys.apply(i) for i in range(keys.size())]
+                assert [k.name() for k in keys] == names
+                assert [k.dataType().simpleString() for k in keys] == ["int", "int"]
+            j.collect()
+            plan = explain_str(j)
+            assert "isFinalPlan=true" in plan
+            assert "SortMergeJoin" not in plan.split("== Initial Plan ==")[0], how
+            ids, nodes = _final_nodes(plan)
+            kinds = [nodes[i].split()[1] for i in ids]
+            assert kinds.count("BroadcastHashJoin") == 1, kinds
+            if how == "left":
+                # the broadcast (build) side is the cover's local relation
+                assert joins[0].buildSide().toString() == "BuildRight"
+                build = joins[0].right()
+                leaves = [n.nodeName() for n in _walk(build) if n.children().size() == 0]
+                assert leaves == ["LocalTableScan"], leaves
+            else:
+                assert "Exchange" not in kinds, kinds
 
     @pytest.mark.parametrize("how", ["left", "semi", "anti", "identity"])
     def test_face_is_one_broadcast_join(self, spark, how):

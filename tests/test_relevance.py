@@ -93,11 +93,15 @@ class TestBM25:
 
     def test_absent_term_scores_zero_slot(self, spark):
         # a term no document holds adds a 0.0 slot: scores equal the
-        # query without it (df = 0 never reaches a score)
+        # query without it (df = 0 never reaches a score); terms with a
+        # quote or a backslash go into the plan as exact string literals
         d = _docs(spark, self.ROWS)
+        odd = ["it's", "back\\slash'"]
         a = relevance.bm25_topk(d, ["a", "b"], 10).collect()
-        b = relevance.bm25_topk(d, ["a", "zzz", "b"], 10).collect()
+        b = relevance.bm25_topk(d, ["a", "zzz", *odd, "b"], 10).collect()
         assert [tuple(r) for r in a] == [tuple(r) for r in b]
+        for t in odd:
+            assert spark.sql(f"SELECT {relevance._sql_string(t)}").first()[0] == t
 
     @pytest.mark.parametrize("terms,k", [([], 10), (["a"], 0)])
     def test_bad_input_refused(self, spark, terms, k):
