@@ -13,9 +13,10 @@ Implementation notes:
   NumPy kernels from geo/, wrapped as **pandas UDFs** (Arrow-batched, no
   per-row Python — the input_hint contract);
 - tile / cell-id math is pure closed-form arithmetic, registered as
-  pandas UDFs over the same NumPy kernels the column API uses (callers
-  wanting whole-stage codegen use the column forms, mercator.tile_x_col
-  etc.; the SQL forms exist for parity and ad-hoc SQL);
+  Arrow UDFs over the same NumPy kernels the column API uses, run once
+  per distinct zoom of a batch (callers wanting whole-stage codegen use
+  the column forms, mercator.tile_x_col etc.; the SQL forms exist for
+  parity and ad-hoc SQL);
 - everything registered here returns Spark-native types (no objects), so
   results compose with any Catalyst expression.
 """
@@ -209,36 +210,41 @@ def register_all(spark: SparkSession) -> None:
             _wkb.encode_point(float(a), float(b)) for a, b in zip(x, y)
         ])
 
-    # Arrow UDFs, not pandas ones: pandas reads a NULL double as NaN, and
-    # the tile of a NULL coordinate is NULL while NaN's is a real tile
+    # Arrow UDFs, not pandas ones: pandas reads a NULL as NaN, and the tile
+    # of a NULL coordinate is NULL while NaN's is a real tile. The zoom (or
+    # step count) is a column, so a batch may hold several: fn(rows, k) runs
+    # once per distinct k; NULL where the key or an input is NULL
+    def _np(a: pa.Array) -> np.ndarray:  # filled, int64 stays int64
+        return a.fill_null(0).to_numpy(zero_copy_only=False)
+
+    def _per_key(key: pa.Array, fn, *args: pa.Array) -> pa.Array:
+        null = np.logical_or.reduce(
+            [a.is_null().to_numpy(zero_copy_only=False) for a in (key, *args)])
+        k, out = _np(key), np.zeros(len(key), np.int64)
+        for v in np.unique(k[~null]):
+            rows = ~null & (k == v)
+            out[rows] = fn(rows, int(v))
+        return pa.array(out, mask=null)
+
     @F.arrow_udf(T.LongType())
     def tile_x(lon: pa.Array, zoom: pa.Array) -> pa.Array:
-        z = zoom[0].as_py()
-        tx, _ = _mercator.lonlat_to_tile_np(
-            lon.to_numpy(zero_copy_only=False), np.zeros(len(lon)), z)
-        return pa.array(tx.astype(np.int64), mask=lon.is_null().to_numpy(
-            zero_copy_only=False))
+        return _per_key(zoom, lambda r, z: _mercator.lonlat_to_tile_np(
+            _np(lon)[r], np.zeros(r.sum()), z)[0], lon)
 
     @F.arrow_udf(T.LongType())
     def tile_y(lat: pa.Array, zoom: pa.Array) -> pa.Array:
-        z = zoom[0].as_py()
-        _, ty = _mercator.lonlat_to_tile_np(
-            np.zeros(len(lat)), lat.to_numpy(zero_copy_only=False), z)
-        return pa.array(ty.astype(np.int64), mask=lat.is_null().to_numpy(
-            zero_copy_only=False))
+        return _per_key(zoom, lambda r, z: _mercator.lonlat_to_tile_np(
+            np.zeros(r.sum()), _np(lat)[r], z)[1], lat)
 
-    @F.pandas_udf(T.LongType())
-    def cell_id(x: pd.Series, y: pd.Series, zoom: pd.Series) -> pd.Series:
-        z = int(zoom.iloc[0])
-        c = _cells.cell_encode_np(
-            x.to_numpy(np.uint64), y.to_numpy(np.uint64), z)
-        return pd.Series(c.astype(np.int64))
+    @F.arrow_udf(T.LongType())
+    def cell_id(x: pa.Array, y: pa.Array, zoom: pa.Array) -> pa.Array:
+        return _per_key(zoom, lambda r, z: _cells.cell_encode_np(
+            _np(x)[r].astype(np.uint64), _np(y)[r].astype(np.uint64), z), x, y)
 
-    @F.pandas_udf(T.LongType())
-    def cell_parent(cell: pd.Series, steps: pd.Series) -> pd.Series:
-        s = int(steps.iloc[0])
-        c = _cells.cell_parent_np(cell.to_numpy(np.int64).astype(np.uint64), s)
-        return pd.Series(c.astype(np.int64))
+    @F.arrow_udf(T.LongType())
+    def cell_parent(cell: pa.Array, steps: pa.Array) -> pa.Array:
+        return _per_key(steps, lambda r, s: _cells.cell_parent_np(
+            _np(cell)[r].astype(np.uint64), s), cell)
 
     def _per_ring(wkb_series, scalar, fn):
         """Apply a ring/line kernel to every ring of polygon WKB rows

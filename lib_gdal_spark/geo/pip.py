@@ -156,6 +156,62 @@ def polygons_intersect_np(rings_a: list, rings_b: list) -> bool:
     return False
 
 
+def _orient(ax, ay, bx, by, cx, cy):
+    """Sign of the (a, b, c) turn, as ``segments_intersect_np`` computes it."""
+    v = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
+    return (v > 0).astype(np.int8) - (v < 0).astype(np.int8)
+
+
+def _on_seg(ax, ay, bx, by, cx, cy):
+    return ((np.minimum(ax, bx) <= cx) & (cx <= np.maximum(ax, bx))
+            & (np.minimum(ay, by) <= cy) & (cy <= np.maximum(ay, by)))
+
+
+def cells_intersect_np(rings: list, x0, y0, x1, y1) -> np.ndarray:
+    """``polygons_intersect_np(rings, [cell rect])`` for every cell at once:
+    cell i is the rect ring (x0, y0) -> (x1, y0) -> (x1, y1) -> (x0, y1).
+
+    Same tests, same float operations, so the same answer per cell: the
+    envelope pre-test, the cell's first corner in the polygon (one PIP
+    call over all cells), the polygon's first vertex in each cell (the
+    ray cast on a rect ring is ``[x0, x1) x [y0, y1)``) and the edges of
+    every ring against the cells' sides as one edges x sides array,
+    chunked over cells to bound its size."""
+    ex, ey, exx, exy = envelope_np(rings)
+    env = ~((exx < np.minimum(x0, x1)) | (np.maximum(x0, x1) < ex)
+            | (exy < np.minimum(y0, y1)) | (np.maximum(y0, y1) < ey))
+    hit = point_in_polygon_np(x0, y0, rings)
+    ea = rings[0]
+    vx, vy = ea[0]
+    hit |= ((y0 > vy) != (y1 > vy)) & ((vx < x0) != (vx < x1))
+    hit &= env
+    # the rect ring's 4 sides (corner j -> corner j+1), one column each
+    sx = np.stack([x0, x1, x1, x0, x0], axis=1)
+    sy = np.stack([y0, y0, y1, y1, y0], axis=1)
+    p = np.concatenate([r[:-1] for r in rings])[:, :, None, None]
+    q = np.concatenate([r[1:] for r in rings])[:, :, None, None]
+    px, py, qx, qy = p[:, 0], p[:, 1], q[:, 0], q[:, 1]
+    todo = np.flatnonzero(env & ~hit)
+    step = max(1, (1 << 16) // max(1, len(p)))
+    for s in range(0, len(todo), step):
+        idx = todo[s:s + step]
+        ax, ay = sx[idx, :-1][None], sy[idx, :-1][None]
+        bx, by = sx[idx, 1:][None], sy[idx, 1:][None]
+        o1 = _orient(px, py, qx, qy, ax, ay)
+        o2 = _orient(px, py, qx, qy, bx, by)
+        o3 = _orient(ax, ay, bx, by, px, py)
+        o4 = _orient(ax, ay, bx, by, qx, qy)
+        cross = (((o1 != o2) & (o3 != o4))
+                 | ((o1 == 0) & _on_seg(px, py, qx, qy, ax, ay))
+                 | ((o2 == 0) & _on_seg(px, py, qx, qy, bx, by))
+                 | ((o3 == 0) & _on_seg(ax, ay, bx, by, px, py))
+                 | ((o4 == 0) & _on_seg(ax, ay, bx, by, qx, qy)))
+        hit[idx] = cross.any(axis=(0, 2))
+    return hit
+
+
+
+
 def ring_centroid_signed_np(ring: np.ndarray):
     """(signed_area, cx, cy) of one ring by the shoelace centroid formula —
     OGRPolygon::Centroid semantics (delegated to GEOS in the reference;

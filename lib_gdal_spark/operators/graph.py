@@ -25,6 +25,7 @@ per round and the driver dies on analysis long before any data limit.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -56,15 +57,15 @@ def _barriers(e: DataFrame, blocked_vertices, blocked_edges,
     spark = e.sparkSession
     if blocked_vertices is not None:
         bv = blocked_vertices if isinstance(blocked_vertices, DataFrame) \
-            else spark.createDataFrame([(int(v),) for v in blocked_vertices],
-                                       "bver long")
+            else spark.createDataFrame(pd.DataFrame(
+                {"bver": [int(v) for v in blocked_vertices]}), "bver long")
         bv = bv.toDF("bver")
         e = e.join(F.broadcast(bv), e.dst == bv.bver, "left_anti")
     if blocked_edges is not None:
         be = blocked_edges if isinstance(blocked_edges, DataFrame) \
-            else spark.createDataFrame(
+            else spark.createDataFrame(pd.DataFrame(
                 [(int(s), int(d)) for s, d in blocked_edges],
-                "bsrc long, bdst long")
+                columns=["bsrc", "bdst"]), "bsrc long, bdst long")
         be = be.toDF("bsrc", "bdst")
         if not directed:
             # an undirected edge is ONE reference FID: blocking it kills
@@ -89,7 +90,8 @@ def sssp(edges: DataFrame, source, directed: bool = False,
     spark = edges.sparkSession
     e = _barriers(_sym(edges, directed), blocked_vertices, blocked_edges,
                   directed).persist()
-    dist = spark.createDataFrame([(source, 0.0)], "vertex long, dist double")
+    dist = spark.createDataFrame(pd.DataFrame({"vertex": [source], "dist": [0.0]}),
+                                 "vertex long, dist double")
     frontier = dist
     for r in range(max_rounds):
         # relax all edges out of the frontier
@@ -147,7 +149,8 @@ def k_shortest_paths(edges: DataFrame, source, target, k: int,
                   directed).persist()
     src_l = int(source)
     frontier = spark.createDataFrame(
-        [(src_l, 0.0, f"|{src_l}|")], "vertex long, cost double, path string")
+        pd.DataFrame({"vertex": [src_l], "cost": [0.0], "path": [f"|{src_l}|"]}),
+        "vertex long, cost double, path string")
     hits = frontier.filter(F.col("vertex") == target)
     for _ in range(max_hops):
         ext = (

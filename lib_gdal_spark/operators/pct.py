@@ -29,6 +29,7 @@ Spark-first decomposition:
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -205,9 +206,8 @@ def rgb2pct(cells: DataFrame, palette, dither: bool = False,
     if not dither:
         spark = cells.sparkSession
         flat = lut.ravel()
-        lut_df = spark.createDataFrame(
-            [(int(i), int(v)) for i, v in enumerate(flat)],
-            "code int, pct_idx int")
+        lut_df = spark.createDataFrame(pd.DataFrame(
+            {"code": np.arange(len(flat)), "pct_idx": flat}), "code int, pct_idx int")
         code = ((F.col("vals")[0].cast("int") / (1 << shift))
                 .cast("int") * n * n
                 + (F.col("vals")[1].cast("int") / (1 << shift))

@@ -152,7 +152,8 @@ def polygonize(cells: DataFrame, block_bits: int = 5,
     remap = {k: find(k) for k in list(parent)}
     if remap:
         remap_df = F.broadcast(
-            spark.createDataFrame(list(remap.items()), schema="label long, region_id long")
+            spark.createDataFrame(pd.DataFrame(list(remap.items())),
+                                  schema="label long, region_id long")
         )
         out = labeled.join(remap_df, on="label", how="left").withColumn(
             "region_id", F.coalesce("region_id", "label")
@@ -475,7 +476,7 @@ def sieve_gdal(cells: DataFrame, threshold: int, connect8: bool = False,
                 merge[poly] = -1
         final = [(r, t) for r, t in merge.items() if t != -1]
         m = (F.broadcast(spark.createDataFrame(
-            final, "region_id long, _tgt long")) if final else None)
+            pd.DataFrame(final), "region_id long, _tgt long")) if final else None)
     if m is None:
         out = labeled
     else:

@@ -35,7 +35,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..geo.pip import point_in_polygon_np, envelope_np, polygons_intersect_np
+from ..geo.pip import cells_intersect_np, envelope_np, point_in_polygon_np
 
 
 def _burn_cells_pdf(polys, cell_size: float, origin=(0.0, 0.0),
@@ -59,13 +59,8 @@ def _burn_cells_pdf(polys, cell_size: float, origin=(0.0, 0.0),
         gx, gy = np.meshgrid(bxs, bys)
         gx, gy = gx.ravel(), gy.ravel()
         if all_touched:
-            keep = np.zeros(len(gx), dtype=bool)
-            for i in range(len(gx)):
-                x0, y0 = ox + gx[i] * cell_size, oy + gy[i] * cell_size
-                rect = np.array([[x0, y0], [x0 + cell_size, y0],
-                                 [x0 + cell_size, y0 + cell_size],
-                                 [x0, y0 + cell_size], [x0, y0]])
-                keep[i] = polygons_intersect_np(rings, [rect])
+            x0, y0 = ox + gx * cell_size, oy + gy * cell_size
+            keep = cells_intersect_np(rings, x0, y0, x0 + cell_size, y0 + cell_size)
         else:
             cx = ox + (gx + 0.5) * cell_size
             cy = oy + (gy + 0.5) * cell_size

@@ -24,6 +24,7 @@ three follow the repo's exactness discipline:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..session import built
@@ -412,4 +413,5 @@ def unimax_allocation(df: DataFrame, group_col: str = "lang",
                     float(a)))
     spark = df.sparkSession
     return spark.createDataFrame(
-        out, f"{group_col} string, n_docs long, chars long, alloc double")
+        pd.DataFrame(out, columns=[group_col, "n_docs", "chars", "alloc"]),
+        f"{group_col} string, n_docs long, chars long, alloc double")

@@ -26,29 +26,31 @@ Reference semantics re-expressed Spark-first:
 - Every face is ONE join of the points with the cover whose condition is
   the whole containment test; only the join type differs: inner -> inner;
   left, identity, union -> left; semi -> left_semi (each input row once,
-  however many polygons contain it); anti, symdiff -> left_anti. No face
-  needs a unique key, and none deduplicates or re-joins the points; union
-  and symdiff add the point-free polygons from a tiny id anti-join.
+  however many polygons contain it); anti, symdiff -> left_anti. Cover
+  rows carry poly_area, so no face joins an attribute table. No face needs
+  a unique key; union and symdiff add the point-free polygons by a tiny
+  id anti-join against the distinct ids a second point join matched.
 
 Scale design (100 TB / 10^12 pages):
 - the polygon side (admin boundaries) is small: the cover, edges included,
-  is built once per (set, zoom) and rides in the plan as a local relation
-  whose size the planner knows, so it picks a broadcast hash join by
-  itself — ZERO shuffle of the big side; each task filters its own
-  partition (the distributed analog of the reference's per-executor
-  prepared-geometry cache, ogrlayer.cpp:5325). A broadcast join has no
+  is built from pandas once per (set, zoom, SparkContext) and rides in
+  the plan as a local relation whose size the planner knows, so it picks
+  a broadcast hash join by itself — ZERO shuffle of the big side; each
+  task filters its own partition (the distributed analog of the
+  reference's per-executor prepared-geometry cache, ogrlayer.cpp:5325). A broadcast join has no
   skew exposure; AQE skew-join (session.py) splits hot partitions of any
   shuffled join. (Salting the cover join lost in every measured
   configuration, BENCH/SKEW.md.)
-- the plan holds no Python stage, and no call leaves a broadcast behind.
+- the plan holds no Python stage and no RDD scan of a Python list, and no
+  call leaves a broadcast behind.
   The ray-cast costs O(edges) per candidate row, and the broadcast carries
   (cover rows x edges) values: the figure to watch for large
   admin-boundary sets.
 - plan construction is per-call work in Python: every Column call is one py4j
   round trip. The join key and the whole containment condition, ray-cast
   lambda included, are built once per (columns, zoom, exact) and session
-  (session.built), so a 100-point request plans in about 60 round trips
-  instead of about 1,000.
+  (session.built), so a 100-point request against a reused set plans in
+  about 40 round trips (union about 55) instead of about 1,000.
 """
 
 from __future__ import annotations
@@ -59,7 +61,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..geo import mercator
 from ..geo.cells import MAX_ZOOM
-from ..geo.pip import envelope_np, point_in_polygon_np
+from ..geo.pip import cells_intersect_np, envelope_np
 from ..pages.synth import GEOTAG_RE
 from ..session import built
 
@@ -81,59 +83,6 @@ def _edges(rings) -> list:
     return out
 
 
-def _orient(ax, ay, bx, by, cx, cy):
-    """Sign of the (a, b, c) turn, as ``segments_intersect_np`` computes it."""
-    v = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-    return (v > 0).astype(np.int8) - (v < 0).astype(np.int8)
-
-
-def _on_seg(ax, ay, bx, by, cx, cy):
-    return ((np.minimum(ax, bx) <= cx) & (cx <= np.maximum(ax, bx))
-            & (np.minimum(ay, by) <= cy) & (cy <= np.maximum(ay, by)))
-
-
-def _cells_intersect(rings, ln0, lt0, ln1, lt1) -> np.ndarray:
-    """``polygons_intersect_np(rings, [cell rect])`` for every cell at once.
-
-    Same tests, same float operations, so the same answer per cell: the
-    envelope pre-test, the cell's first corner in the polygon (one PIP
-    call over all cells), the polygon's first vertex in each cell (the
-    ray cast on a rect ring is ``[x0, x1) x [y0, y1)``) and the edges of
-    every ring against the cells' sides as one edges x sides array,
-    chunked over cells to bound its size."""
-    ex, ey, exx, exy = envelope_np(rings)
-    env = ~((exx < np.minimum(ln0, ln1)) | (np.maximum(ln0, ln1) < ex)
-            | (exy < np.minimum(lt0, lt1)) | (np.maximum(lt0, lt1) < ey))
-    hit = point_in_polygon_np(ln0, lt0, rings)
-    ea = rings[0]
-    vx, vy = ea[0]
-    hit |= ((lt0 > vy) != (lt1 > vy)) & ((vx < ln0) != (vx < ln1))
-    hit &= env
-    # the rect ring's 4 sides (corner j -> corner j+1), one column each
-    sx = np.stack([ln0, ln1, ln1, ln0, ln0], axis=1)
-    sy = np.stack([lt0, lt0, lt1, lt1, lt0], axis=1)
-    p = np.concatenate([r[:-1] for r in rings])[:, :, None, None]
-    q = np.concatenate([r[1:] for r in rings])[:, :, None, None]
-    px, py, qx, qy = p[:, 0], p[:, 1], q[:, 0], q[:, 1]
-    todo = np.flatnonzero(env & ~hit)
-    step = max(1, (1 << 16) // max(1, len(p)))
-    for s in range(0, len(todo), step):
-        idx = todo[s:s + step]
-        ax, ay = sx[idx, :-1][None], sy[idx, :-1][None]
-        bx, by = sx[idx, 1:][None], sy[idx, 1:][None]
-        o1 = _orient(px, py, qx, qy, ax, ay)
-        o2 = _orient(px, py, qx, qy, bx, by)
-        o3 = _orient(ax, ay, bx, by, px, py)
-        o4 = _orient(ax, ay, bx, by, qx, qy)
-        cross = (((o1 != o2) & (o3 != o4))
-                 | ((o1 == 0) & _on_seg(px, py, qx, qy, ax, ay))
-                 | ((o2 == 0) & _on_seg(px, py, qx, qy, bx, by))
-                 | ((o3 == 0) & _on_seg(ax, ay, bx, by, px, py))
-                 | ((o4 == 0) & _on_seg(ax, ay, bx, by, qx, qy)))
-        hit[idx] = cross.any(axis=(0, 2))
-    return hit
-
-
 class PolygonSet:
     """Driver-side polygon dimension: rings + envelopes.
 
@@ -148,7 +97,8 @@ class PolygonSet:
                       for p, rings in polys}
         boxes = np.array([envelope_np(self.rings[p]) for p in self.ids], dtype=np.float64)
         self.boxes = boxes.reshape(-1, 4)
-        self._covers = {}
+        self._sc = None  # the SparkContext whose relations _rels holds
+        self._rels = {}
 
     def area(self, pid: int) -> float:
         """Shoelace area of the polygon (holes subtract when wound
@@ -159,14 +109,6 @@ class PolygonSet:
             x, y = r[:, 0], r[:, 1]
             total += 0.5 * float(np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]))
         return abs(total)
-
-    def attrs_df(self, spark):
-        """(poly_id, poly_area) method-layer attribute table — the
-        attributes the layer-algebra faces (Identity/Union, schema rule
-        ogrlayer.cpp:4936: result schema = input fields + method fields)
-        carry onto matched rows. Tiny by construction -> broadcast."""
-        rows = [(int(pid), self.area(pid)) for pid in self.ids]
-        return spark.createDataFrame(rows, "poly_id long, poly_area double")
 
     def cover_cells(self, zoom: int, with_bbox: bool = False) -> pd.DataFrame:
         """(x, y, poly_id[, xmin..ymax]) covering table at `zoom`: the int32
@@ -189,7 +131,7 @@ class PolygonSet:
             gx, gy = np.meshgrid(xs, ys)
             gx, gy = gx.ravel(), gy.ravel()
             if len(gx) > 4:
-                keep = _cells_intersect(
+                keep = cells_intersect_np(
                     rings, *mercator.tile_bounds_lonlat_np(gx, gy, zoom))
                 gx, gy = gx[keep], gy[keep]
             rows_x.append(gx)
@@ -204,17 +146,33 @@ class PolygonSet:
             out = out.merge(box, on="poly_id", how="left")
         return out
 
-    def _cover(self, zoom: int) -> pd.DataFrame:
-        """``cover_cells(zoom, with_bbox=True)`` plus each row's polygon
-        ``edges`` (see ``_edges``), built once per zoom: the set does not
-        change, and a serving session joins against it on every request.
-        At most one frame per zoom level, so it is bounded."""
-        if zoom not in self._covers:
-            cover = self.cover_cells(zoom, with_bbox=True)
-            edges = {p: _edges(self.rings[p]) for p in self.ids}
-            cover["edges"] = [edges[p] for p in cover.poly_id]
-            self._covers[zoom] = cover
-        return self._covers[zoom]
+    def _relation(self, spark, zoom: int | None = None) -> DataFrame:
+        """The set's Spark side: for a zoom, the cover
+        ``(_x, _y, poly_id, poly_area, xmin, ymin, xmax, ymax, edges)``
+        (``cover_cells`` plus area and ``_edges``); for None, the
+        (poly_id, poly_area) method-layer table (result schema = input
+        fields + method fields, ogrlayer.cpp:4936). Built from pandas, so
+        a local relation the planner broadcasts unhinted, and kept on the
+        set: a serving session joins one set on every request. A new
+        SparkContext drops them (the rule of session.built)."""
+        if spark.sparkContext is not self._sc:
+            self._sc, self._rels = spark.sparkContext, {}
+        if zoom not in self._rels:
+            area = {p: self.area(p) for p in self.ids}
+            if zoom is None:
+                pdf = pd.DataFrame({"poly_id": self.ids,
+                                    "poly_area": [area[p] for p in self.ids]})
+                schema = "poly_id long, poly_area double"
+            else:
+                pdf = self.cover_cells(zoom, with_bbox=True)
+                pdf.insert(3, "poly_area", pdf.poly_id.map(area))
+                edges = {p: _edges(self.rings[p]) for p in self.ids}
+                pdf["edges"] = [edges[p] for p in pdf.poly_id]
+                schema = ("_x int, _y int, poly_id long, poly_area double, "
+                          "xmin double, ymin double, xmax double, ymax double, "
+                          "edges array<struct<x0:double,y0:double,x1:double,y1:double>>")
+            self._rels[zoom] = spark.createDataFrame(pdf, schema)
+        return self._rels[zoom]
 
 
 def geocode(df: DataFrame, text_col: str = "text", fast: bool = False) -> DataFrame:
@@ -301,13 +259,14 @@ def spatial_join(
     recast for point inputs where "intersects" is exact containment and
     a method polygon's non-intersecting part is the whole polygon iff it
     contains no input point:
-    - 'identity' (left, then poly_area from the broadcast attribute
-      table): every input row survives, method attributes attach where
-      covered, NULL elsewhere;
+    - 'identity' (left, keeping the cover's poly_area): every input row
+      survives, method attributes attach where covered, NULL elsewhere;
     - 'union':     identity rows + one row per polygon containing NO
       point (input fields NULL, method fields set);
     - 'symdiff' (left_anti, method fields NULL): unmatched points +
       point-free polygons only.
+    Union and symdiff evaluate the point join twice: the second, inner,
+    finds the matched ids that the point-free polygons are not.
     All three return points columns + (poly_id, poly_area).
 
     exact=True decides containment as the ray-cast kernel does
@@ -331,44 +290,17 @@ def spatial_join(
         mercator.tile_y_col(lat_col, zoom).cast("int")))
     pts = points.withColumns({"_jx": jx, "_jy": jy})
 
-    # a local relation of known size: the planner broadcasts it unhinted
-    cover = spark.createDataFrame(
-        polys._cover(zoom),
-        schema="_x int, _y int, poly_id long, xmin double, ymin double, "
-               "xmax double, ymax double, "
-               "edges array<struct<x0:double,y0:double,x1:double,y1:double>>",
-    )
-
+    cover = polys._relation(spark, zoom)
     inside = built(("sjoin.inside", lon_col, lat_col, exact),
                    lambda: _inside(lon_col, lat_col, exact))
-
-    def join(kind):
-        return pts.join(cover, inside, kind).drop(
-            "_jx", "_jy", "_x", "_y", "xmin", "ymin", "xmax", "ymax", "edges")
-
-    out = join(_JOIN_TYPE[how])
-    if how in ("inner", "left", "semi", "anti"):
-        return out
-    attrs = F.broadcast(polys.attrs_df(spark))
-    if how == "symdiff":
-        out = out.withColumn("poly_id", F.lit(None).cast("long")).withColumn(
-            "poly_area", F.lit(None).cast("double"))
-    else:
-        out = out.join(attrs, on="poly_id", how="left").select(
-            *points.columns, "poly_id", "poly_area")
-    if how == "identity":
+    drop = ["_jx", "_jy", "_x", "_y", "xmin", "ymin", "xmax", "ymax", "edges"]
+    out = pts.join(cover, inside, _JOIN_TYPE[how]).drop(
+        *drop, *([] if how in ("identity", "union") else ["poly_area"]))
+    if how not in ("union", "symdiff"):
         return out
     # method features intersecting NO input row (the polygon side of
     # union/symdiff): tiny anti-join of the id dimension against the
-    # distinct matched ids
-    ids_df = spark.createDataFrame([(int(p),) for p in polys.ids],
-                                   "poly_id long")
-    null_pts = [F.lit(None).cast(f.dataType).alias(f.name)
-                for f in points.schema.fields]
-    method_only = (
-        ids_df.join(join("inner").select("poly_id").distinct(),
-                    on="poly_id", how="left_anti")
-        .join(attrs, on="poly_id", how="left")
-        .select(*null_pts, "poly_id", "poly_area")
-    )
-    return out.unionByName(method_only)
+    # distinct matched ids; the other side's columns fill with NULL
+    matched = pts.join(cover, inside, "inner").select("poly_id").distinct()
+    method_only = polys._relation(spark).join(matched, "poly_id", "left_anti")
+    return out.unionByName(method_only, allowMissingColumns=True)

@@ -17,6 +17,7 @@ aggregate) so they ride AQE and bucketing like every other operator:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 _HOST_RE = r"^[a-z]+://([^/]+)"
@@ -148,7 +149,7 @@ def incremental_dedup(new_pages: DataFrame, seen: DataFrame,
     # signed-long pack (Spark arrays are long); bit tests are unaffected
     words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
     spark = new_pages.sparkSession
-    bmdf = spark.createDataFrame([(words,)], "_bm array<long>")
+    bmdf = spark.createDataFrame(pd.DataFrame({"_bm": [words]}), "_bm array<long>")
     tagged = new_pages.crossJoin(F.broadcast(bmdf))
     maybe = None
     for s in range(n_hashes):

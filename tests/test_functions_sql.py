@@ -222,6 +222,38 @@ class TestTileFunctions:
         tx, ty = (int(v[0]) for v in mercator.lonlat_to_tile_np([5.0], [5.0], 7))
         assert via_sql == via_col == [(None, None), (None, ty), (tx, None), (0, ty)]
 
+    def test_per_row_zoom(self, sql, spark):
+        # one partition, so one Arrow batch carries every zoom: each row
+        # gets its own zoom's (or step count's) answer, and a NULL zoom,
+        # step count or input gives NULL
+        import numpy as np
+        from lib_gdal_spark.geo import cells, mercator
+
+        rows = [(0, 100.0, 40.0, 3, 5, 6, 2), (1, 100.0, 40.0, 12, 3000, 17, 1),
+                (2, -33.5, -60.25, 0, 0, 0, 0), (3, 100.0, 40.0, 29, 123456789, 5, 7),
+                (4, 100.0, 40.0, 12, 9, 4000, 12), (5, 100.0, 40.0, 3, 1, 2, 3),
+                (6, 100.0, 40.0, None, 1, 1, None), (7, None, None, 7, None, 3, 1)]
+        spark.createDataFrame(
+            rows, "i int, lon double, lat double, z int, x long, y long, s int",
+        ).coalesce(1).createOrReplaceTempView("zoom_mix")
+        got = [tuple(r)[1:] for r in sql.sql("""
+            SELECT i, tile_x(lon, z), tile_y(lat, z), cell_id(x, y, z),
+                   cell_parent(cell_id(x, y, z), s)
+            FROM zoom_mix ORDER BY i""").collect()]
+        want = []
+        for _, lon, lat, z, x, y, s in rows:
+            if z is None:
+                want.append((None,) * 4)
+                continue
+            tx, ty = (None, None) if lon is None else (
+                int(v[0]) for v in mercator.lonlat_to_tile_np([lon], [lat], z))
+            c = None if x is None else cells.cell_encode_np(
+                np.array([x], np.uint64), np.array([y], np.uint64), z)
+            want.append((tx, ty, None if c is None else int(c[0]),
+                         None if c is None else int(cells.cell_parent_np(c, s)[0])))
+        assert got == want
+        assert got[1][0] == 3185  # tile_x(100.0, 12), after a zoom-3 row
+
     def test_cell_id_parent(self, sql):
         r = sql.sql("""
             SELECT cell_id(3L, 5L, 4) AS c,

@@ -202,6 +202,32 @@ class TestRaster:
                                    all_touched=True).count()
         assert touched > center  # ALL_TOUCHED burns strictly more cells here
 
+    def test_all_touched_cells_match_pairwise_test(self):
+        # the vectorized all-touched cover burns exactly the cells the
+        # per-cell polygons_intersect_np loop burned: a holed square and a
+        # concave L, on an offset origin with a non-dyadic cell size
+        from lib_gdal_spark.geo.pip import envelope_np, polygons_intersect_np
+
+        holed = (1, [SQUARE(0.3, 0.3, 9.0), SQUARE(3.1, 3.1, 3.0)[::-1]])
+        ell = (2, [np.array([[12.0, 0.5], [19.5, 0.5], [19.5, 3.7], [15.2, 3.7],
+                             [15.2, 8.9], [12.0, 8.9], [12.0, 0.5]])])
+        cs, (ox, oy) = 0.7, (-0.35, 0.1)
+        got = raster._burn_cells_pdf([holed, ell], cs, (ox, oy), all_touched=True)
+        want = []
+        for pid, rings in (holed, ell):
+            xmin, ymin, xmax, ymax = envelope_np(rings)
+            for by in range(int(np.floor((ymin - oy) / cs)), int(np.floor((ymax - oy) / cs)) + 1):
+                for bx in range(int(np.floor((xmin - ox) / cs)), int(np.floor((xmax - ox) / cs)) + 1):
+                    x0, y0 = ox + np.int64(bx) * cs, oy + np.int64(by) * cs
+                    rect = np.array([[x0, y0], [x0 + cs, y0], [x0 + cs, y0 + cs],
+                                     [x0, y0 + cs], [x0, y0]])
+                    if polygons_intersect_np(rings, [rect]):
+                        want.append((bx, by, pid))
+        assert [tuple(r) for r in got.itertuples(index=False)] == want
+        # the hole's inner cells burn nothing; cells over its ring do
+        assert not any(pid == 1 and 6 <= bx <= 7 and 5 <= by <= 6 for bx, by, pid in want)
+        assert len(want) > 100
+
     def test_zonal_stats(self, spark):
         pdf = pd.DataFrame({
             "zone": [1, 1, 1, 2, 2, 2, 2],

@@ -16,6 +16,7 @@ import re
 import uuid
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -245,6 +246,30 @@ class TestSpatialJoinPlan:
             assert _job_count(spark, lambda: sjoin.spatial_join(
                 pts, polys, zoom=7, how=how)) == 0, how
 
+    @pytest.mark.parametrize("how", ["inner", "left", "semi", "anti", "identity",
+                                     "union", "symdiff"])
+    def test_face_plans_no_python_frame(self, spark, how):
+        # the set's relations are built once from pandas: local relations,
+        # so no face plans an RDD scan (a frame built from a Python list
+        # starts Python workers on every call) or a Python stage, and
+        # identity takes poly_area from the cover in its one join
+        import __spark_entry__ as em
+
+        rng = np.random.default_rng(2)
+        pts = spark.createDataFrame(pd.DataFrame({
+            "url": [f"u{i}" for i in range(100)],
+            "lon": rng.uniform(-90, 170, 100), "lat": rng.uniform(-60, 70, 100)}))
+        j = sjoin.spatial_join(pts, em._rect_polyset(), zoom=7, how=how)
+        jobs = _job_count(spark, j.collect)
+        assert jobs <= (6 if how in ("union", "symdiff") else 2), jobs
+        plan = explain_str(j)
+        for word in ("ExistingRDD", "ArrowEvalPython", "BatchEvalPython"):
+            assert word not in plan, word
+        if how == "identity":
+            ids, nodes = _final_nodes(plan)
+            kinds = [nodes[i].split()[1] for i in ids]
+            assert kinds.count("BroadcastHashJoin") == 1, kinds
+
     def test_no_python_in_prefilter(self, spark):
         # phase 1 (tile assignment + cover join) must be pure JVM
         pdf = spark.createDataFrame(
@@ -257,6 +282,47 @@ class TestSpatialJoinPlan:
         j = sjoin.spatial_join(pdf, polys, zoom=6, how="inner", exact=False)
         plan = explain_str(j)
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+class TestLocalFrames:
+    """Per-call driver-side frames are built from pandas (a local
+    relation), never from a Python list (an RDD scan whose Python worker
+    tasks start on every call)."""
+
+    def test_rgb2pct_plans_no_rdd_scan(self, spark):
+        from lib_gdal_spark.operators.pct import rgb2pct
+
+        cells = spark.range(64).select(
+            (F.col("id") % 8).alias("bx"), (F.col("id") / 8).cast("long").alias("by"),
+            F.array(*[(F.col("id") * k % 256).cast("double") for k in (3, 5, 7)]).alias("vals"))
+        j = rgb2pct(cells, [(0, 0, 0), (255, 255, 255), (200, 30, 30)])
+        assert len(j.collect()) == 64
+        plan = explain_str(j)
+        assert "ExistingRDD" not in plan and "LocalTableScan" in plan
+
+    def test_sssp_plans_no_rdd_scan(self, spark, monkeypatch):
+        # each round's plan is checkpointed (lineage truncation): the
+        # first round's holds no RDD scan, and later rounds' scan only
+        # those checkpoints, never a Python RDD
+        from lib_gdal_spark.operators import graph
+
+        e = spark.range(1, 6).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"),
+                                     F.lit(1.0).alias("w"))
+        plans = []
+        ckpt = type(e).localCheckpoint
+
+        def record(self, *a, **k):
+            plans.append([n.rdd().toDebugString() for n in _walk(self._jdf.queryExecution().sparkPlan())
+                          if n.nodeName() == "Scan ExistingRDD"])
+            return ckpt(self, *a, **k)
+
+        monkeypatch.setattr(type(e), "localCheckpoint", record)
+        got = {r.vertex: r.dist for r in graph.sssp(e, 1, blocked_vertices=[9]).collect()}
+        assert got == {v: float(v - 1) for v in range(1, 7)}
+        assert plans and plans[0] == []
+        for lineages in plans:
+            for lineage in lineages:
+                assert "LocalCheckpointRDD" in lineage and "PythonRDD" not in lineage, lineage
 
 
 class TestPyramidPlan:

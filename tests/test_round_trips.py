@@ -107,9 +107,10 @@ class TestBuiltMemo:
 
     def test_restart_rebuilds(self, tmp_path):
         """After spark.stop() and a new session, a spatial join and a
-        bm25 call run on freshly built Columns and return the same rows.
-        In a child process: stopping this process's session would end
-        every later test's."""
+        bm25 call run on freshly built Columns and return the same rows;
+        the one PolygonSet held across the restart rebuilds its relations
+        instead of reusing the stopped context's. In a child process:
+        stopping this process's session would end every later test's."""
         script = textwrap.dedent(f"""
             import sys
             sys.path.insert(0, {ROOT!r})
@@ -118,6 +119,8 @@ class TestBuiltMemo:
             import __spark_entry__ as em
             from lib_gdal_spark import session
             from lib_gdal_spark.operators import relevance, sjoin
+
+            polys = em._rect_polyset()
 
             def run(spark):
                 rng = np.random.default_rng(1)
@@ -129,10 +132,10 @@ class TestBuiltMemo:
                     "doc_id": np.arange(50, dtype=np.int64),
                     "text": [" ".join(["river", "stone"][: 1 + i % 2] * (1 + i % 5))
                              for i in range(50)]}}))
-                pip = sorted(tuple(r) for r in sjoin.spatial_join(
-                    q, em._rect_polyset(), zoom=7).select("url", "poly_id").collect())
+                pip = sorted(tuple(r) for how in ("inner", "union") for r in sjoin.spatial_join(
+                    q, polys, zoom=7, how=how).select("url", "poly_id").collect())
                 top = [tuple(r) for r in relevance.bm25_topk(docs, ["river", "stone"], 5).collect()]
-                return pip, top, dict(session._BUILT)
+                return pip, top, dict(session._BUILT), dict(polys._rels)
 
             spark = session.get_spark("restart", cores=2, shuffle_partitions=2)
             before = run(spark)
@@ -143,6 +146,8 @@ class TestBuiltMemo:
             assert before[1] == after[1] and len(before[1]) == 5
             assert before[2].keys() == after[2].keys()
             assert all(before[2][k] is not after[2][k] for k in before[2])
+            assert before[3].keys() == after[3].keys() == {{7, None}}
+            assert all(before[3][k] is not after[3][k] for k in before[3])
             spark.stop()
             print("restart ok")
         """)

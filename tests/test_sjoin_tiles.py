@@ -203,8 +203,8 @@ class TestRoundTrips:
         within a budget of driver-to-JVM round trips: the count measured
         when the budget was set plus 10 %. The join key and the
         containment test, ray-cast lambda included, are built once per
-        session (session.built), so what is left is the cover frame, the
-        join and the collect."""
+        session (session.built), so what is left is the new set's cover
+        relation, the join and the collect."""
         q = spark.createDataFrame(
             [(f"q{i}", float(i % 50), float(i % 30)) for i in range(100)],
             "url string, lon double, lat double")
@@ -216,6 +216,25 @@ class TestRoundTrips:
         rows, calls = py4j_calls(request)
         assert len(rows) > 0
         assert calls <= PIP_BUDGET, calls
+
+    @pytest.mark.parametrize("how", ["inner", "identity", "union"])
+    def test_reused_set_py4j_budget(self, spark, py4j_calls, how):
+        """A serving session joins every request against one set, whose
+        relations are built on the first call: a request is the key
+        columns, the join, the drop and the collect (union adds the
+        point-free polygons' anti-join and the union)."""
+        polys = em._rect_polyset()
+        q = spark.createDataFrame(pd.DataFrame({
+            "url": [f"q{i}" for i in range(100)],
+            "lon": np.arange(100) % 50.0, "lat": np.arange(100) % 30.0}))
+
+        def request():
+            return sjoin.spatial_join(q, polys, 7, how=how).collect()
+
+        request()
+        rows, calls = py4j_calls(request)
+        assert len(rows) > 0
+        assert calls <= REUSED_BUDGET[how], calls
 
     def test_pyramid_plan_py4j_budget(self, spark, py4j_calls):
         """with_tile(12) -> tile_pyramid, the plan built (no action)."""
@@ -231,8 +250,11 @@ class TestRoundTrips:
 
 
 # measured round trips plus 10 %
-PIP_BUDGET = 69  # 63 measured; 976 with every expression rebuilt per call
+PIP_BUDGET = 69  # 64 measured; 976 with every expression rebuilt per call
 PYRAMID_BUDGET = 120  # 109; 635
+# one set for every request: 36, 35 and 53 measured; 63, 134 and 313 with
+# the cover and the attribute and id tables rebuilt per call
+REUSED_BUDGET = {"inner": 40, "identity": 39, "union": 59}
 
 
 def _boundary_points(polys):
@@ -330,11 +352,15 @@ class TestBoundaryPoints:
         monkeypatch.setattr(sjoin.PolygonSet, "cover_cells",
                             lambda self, *a, **k: builds.append(1) or cover(self, *a, **k))
         monkeypatch.setattr(sjoin, "_edges", lambda rings: edges.append(1) or ed(rings))
-        for _ in range(3):
-            sjoin.spatial_join(pts, polys, zoom=7).collect()
+        persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+        for how in ("inner", "identity", "union"):
+            sjoin.spatial_join(pts, polys, zoom=7, how=how).collect()
         assert broadcasts == []
         assert len(builds) == 1
         assert len(edges) == len(polys.ids)  # once per polygon, at one zoom
+        # one cover relation at the one zoom, and the id/area relation
+        assert set(polys._rels) == {7, None}
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
 def _cover_cells_loop(ps, zoom):
