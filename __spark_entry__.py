@@ -4941,8 +4941,8 @@ FROM s WHERE cos >= 0.5 ORDER BY cos DESC, id_a, id_b LIMIT 50
 
 
 def _q_ngram_topk(spark, sf_dir):
-    # corpus-wide top-25 word trigrams (boilerplate detection): token
-    # posexplode -> n-1 lead() windows -> partial-agg count; integer
+    # corpus-wide top-25 word trigrams (boilerplate detection): each
+    # doc's trigrams from its own row -> partial-agg count; integer
     # counts + lexicographic tie-break = exact
     from lib_gdal_spark.operators import relevance
     return relevance.ngram_topk(_tbl(spark, sf_dir, "documents"), 3, 25)

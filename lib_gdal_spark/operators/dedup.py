@@ -43,6 +43,19 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.join(keep, on=id_col, how="left_semi")
 
 
+def _ngrams(toks: str, n: int):
+    """The staged token array ``toks``'s runs of n consecutive tokens,
+    each joined by single spaces; empty for a doc of fewer than n tokens
+    (Spark's sequence(0, -1) descends, so the short doc is its own
+    branch). Tokens hold no space, so a caller splits a gram back into
+    its words with substring_index."""
+    return built(("ngrams", toks, n), lambda: F.when(
+        F.size(toks) >= n, F.transform(
+            F.sequence(F.lit(0), F.size(toks) - n),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))))
+        .otherwise(F.array().cast("array<string>")))
+
+
 def _shingle_array(n: int):
     """The staged ``_toks``'s n-gram word shingles joined by single spaces;
     a doc of fewer than n tokens is one shorter shingle ("" for none)."""
@@ -318,28 +331,19 @@ def exact_substr_spans(df: DataFrame, k: int = 8, id_col: str = "doc_id",
     one row per maximal duplicated span. All integers + md5 -> exactly
     oracle-able.
 
-    Scale shape: one tokenize pass (STAGED projections, the winnowing
-    rule), one groupBy(hash) for corpus counts, one broadcast-or-shuffle
-    join back on the hash key, one per-doc window. No all-pairs
-    anything; the hash-count table is the only corpus-global state."""
-    # k-grams via posexplode + k-1 leads, NOT a slice inside a
-    # transform() lambda (Catalyst inlines the token-array expression
-    # into the lambda and re-runs the tokenizer per element — the
-    # CLAUDE.md HOF trap); one doc_id window shuffle, md5 once per gram
+    Scale shape: each doc's k-grams come from its own row (the staged
+    tokens, then _ngrams; a gram's posexplode index is its start token),
+    so nothing shuffles before one groupBy(hash) for corpus counts, one
+    broadcast-or-shuffle join back on the hash key and one per-doc
+    island window. No all-pairs anything; the hash-count table is the
+    only corpus-global state."""
     tok = df.select(F.col(id_col).alias("doc_id"),
-                    F.posexplode(tokens_col(text_col)).alias("pos", "w"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    # materialize the leads BEFORE filtering — recomputing a lead over
-    # the filtered frame would shift the neighbors
-    g = tok.select("doc_id", "pos", F.col("w").alias("_w0"),
-                   *[F.lead("w", j).over(w).alias(f"_w{j}")
-                     for j in range(1, k)])
-    pos = (g.filter(F.col(f"_w{k - 1}").isNotNull())
-            .select("doc_id", "pos",
-                    F.conv(F.substring(
-                        F.md5(F.concat_ws(
-                            " ", *[F.col(f"_w{j}") for j in range(k)])),
-                        1, 13), 16, 10).cast("long").alias("h")))
+                    tokens_col(text_col).alias("_toks"))
+    pos = tok.select("doc_id", F.posexplode(_ngrams("_toks", k))
+                     .alias("pos", "gram")) \
+             .select("doc_id", "pos",
+                     F.conv(F.substring(F.md5("gram"), 1, 13), 16, 10)
+                      .cast("long").alias("h"))
     counts = pos.groupBy("h").agg(F.count("*").alias("occ"))
     dup = (pos.join(counts.filter(F.col("occ") >= min_dup), "h")
               .select("doc_id", "pos"))

@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..geo.pip import cells_intersect_np, envelope_np, point_in_polygon_np
+from ..session import _local_frame
 
 
 def _burn_cells_pdf(polys, cell_size: float, origin=(0.0, 0.0),
@@ -174,8 +175,7 @@ def rasterize_lines(spark, lines, burn_values: dict, cell_size: float,
         for (ix, iy) in _bresenham_polyline(pxs, pys, width, height):
             rows.append((ix, height - 1 - iy, int(line_id),
                          float(burn_values[line_id])))
-    df = spark.createDataFrame(
-        rows, "bx long, by long, line_id long, burn double")
+    df = _local_frame(spark, rows, "bx long, by long, line_id long, burn double")
     if merge_alg == "ADD":
         return df.groupBy("bx", "by").agg(F.sum("burn").alias("value"))
     w = Window.partitionBy("bx", "by").orderBy(F.col("line_id").desc())

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..session import _local_frame
+
 USAGES = ("generic", "pixelcount", "name", "min", "max", "minmax",
           "red", "green", "blue", "alpha")
 
@@ -107,7 +109,8 @@ def from_vat_dbf(spark: SparkSession, path: str) -> RasterAttributeTable:
         else:
             usages[n] = "generic"
     rows = [{"_row": i, **r} for i, r in enumerate(recs)]
-    df = spark.createDataFrame(rows)
+    # the column types a list frame would infer, on a local relation
+    df = _local_frame(spark, rows, spark._inferSchemaFromList(rows))
     return RasterAttributeTable(df, usages)
 
 
@@ -193,9 +196,8 @@ def from_color_table(spark: SparkSession,
     rows = [(i, i, int(e[0]), int(e[1]), int(e[2]),
              int(e[3]) if len(e) > 3 else 255)
             for i, e in enumerate(entries)]
-    df = spark.createDataFrame(
-        rows, "_row long, Value long, Red long, Green long, "
-              "Blue long, Alpha long")
+    df = _local_frame(spark, rows, "_row long, Value long, Red long, "
+                                   "Green long, Blue long, Alpha long")
     return RasterAttributeTable(
         df, {"Value": "minmax", "Red": "red", "Green": "green",
              "Blue": "blue", "Alpha": "alpha"},

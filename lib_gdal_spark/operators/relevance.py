@@ -33,9 +33,9 @@ Scale notes (100 TB):
   tf is size(mt) - size(array_remove(mt, term)), with no Python lambda.
   The fixed parts, the score fold included, are built once per
   (columns, number of terms) and session (session.built).
-- ngram: token posexplode + n-1 lead() windows per document, then a
-  partial-agg count — not a transform() lambda, which re-ran the
-  tokenizer per element (the CLAUDE.md HOF trap).
+- ngram: each document's n-grams come from its own row (the staged
+  token array, then dedup._ngrams over it — the CLAUDE.md HOF rule),
+  exploded into one partial-agg count; no per-document shuffle.
 """
 
 from __future__ import annotations
@@ -45,7 +45,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from ..session import built
-from .dedup import tokens_col
+from .dedup import _ngrams, tokens_col
 
 # BM25 free parameters (Robertson et al.; the values every engine
 # defaults to). Derived doubles are computed ONCE here in Python so the
@@ -223,36 +223,33 @@ def pmi_topk(df: DataFrame, k: int = 25, *, min_count: int = 5,
     `min_count` drops hapax pairs (classic PMI degenerates to rare
     pairs; 5 is the usual floor).
 
-    Scale: bigrams via posexplode + lead() (the HOF-trap-safe n-gram
-    build, see ngram_topk); ONE groupBy(pair) + ONE groupBy(word)
-    shuffle; unigram counts and the 1-row totals broadcast to the
-    bigram side; top-k is TakeOrderedAndProject."""
+    Scale: bigrams from each document's own row (dedup._ngrams over
+    the staged tokens); ONE groupBy(gram) + ONE groupBy(word) shuffle;
+    unigram counts and the 1-row totals broadcast to the bigram side;
+    top-k is TakeOrderedAndProject."""
     from pyspark.sql import Window
 
-    tok = df.select(F.monotonically_increasing_id().alias("_doc"),
-                    tokens_col(text_col).alias("t")) \
-            .select("_doc", F.posexplode("t").alias("pos", "w"))
-    uni = tok.groupBy("w").agg(F.count("*").alias("c"))
+    tok = df.select(tokens_col(text_col).alias("_toks"))
+    uni = (tok.select(F.explode(_ngrams("_toks", 1)).alias("w"))
+              .groupBy("w").agg(F.count("*").alias("c")))
     tot_n = uni.agg(F.sum("c").alias("n_tok"))
 
-    w = Window.partitionBy("_doc").orderBy("pos")
-    pairs = (tok.select(F.col("w").alias("_w0"),
-                        F.lead("w", 1).over(w).alias("_w1"))
-                .filter(F.col("_w1").isNotNull()))
-    big = pairs.groupBy("_w0", "_w1").agg(F.count("*").alias("cnt"))
+    big = (tok.select(F.explode(_ngrams("_toks", 2)).alias("gram"))
+              .groupBy("gram").agg(F.count("*").alias("cnt")))
     tot_m = big.agg(F.sum("cnt").alias("n_big"))
 
     u0 = uni.select(F.col("w").alias("_w0"), F.col("c").alias("c0"))
     u1 = uni.select(F.col("w").alias("_w1"), F.col("c").alias("c1"))
     j = (big.filter(F.col("cnt") >= min_count)
+            .select("gram", "cnt",
+                    F.substring_index("gram", " ", 1).alias("_w0"),
+                    F.substring_index("gram", " ", -1).alias("_w1"))
             .join(F.broadcast(u0), "_w0").join(F.broadcast(u1), "_w1")
             .crossJoin(F.broadcast(tot_m)).crossJoin(F.broadcast(tot_n)))
     ratio = (F.col("cnt").cast("double") / F.col("n_big")) / (
         (F.col("c0").cast("double") / F.col("n_tok"))
         * (F.col("c1").cast("double") / F.col("n_tok")))
-    scored = j.select(
-        F.concat_ws(" ", "_w0", "_w1").alias("gram"), "cnt",
-        F.round(F.log(ratio), 6).alias("pmi"))
+    scored = j.select("gram", "cnt", F.round(F.log(ratio), 6).alias("pmi"))
     top = scored.orderBy(F.desc("pmi"), F.asc("gram")).limit(k)
     rw = Window.orderBy(F.desc("pmi"), F.asc("gram"))
     return top.select("gram", "cnt", "pmi",
@@ -277,8 +274,8 @@ def cosine_pairs(df: DataFrame, *, id_col: str = "doc_id",
     Scale: the pair generation is the classic term-pivot self-join —
     each term with document frequency d contributes d^2 candidate rows,
     so COMMON terms dominate the shuffle. Two independent throttles:
-    `ngram > 1` switches the vector space to word n-gram shingles
-    (shared shingles are rare outside near-duplicates, so the join
+    a larger `ngram` switches the vector space from words to n-grams
+    (shared n-grams are rare outside near-duplicates, so the join
     degenerates to candidates — the right default for dedup), and
     `max_df` drops terms above that document frequency BEFORE the join
     (the standard DIMSUM-style pruning; a dropped term only lowers
@@ -287,22 +284,13 @@ def cosine_pairs(df: DataFrame, *, id_col: str = "doc_id",
     verify stage). The groupBy(pair) dot is map-side combinable."""
     from pyspark.sql import Window
 
+    # one exchange of whole rows clusters tf by document (no sort): the
+    # per-doc count and the norms need no shuffle of their own, and
+    # mostly distinct (doc, term) keys are never shuffled
     tok = df.select(F.col(id_col).cast("long").alias("doc_id"),
-                    tokens_col(text_col).alias("t"))
-    if ngram > 1:
-        # HOF-safe shingle build: posexplode + lead windows (never a
-        # transform() lambda over the tokenizer — CLAUDE.md HOF trap)
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        pos = tok.select("doc_id", F.posexplode("t").alias("pos", "w"))
-        g = pos.select("doc_id", F.col("w").alias("_w0"),
-                       *[F.lead("w", j).over(w).alias(f"_w{j}")
-                         for j in range(1, ngram)])
-        terms = g.filter(F.col(f"_w{ngram - 1}").isNotNull()).select(
-            "doc_id",
-            F.concat_ws(" ", *[F.col(f"_w{j}") for j in range(ngram)])
-             .alias("term"))
-    else:
-        terms = tok.select("doc_id", F.explode("t").alias("term"))
+                    tokens_col(text_col).alias("_toks")).repartition("doc_id")
+    terms = tok.select("doc_id",
+                       F.explode(_ngrams("_toks", ngram)).alias("term"))
     tf = (terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
                .persist())  # reused by the norms and both join sides
     norms = tf.groupBy("doc_id").agg(
@@ -337,21 +325,8 @@ def ngram_topk(df: DataFrame, n: int = 3, k: int = 25, *,
     gram asc (total order — exact cross-engine)."""
     from pyspark.sql import Window
 
-    # n-grams via posexplode + n-1 leads, NOT a transform() lambda:
-    # Catalyst inlines the token-array expression into the lambda and
-    # re-runs the tokenizer regex per element (CLAUDE.md HOF trap;
-    # measured 16.6 s -> ~1 s at sf0.1). Leads are materialized BEFORE
-    # any filter so neighbors never shift.
-    tok = df.select(F.monotonically_increasing_id().alias("_doc"),
-                    tokens_col(text_col).alias("t")) \
-            .select("_doc", F.posexplode("t").alias("pos", "w"))
-    w = Window.partitionBy("_doc").orderBy("pos")
-    g = tok.select(F.col("w").alias("_w0"),
-                   *[F.lead("w", j).over(w).alias(f"_w{j}")
-                     for j in range(1, n)])
-    grams = g.filter(F.col(f"_w{n - 1}").isNotNull()).select(
-        F.concat_ws(" ", *[F.col(f"_w{j}") for j in range(n)])
-         .alias("gram"))
+    grams = (df.select(tokens_col(text_col).alias("_toks"))
+               .select(F.explode(_ngrams("_toks", n)).alias("gram")))
     counts = (grams.groupBy("gram").agg(F.count("*").alias("cnt"))
                    .orderBy(F.desc("cnt"), F.asc("gram")).limit(k))
     w = Window.orderBy(F.desc("cnt"), F.asc("gram"))

@@ -187,18 +187,12 @@ def _hashed_ngram_buckets(df: DataFrame, id_col: str, text_col: str,
     Importance Resampling'). Bucket = md5 13-hex % n_buckets, the same
     cross-engine-exact construction sequence_pack uses. Map-side explode
     into ONE groupBy — no other shuffle."""
-    from .dedup import tokens_col
+    from .dedup import _ngrams, tokens_col
 
     toks = df.select(F.col(id_col).alias("_id"),
                      tokens_col(text_col).alias("_t"))
-    # guard: Spark sequence(1, 0) DESCENDS ([1, 0]) instead of being
-    # empty, so single-token docs need the explicit size >= 2 branch
-    bi = F.expr("CASE WHEN size(_t) >= 2 THEN "
-                "transform(sequence(1, size(_t) - 1), "
-                "i -> concat_ws(' ', _t[i - 1], _t[i])) "
-                "ELSE CAST(array() AS array<string>) END")
-    ng = toks.select("_id", F.explode(F.concat(F.col("_t"), bi))
-                     .alias("_ng")).filter(F.length("_ng") > 0)
+    ng = toks.select("_id", F.explode(F.concat("_t", _ngrams("_t", 2)))
+                     .alias("_ng"))
     b = F.conv(F.substring(F.md5(F.concat(F.lit(seed), F.col("_ng"))),
                            1, 13), 16, 10).cast("long") % n_buckets
     return (ng.select("_id", b.alias("bucket"))

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..session import built
-from .dedup import TOKEN_RE, tokens_col
+from .dedup import _ngrams, tokens_col
 
 # tiny built-in stopword lists — an n-gram/stopword-hit language heuristic
 STOPWORDS = {
@@ -93,7 +93,7 @@ def winnow_fingerprints(df: DataFrame, doc_col: str = "doc_id",
     Guarantees: any shared substring of length >= window+k-1 tokens
     produces at least one shared fingerprint between two documents.
 
-    All JVM: k-gram hashes via transform over the token index sequence
+    All JVM: k-gram hashes via transform over the doc's k-grams
     (xxhash64 of the joined gram), window minima via transform + slice +
     array_min, dedup via array_distinct + explode. One narrow map per doc,
     no shuffle until the caller aggregates.
@@ -111,19 +111,18 @@ def winnow_fingerprints(df: DataFrame, doc_col: str = "doc_id",
     # hashed gram array, as real columns makes each stage evaluate once
     # per row; the chain stays a narrow map (zero shuffle).
     t = df.select(F.col(doc_col), tokens_col(text_col).alias("_t"))
-    n_grams0 = F.greatest(F.size(F.col("_t")) - (k - 1), F.lit(0))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n_grams0, F.lit(1))),
-        lambda i: hash_fn(F.concat_ws(" ", F.slice(F.col("_t"), i, k))),
-    )
-    g = t.select(F.col(doc_col), n_grams0.alias("_ng"), grams.alias("_g"))
-    n_windows = F.greatest(F.col("_ng") - (window - 1), F.lit(0))
+    # (a lambda, not hash_fn itself: transform needs a fixed arity and
+    # F.xxhash64 takes *cols)
+    g = t.select(F.col(doc_col),
+                 F.transform(_ngrams("_t", k),
+                             lambda gram: hash_fn(gram)).alias("_g"))
+    n_windows = F.greatest(F.size("_g") - (window - 1), F.lit(0))
     mins = F.transform(
         F.sequence(F.lit(1), F.greatest(n_windows, F.lit(1))),
         lambda i: F.array_min(F.slice(F.col("_g"), i, window)),
     )
     fps = F.when(n_windows > 0, F.array_distinct(mins)).when(
-        F.col("_ng") > 0, F.array(F.array_min(F.col("_g")))  # short doc
+        F.size("_g") > 0, F.array(F.array_min(F.col("_g")))  # short doc
     ).otherwise(F.array().cast("array<bigint>"))
     return g.select(F.col(doc_col), F.explode(fps).alias("fp"))
 
@@ -141,20 +140,14 @@ def repetition_ratio(df: DataFrame, doc_col: str = "doc_id",
     Output: (doc_col, n_ngrams, n_distinct, dup_ratio).
     """
     t = df.select(F.col(doc_col), tokens_col(text_col).alias("_t"))
-    n_g = F.greatest(F.size(F.col("_t")) - (n - 1), F.lit(0))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n_g, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(F.col("_t"), i, n)),
-    )
-    g = t.select(F.col(doc_col), n_g.alias("_ng"), grams.alias("_g"))
-    n_distinct = F.when(F.col("_ng") > 0,
-                        F.size(F.array_distinct(F.col("_g")))).otherwise(0)
+    g = t.select(F.col(doc_col), _ngrams("_t", n).alias("_g"))
+    n_g = F.size("_g")
+    n_distinct = F.size(F.array_distinct("_g"))
     return g.select(
         F.col(doc_col),
-        F.col("_ng").cast("long").alias("n_ngrams"),
+        n_g.cast("long").alias("n_ngrams"),
         n_distinct.cast("long").alias("n_distinct"),
-        F.when(F.col("_ng") > 0,
-               F.lit(1.0) - n_distinct / F.col("_ng").cast("double"))
+        F.when(n_g > 0, F.lit(1.0) - n_distinct / n_g.cast("double"))
         .otherwise(F.lit(0.0)).alias("dup_ratio"),
     )
 
@@ -365,38 +358,32 @@ def lm_crossentropy(df: DataFrame, id_col: str = "doc_id",
     double division, identical on both engines).
 
     Scale shape: ONE tokenize pass staged as a persisted narrow bigram
-    table feeding corpus counts and per-doc joins; c(w1,*) derives from
-    the aggregated bigram table (never a second corpus scan); V is one
-    distinct-count; the scoring join is a plain shuffle join on the
-    bigram key (skew-safe: smoothing keeps every key finite)."""
-    from pyspark.sql import Window
-
-    from .dedup import tokens_col
-
-    # Bigrams via posexplode + lead, NOT a transform() lambda: Catalyst
-    # inlined the token-array expression into the lambda and re-ran the
-    # tokenizer regex per element (the CLAUDE.md HOF trap, measured 13x
-    # slower at sf0.1). The window's doc_id clustering also satisfies
-    # the following groupBy, so the whole build is ONE shuffle.
+    table feeding corpus counts and per-doc joins: each doc's bigrams
+    come from its own row and are counted after one exchange of whole
+    rows by doc (no sort, and no shuffle of mostly distinct (doc,
+    bigram) keys); c(w1,*) derives from the aggregated bigram table
+    (never a second corpus scan); V is one distinct-count; the scoring
+    join is a plain shuffle join on the bigram key (skew-safe:
+    smoothing keeps every key finite)."""
     tok = df.select(F.col(id_col).alias("doc_id"),
-                    F.posexplode(tokens_col(text_col)).alias("pos", "w1"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    big = (tok.withColumn("w2", F.lead("w1").over(w))
-              .filter(F.col("w2").isNotNull())
-              .groupBy("doc_id", "w1", "w2").agg(F.count("*").alias("n"))
+                    tokens_col(text_col).alias("_toks")).repartition("doc_id")
+    big = (tok.select("doc_id", F.explode(_ngrams("_toks", 2)).alias("gram"))
+              .groupBy("doc_id", "gram").agg(F.count("*").alias("n"))
               .persist())
 
-    c12 = big.groupBy("w1", "w2").agg(F.sum("n").alias("c12"))
+    c12 = (big.groupBy("gram").agg(F.sum("n").alias("c12"))
+              .withColumn("w1", F.substring_index("gram", " ", 1)))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     # vocabulary: distinct tokens in bigram positions (w1 union w2)
-    vocab = (c12.select("w1").union(c12.select(F.col("w2").alias("w1")))
+    vocab = (c12.select("w1")
+             .union(c12.select(F.substring_index("gram", " ", -1)))
              .distinct().count())
 
     lm = c12.join(c1, "w1").select(
-        "w1", "w2",
+        "gram",
         F.log((F.col("c12") + 1.0) / (F.col("c1") + float(vocab)))
          .alias("logp"))
-    scored = big.join(lm, ["w1", "w2"])
+    scored = big.join(lm, "gram")
     # DECIMAL(38,18)-quantized per-term fold (order-independent exact
     # sum), then exactly one double divide — no order-dependent double
     # accumulation anywhere (CLAUDE.md fold-order trap).

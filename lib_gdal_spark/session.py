@@ -45,6 +45,22 @@ def built(key: tuple, build):
         return _BUILT[key]
 
 
+def _local_frame(spark: SparkSession, rows: list, schema):
+    """``rows`` (tuples in schema order, or dicts) as a local relation: a
+    LocalTableScan of a size the planner knows, never the Python-RDD
+    scan a list frame plans. An empty pandas frame plans an RDD scan
+    too, so no rows is one all-NULL row under limit(0), which the
+    optimizer folds into an empty local relation."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    pdf = pd.DataFrame(rows or [[None] * len(schema)], columns=schema.names)
+    df = spark.createDataFrame(pdf, schema)
+    return df if rows else df.limit(0)
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make `lib_gdal_spark` importable on executors.
 

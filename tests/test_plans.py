@@ -300,6 +300,46 @@ class TestLocalFrames:
         plan = explain_str(j)
         assert "ExistingRDD" not in plan and "LocalTableScan" in plan
 
+    def test_rasterize_lines_plans_no_rdd_scan(self, spark):
+        from lib_gdal_spark.operators import raster
+
+        def burn(a, b):
+            return raster.rasterize_lines(spark, [(1, [a, b])], {1: 5.0},
+                                          cell_size=1.0, width=8, height=8)
+
+        line = burn((0.5, 0.5), (7.5, 3.5))
+        assert line.count() == 8
+        plan = explain_str(line)
+        assert "ExistingRDD" not in plan and "LocalTableScan" in plan
+        # a line off the raster burns no cell: an empty frame of the same
+        # types, still a local relation
+        off = burn((20.5, 20.5), (30.5, 20.5))
+        assert off.collect() == [] and off.dtypes == line.dtypes
+        plan = explain_str(off)
+        assert "ExistingRDD" not in plan and "LocalTableScan" in plan
+
+    def test_rat_frames_plan_no_rdd_scan(self, spark, tmp_path):
+        from lib_gdal_spark.operators import rat
+        from lib_gdal_spark.sources.shapefile import write_shapefile
+
+        base = str(tmp_path / "thematic")
+        write_shapefile([{"VALUE": v, "COUNT": 10 * v, "CLASS": c,
+                          "geom": {"type": 1, "points": [(float(v), 0.0)]}}
+                         for v, c in ((1, "water"), (2, "forest"))], base + ".shp")
+        vat = rat.from_vat_dbf(spark, base + ".dbf").df
+        # the types and column order a list frame infers from the records
+        assert vat.dtypes == [("CLASS", "string"), ("COUNT", "double"),
+                              ("VALUE", "double"), ("_row", "bigint")]
+        assert sorted(tuple(r) for r in vat.collect()) == [
+            ("forest", 20.0, 2.0, 1), ("water", 10.0, 1.0, 0)]
+        colors = rat.from_color_table(spark, [(255, 0, 0, 255), (0, 0, 255)]).df
+        assert colors.count() == 2
+        empty = rat.from_color_table(spark, []).df
+        assert empty.collect() == [] and empty.dtypes == colors.dtypes
+        for df in (vat, colors, empty):
+            plan = explain_str(df)
+            assert "ExistingRDD" not in plan and "LocalTableScan" in plan
+
     def test_sssp_plans_no_rdd_scan(self, spark, monkeypatch):
         # each round's plan is checkpointed (lineage truncation): the
         # first round's holds no RDD scan, and later rounds' scan only
@@ -631,8 +671,16 @@ def _md5_gram_hash(c):
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
+# the operators whose plans read the corpus once per branch (a reused
+# subtree prints once per reference); every other tokenizing operator
+# scans it once
+_MULTI_SCAN_OPS = {"pmi_topk", "cosine_pairs", "exact_substr_spans",
+                   "lm_crossentropy"}
+_NGRAM_OPS = {"ngram_topk"} | _MULTI_SCAN_OPS
+
+
 def _tokenizing_ops():
-    from lib_gdal_spark.operators import dedup, sampling, textops
+    from lib_gdal_spark.operators import dedup, relevance, sampling, textops
 
     return {
         "shingles": lambda d: dedup.shingles(d, "doc_id", "text"),
@@ -645,7 +693,24 @@ def _tokenizing_ops():
         "hashed_ngram_buckets": lambda d: sampling._hashed_ngram_buckets(
             d, "doc_id", "text", 8, "dsir|"),
         "simhash": lambda d: dedup.simhash(d, "doc_id", "text"),
+        "ngram_topk": lambda d: relevance.ngram_topk(d, 3, 25),
+        "pmi_topk": lambda d: relevance.pmi_topk(d, 10, min_count=1),
+        "cosine_pairs": lambda d: relevance.cosine_pairs(
+            d, threshold=0.5, ngram=3),
+        "exact_substr_spans": lambda d: dedup.exact_substr_spans(d, k=3),
+        "lm_crossentropy": lambda d: textops.lm_crossentropy(d),
     }
+
+
+def _nodes(plan):
+    """``plan`` and every node below it, the physical plans of cached
+    relations included."""
+    yield plan
+    for kids in (plan.children(), plan.innerChildren()):
+        for i in range(kids.size()):
+            yield from _nodes(kids.apply(i))
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        yield from _nodes(plan.inputPlan())
 
 
 class TestMinhashPlan:
@@ -673,10 +738,26 @@ class TestMinhashPlan:
         token array consumed by a transform() lambda must stay a staged
         column. If Catalyst inlines it — through a collapsed projection,
         or a filter on a staged array pushed below its select — the
-        optimized plan holds more than one copy of the tokenizer regex."""
+        optimized plan holds more than one copy of the tokenizer regex
+        per scan of the corpus."""
+        plan = _optimized(_tokenizing_ops()[op](self._docs(spark)))
+        spark.catalog.clearCache()
+        scans = len(re.findall(r"LogicalRDD|Scan ExistingRDD", plan))
+        assert plan.count("regexp_extract_all") == scans, plan
+        if op not in _MULTI_SCAN_OPS:
+            assert scans == 1, plan
+
+    @pytest.mark.parametrize("op", sorted(_NGRAM_OPS))
+    def test_no_doc_window_before_aggregate(self, spark, op):
+        """Word n-grams come from each document's own row: no window
+        partitioned by document (a shuffle and sort of every token)
+        runs before the operator's first aggregate."""
         out = _tokenizing_ops()[op](self._docs(spark))
-        assert _optimized(out).count("regexp_extract_all") == 1, \
-            _optimized(out)
+        bad = [w.toString() for w in _nodes(out._jdf.queryExecution().optimizedPlan())
+               if w.nodeName() == "Window" and w.partitionSpec().nonEmpty()
+               and not any("Aggregate" in n.nodeName() for n in _nodes(w))]
+        spark.catalog.clearCache()
+        assert not bad, bad
 
 
 class TestRound4Plans:
