@@ -8,8 +8,10 @@ regexp_extract_all, min-hash as the smallest of a document's string hashes.
 No Python in the hot path.
 
 Scale notes:
-- exact_dedup is one hash-aggregate (map-side partial min) — the cheapest
-  possible full-corpus dedup; the digest groupBy key is uniform by
+- exact_dedup is one aggregate over one read of its input: the minimum
+  of a row struct per md5 digest, with a map-side partial minimum. A
+  struct buffer is not a fixed-width hash-aggregate slot, so Spark plans
+  it as a sort aggregate. The digest groupBy key is uniform by
   construction (no skew).
 - minhash/LSH: signatures are n_hashes array_min columns on each doc's
   own row, no shuffle; the band self-join joins on (band_idx, band_key) — a
@@ -36,11 +38,27 @@ def tokens_col(text_col: str):
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep one row per exact text (min id wins — deterministic)."""
-    digest, first = built(("exact_dedup", id_col, text_col), lambda: (
-        F.md5(F.col(text_col)).alias("_digest"), F.min(id_col).alias(id_col)))
-    keep = df.select(id_col, digest).groupBy("_digest").agg(first)
-    return df.join(keep, on=id_col, how="left_semi")
+    """Exactly one row per distinct text; all NULL texts are one group.
+
+    The row with the smallest non-NULL id wins; a group whose ids are
+    all NULL keeps one of them. Rows tied on id are ordered by the
+    remaining columns in ``df.columns`` order, so the kept row is
+    deterministic. One aggregate reads ``df`` once: the minimum of
+    struct(isnull(id), id, other columns) per md5(text), expanded back
+    to ``df.columns`` in order. A column type Spark cannot order fails
+    at analysis."""
+    cols = tuple(df.columns)
+
+    def build():
+        rest = [c for c in cols if c != id_col]
+        best = F.min(F.struct(F.isnull(id_col).alias("_id_null"),
+                              F.col(id_col), *rest)).alias("_best")
+        return (F.md5(F.col(text_col)), best,
+                [F.col("_best").getField(c).alias(c) for c in cols])
+
+    digest, best, expand = built(("exact_dedup", id_col, text_col, cols),
+                                 build)
+    return df.groupBy(digest).agg(best).select(*expand)
 
 
 def _ngrams(toks: str, n: int):

@@ -113,16 +113,20 @@ def temperature_resample(df: DataFrame, group_col: str, id_col: str, *,
     other alphas go through pow(), which is NOT in the whitelist — fine
     for production use, but don't claim an exact oracle for them.
 
-    Scale shape: one count aggregate over the (small) group dimension,
-    n_max as a scalar subquery over those few per-group rows (it reuses
-    the count's exchange; an unpartitioned window would warn on every
-    call), and a broadcast join of the per-group rates back onto the
-    corpus — no corpus-wide shuffle at all. Output = input columns +
+    Scale shape: one count aggregate over the (small) group dimension;
+    one global aggregate over those few per-group rows collects them with
+    n_max, and inline() expands them back, so the input is read once for
+    the counts and once for the rows (no self-join, no scalar subquery
+    and no unpartitioned window); a broadcast join of the per-group rates
+    back onto the corpus — no corpus-wide shuffle at all. Groups are few
+    by contract: the rates are broadcast. Output = input columns +
     RATE_COL on the kept rows."""
-    n_g, n_max, grp, same_grp, keep = built(
+    n_g, groups, n_max, same_grp, keep = built(
         ("temperature_resample", group_col, id_col), lambda: (
-            F.count("*").alias("n_g"), F.max("n_g"),
-            F.col(group_col).alias("_grp"),
+            F.count("*").alias("n_g"),
+            F.collect_list(F.struct(F.col(group_col).alias("_grp"),
+                                    F.col("n_g"))).alias("_groups"),
+            F.max("n_g").alias("n_max"),
             # null-safe join: a NULL group is a real group (groupBy counts
             # it and it gets a rate like any other) — a plain equi-join
             # would silently DROP every null-group row instead of sampling
@@ -141,8 +145,9 @@ def temperature_resample(df: DataFrame, group_col: str, id_col: str, *,
         scaled = "1.0D"
     else:
         scaled = f"pow({ratio}, {_sql_double(expo)})"
-    rates = counts.withColumn("n_max", counts.select(n_max).scalar()).select(
-        grp, F.expr(f"least(1.0D, {_sql_double(frac)} * {scaled})").alias(RATE_COL))
+    rates = (counts.agg(groups, n_max).selectExpr("inline(_groups)", "n_max")
+             .selectExpr("_grp", f"least(1.0D, {_sql_double(frac)} * {scaled})"
+                                 f" AS {RATE_COL}"))
     return (df.join(F.broadcast(rates), same_grp)
               .drop("_grp")
               .filter(keep))

@@ -281,6 +281,45 @@ class TestDedup:
         out = dedup.exact_dedup(docs, "doc_id", "text")
         ids = {r.doc_id for r in out.collect()}
         assert ids == {0, 2, 3, 4}
+        assert out.columns == docs.columns
+
+    @staticmethod
+    def _exact(spark, rows, schema="id long, t string"):
+        out = dedup.exact_dedup(spark.createDataFrame(rows, schema), "id", "t")
+        return sorted((tuple(r) for r in out.collect()), key=repr)
+
+    def test_exact_dedup_repeated_ids(self, spark):
+        # one row per distinct text, even where an id wins for one text
+        # and also carries another
+        assert self._exact(spark, [(1, "A"), (1, "B"), (0, "B"), (2, "C")]) == [
+            (0, "B"), (1, "A"), (2, "C")]
+        assert self._exact(spark, [(5, "A"), (5, "A"), (7, "A")]) == [(5, "A")]
+
+    def test_exact_dedup_null_ids(self, spark):
+        # the minimum NON-NULL id wins; an all-NULL-id group keeps one row
+        assert self._exact(spark, [(None, "A"), (None, "A"), (3, "B"), (None, "B")]) == [
+            (3, "B"), (None, "A")]
+
+    def test_exact_dedup_null_text_is_one_group(self, spark):
+        assert self._exact(spark, [(2, None), (2, "x"), (1, "x"), (4, None)]) == [
+            (1, "x"), (2, None)]
+        assert self._exact(spark, [(None, None), (None, None)]) == [(None, None)]
+
+    def test_exact_dedup_ties_broken_by_other_columns(self, spark):
+        rows = [(1, "A", "z"), (1, "A", "b"), (1, "A", "m"), (2, "B", "q")]
+        schema = "id long, t string, extra string"
+        for parts in (1, 3):
+            df = spark.createDataFrame(rows, schema).repartition(parts)
+            out = dedup.exact_dedup(df, "id", "t")
+            assert out.columns == ["id", "t", "extra"]
+            assert sorted(tuple(r) for r in out.collect()) == [(1, "A", "b"), (2, "B", "q")]
+
+    def test_exact_dedup_unorderable_column_raises(self, spark):
+        from pyspark.errors import AnalysisException
+
+        df = spark.createDataFrame([(1, "A", {"k": 1})], "id long, t string, m map<string,int>")
+        with pytest.raises(AnalysisException):
+            dedup.exact_dedup(df, "id", "t")
 
     def test_minhash_near_dup(self, docs):
         out = dedup.minhash_dedup(docs, "doc_id", "text", threshold=0.5,

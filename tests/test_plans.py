@@ -760,6 +760,51 @@ class TestMinhashPlan:
         assert not bad, bad
 
 
+CURATE_JOBS = 5  # measured on a 300-row local segment; 7 with the self-joins
+
+
+class TestCuratePlans:
+    """Each curate operator reads its input once where it can: over a
+    local segment, every extra reference is one more LocalRelation leaf
+    in the optimized plan, and the optimizer re-evaluates the upstream
+    projection on each of them, row by row on the driver."""
+
+    @pytest.fixture(scope="class")
+    def seg(self, spark):
+        from lib_gdal_spark.pages.synth import synth_pages_pdf
+
+        pdf = synth_pages_pdf(np.arange(300), seed=11)[["url", "text", "lang"]]
+        return spark.createDataFrame(pdf, "url string, text string, lang string")
+
+    def test_exact_dedup_reads_input_once(self, seg):
+        from lib_gdal_spark.operators import dedup
+
+        plan = _optimized(dedup.exact_dedup(seg, "url", "text"))
+        assert plan.count("LocalRelation") == 1, plan
+        assert "Join" not in plan, plan
+
+    def test_temperature_resample_no_scalar_subquery(self, seg):
+        from lib_gdal_spark.operators import sampling
+
+        plan = _optimized(sampling.temperature_resample(seg, "lang", "url"))
+        assert plan.count("LocalRelation") == 2, plan
+        assert "scalar-subquery" not in plan, plan
+
+    def test_curate_reads_segment_twice(self, seg):
+        from lib_gdal_spark.plans import curate
+
+        assert _optimized(curate(seg)).count("LocalRelation") == 2
+
+    def test_curate_jobs_budget(self, spark, seg):
+        from lib_gdal_spark.plans import curate
+
+        def run():
+            return curate(seg).select("url").collect()
+
+        run()
+        assert _job_count(spark, run) <= CURATE_JOBS
+
+
 class TestRound4Plans:
     def test_curve_stroke_zero_exchange(self, spark):
         """The arc-metrics query is embarrassingly parallel: scan ->

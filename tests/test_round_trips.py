@@ -24,7 +24,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 BM25_BUDGET = 91  # 83 measured; 1,318 with every expression rebuilt per call
 KNN_BUDGET = 62  # 56; 280
-CURATE_BUDGET = 296  # 269; 1,678
+CURATE_BUDGET = 281  # 256; 1,678
 
 
 @pytest.fixture(scope="module")
